@@ -160,8 +160,7 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // optional A/B knob for the checkpoint storage level (see
     // graft.util.Ckpt); unset = Spark's localCheckpoint default
-    sys.env.get("SPARK_GRAFT_CKPT_LEVEL")
-      .foreach(spark.conf.set(graft.util.Ckpt.ConfKey, _))
+    graft.util.Ckpt.setLevelFromEnv(spark)
 
     // ---- input layout setup (untimed, guide §6) ----------------------
     // The driver fixture writes each table as ONE parquet file with ONE
@@ -180,15 +179,16 @@ object Bench {
     // splits on a production cluster — so the driver's 8-core sweep can
     // measure real scan scaling.
     //
-    // The split is SIZE-GATED (only tables ≥ 2× the target file size
+    // The split is SIZE-GATED (only tables ≥ 8× the target file size
     // split at all): a full every-table split was measured catalog-wide
     // at sf0.1 and is a pessimization — 60.5 s → 84.6 s total — because
     // a 0.6 MB documents table in 37 files turns every one of a query's
     // many scans into 37 scheduled tasks of ~15 KB each, pure per-task
     // overhead at fixture bytes (only the genuinely decode-bound q02
-    // improved, 2.0×). At the 512 KB default only lineitem (~21 files),
-    // orders (~5) and events (~4) split — the tables whose single-task
-    // decode actually dominates queries. SPARK_GRAFT_SPLIT_INPUT=0
+    // improved, 2.0×). At the 512 KB default and sf0.1 only lineitem
+    // splits (~21 files) — the one table whose single-task decode
+    // dominates queries; orders and events (2-3 MB) stay single-file
+    // (see splitInputCopy). SPARK_GRAFT_SPLIT_INPUT=0
     // restores the raw layout; SPARK_GRAFT_SPLIT_TARGET_BYTES tunes the
     // target (both honored by StageProfile so profiles match the bench).
     val splitInput = sys.env.getOrElse("SPARK_GRAFT_SPLIT_INPUT", "1") == "1"
@@ -412,8 +412,8 @@ object Bench {
           .agg(count(lit(1)).as("n"),
             sum(col("value").cast("decimal(18,6)")).as("v"),
             hll_sketch_agg(col("user_id")).as("users"),
-            org.apache.spark.sql.graft.KllFunctions
-              .kllAgg(col("value").cast("double"), 200).as("vq"))
+            kll_sketch_agg_double(col("value").cast("double"), 200)
+              .as("vq"))
         val table = out.toString + "/gold"
         stage("history") {
           val hist = ev.filter(col("event_date") < lit(cutoff.toString))

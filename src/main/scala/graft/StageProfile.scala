@@ -57,8 +57,7 @@ object StageProfile {
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_GRAFT_CKPT_LEVEL")
-      .foreach(spark.conf.set(graft.util.Ckpt.ConfKey, _))
+    graft.util.Ckpt.setLevelFromEnv(spark)
     // exploratory runtime confs: SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';')
       .filter(_.contains('=')).foreach { kv =>

@@ -123,7 +123,5 @@ object GraftFunctions {
     * registry. */
   def register(spark: SparkSession): Unit = {
     VectorFunctions.register(spark)
-    org.apache.spark.sql.graft.KllFunctions.register(spark)
-    org.apache.spark.sql.graft.ThetaFunctions.register(spark)
   }
 }

@@ -9,8 +9,10 @@ import org.apache.spark.util.sketch.CountMinSketch
   * through Spark's public `count_min_sketch` aggregate + `o.a.s.util
   * .sketch.CountMinSketch` — the frequency member of the sketch trio
   * ([[Sketches]] = distinct via HLL, `Decontaminate` = membership via
-  * bloom). A per-partition CMS table answers "how often does term X
-  * appear" over 100 TB in O(new partitions) maintenance and O(1) probe,
+  * bloom; [[Kll]] = quantiles and [[Theta]] = set algebra ride Spark's
+  * built-in `kll_sketch_*` / `theta_*` aggregates the same way). A
+  * per-partition CMS table answers "how often does term X appear" over
+  * 100 TB in O(new partitions) maintenance and O(1) probe,
   * with the guarantee est ∈ [true, true + ε·N] at the configured
   * confidence — the bounded-memory substitute for a full (term, count)
   * table when the key universe is unbounded (URLs, n-grams, user ids).

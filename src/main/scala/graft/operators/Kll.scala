@@ -1,17 +1,22 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.KllFunctions
 
-/** Mergeable any-rank quantiles via KLL sketches — the third member of
-  * the sketch family ([[Sketches]] = distinct/HLL, [[Cms]] = frequency):
-  * per-partition sketch tables union in O(new partitions) (blobs, never
+/** Mergeable any-rank quantiles via KLL sketches (Karnin-Lang-Liberty,
+  * FOCS'16) — the third member of the sketch family ([[Sketches]] =
+  * distinct/HLL, [[Cms]] = frequency, [[Theta]] = set algebra), built
+  * on Spark's own `kll_sketch_agg_double` / `kll_merge_agg_double` /
+  * `kll_sketch_get_quantile_double` / `kll_sketch_get_n_double`.
+  * Per-partition sketch tables union in O(new partitions) (blobs, never
   * raw rows) and answer arbitrary-rank quantile queries without a known
   * value range, unlike the fixed-grid histogram path
   * ([[Profile.histogramQuantiles]], q162). Rank error ~1.65% at k=200;
   * EXACT while a group's item count stays <= k (KLL retains everything
   * until capacity), which is the oracle regime q164 pins.
+  *
+  * The blobs are DataSketches `KllDoublesSketch.toByteArray` images, so
+  * state written by any DataSketches-6 KLL writer folds in unchanged.
   *
   * 100 TB shape: `build` is one scan with map-side partial aggregation
   * (ObjectHashAggregate over heap sketches); the shuffle carries
@@ -24,39 +29,47 @@ object Kll {
   /** Per-group sketch table: (groupCols…, kll binary). */
   def build(df: DataFrame, groupCols: Seq[String], valueCol: String,
       k: Int = 200): DataFrame = {
-    val agg = KllFunctions.kllAgg(col(valueCol).cast("double"), k).as("kll")
+    val agg = kll_sketch_agg_double(col(valueCol).cast("double"), k).as("kll")
     if (groupCols.isEmpty) df.agg(agg)
     else df.groupBy(groupCols.map(col): _*).agg(agg)
   }
 
   /** Fold a sketch table to coarser grouping (drop columns, union the
-    * sketches — the incremental/rollup path). */
+    * sketches — the incremental/rollup path). The merge takes its k
+    * from its inputs, so the result's accuracy is the inputs'. */
   def rollup(sketches: DataFrame, groupCols: Seq[String],
       sketchCol: String = "kll"): DataFrame = {
-    val agg = KllFunctions.kllUnion(col(sketchCol)).as(sketchCol)
+    val agg = kll_merge_agg_double(col(sketchCol)).as(sketchCol)
     if (groupCols.isEmpty) sketches.agg(agg)
     else sketches.groupBy(groupCols.map(col): _*).agg(agg)
   }
 
   /** (groupCols…, pct, q_value): read integer-percent quantiles off a
     * sketch table (INCLUSIVE rank rule — `100·cum >= p·N`, exactly
-    * q162's selection rule, so exact-regime sketches replay in SQL). */
+    * q162's selection rule, so exact-regime sketches replay in SQL).
+    * The built-in probe takes its ranks as a literal, so one probe per
+    * group reads every percent and the rows pair up by position. An
+    * empty sketch (all-null group) yields NULL q_values: the probe
+    * rejects empty sketches, so it runs only when n > 0. */
   def quantiles(sketches: DataFrame, groupCols: Seq[String],
       percents: Seq[Int], sketchCol: String = "kll"): DataFrame = {
-    val pcts = array(percents.map(p => lit(p)): _*)
+    val sk = col(sketchCol)
+    val qs = when(kll_sketch_get_n_double(sk) > 0,
+      kll_sketch_get_quantile_double(sk,
+        array(percents.map(p => lit(p / 100d)): _*)))
     sketches
-      .select(groupCols.map(col) :+ col(sketchCol) :+
-        explode(pcts).as("pct"): _*)
-      .select(groupCols.map(col) :+ col("pct").cast("long").as("pct") :+
-        KllFunctions.kllQuantile(col(sketchCol),
-          col("pct").cast("double") / 100d).as("q_value"): _*)
+      .select(groupCols.map(col) :+ qs.as("__qs") :+
+        posexplode(array(percents.map(p => lit(p.toLong)): _*))
+          .as(Seq("__i", "pct")): _*)
+      .select(groupCols.map(col) :+ col("pct") :+
+        col("__qs")(col("__i")).as("q_value"): _*)
   }
 
   /** Exact item count seen by each sketch (n is tracked exactly). */
   def counts(sketches: DataFrame, groupCols: Seq[String],
       sketchCol: String = "kll"): DataFrame =
     sketches.select(groupCols.map(col) :+
-      KllFunctions.kllN(col(sketchCol)).as("n_items"): _*)
+      kll_sketch_get_n_double(col(sketchCol)).as("n_items"): _*)
 
   /** Stream-maintained quantile profile: drain available files from
     * `srcDir` (checkpoint = bookmark, each file once across restarts)
@@ -99,7 +112,7 @@ object Kll {
     val merged = rollup(
       graft.streaming.BatchPartitionIngest.readState(spark, stateDir)
         .drop("batch_id"), groupCols)
-      .withColumn("n_items", KllFunctions.kllN(col("kll")))
+      .withColumn("n_items", kll_sketch_get_n_double(col("kll")))
     quantiles(merged, groupCols :+ "n_items", percents)
   }
 }

@@ -1,12 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ThetaFunctions
 
-/** Mergeable distinct-set algebra via theta sketches — the set-operation
-  * member of the sketch family ([[Sketches]]/HLL = distinct counts,
-  * [[Cms]] = frequency, [[Kll]] = quantiles). A per-segment sketch
+/** Mergeable distinct-set algebra via theta sketches (Dasgupta et al.,
+  * "Theta-Sketch Framework", 2016) — the set-operation member of the
+  * sketch family ([[Sketches]]/HLL = distinct counts, [[Cms]] =
+  * frequency, [[Kll]] = quantiles), built on Spark's own
+  * `theta_sketch_agg` / `theta_union_agg` / `theta_sketch_estimate` /
+  * `theta_intersection` / `theta_difference`. A per-segment sketch
   * table answers |A|, |A ∪ B|, |A ∩ B| and |A \ B| from KB blobs: the
   * audience-overlap / cross-segment-retention questions whose exact
   * form is a distinct self-join over raw ids (O(corpus) shuffle per
@@ -18,34 +20,41 @@ import org.apache.spark.sql.graft.ThetaFunctions
   * serving-side on group rows. Exact while each segment's distinct
   * count stays under 2^lgK (θ = 1), estimation-mode beyond — size the
   * lgK to the segment cardinality you need exact, or accept the
-  * ~1/√(2^lgK) relative error. */
+  * ~1/√(2^lgK) relative error.
+  *
+  * The blobs are DataSketches compact theta images (default seed), so
+  * state written by any DataSketches-6 theta writer folds in unchanged. */
 object Theta {
 
   /** Per-group sketch table: (groupCols…, theta binary). */
   def build(df: DataFrame, groupCols: Seq[String], valueCol: String,
       lgK: Int = 14): DataFrame = {
-    val agg = ThetaFunctions.thetaAgg(col(valueCol), lgK).as("theta")
+    val agg = theta_sketch_agg(col(valueCol), lgK).as("theta")
     if (groupCols.isEmpty) df.agg(agg)
     else df.groupBy(groupCols.map(col): _*).agg(agg)
   }
 
-  /** Fold a sketch table to coarser grouping (blob union). */
+  /** Union buffer size for [[rollup]]: 26, DataSketches' maximum
+    * lgNomEntries. A union never adds error beyond its inputs', but a
+    * smaller buffer (the built-in default is 12) caps nominal entries
+    * and drops exact-mode inputs built at a larger lgK into estimation
+    * mode — 5 000 distinct ids from lgK=14 sketches read back as 4 984. */
+  private[graft] val UnionLgK = 26
+
+  /** Fold a sketch table to coarser grouping (blob union; the result's
+    * theta is governed entirely by the input sketches). */
   def rollup(sketches: DataFrame, groupCols: Seq[String],
       sketchCol: String = "theta"): DataFrame = {
-    val agg = ThetaFunctions.thetaUnion(col(sketchCol)).as(sketchCol)
+    val agg = theta_union_agg(col(sketchCol), UnionLgK).as(sketchCol)
     if (groupCols.isEmpty) sketches.agg(agg)
     else sketches.groupBy(groupCols.map(col): _*).agg(agg)
   }
-
-  /** Rounded-long distinct estimate column (exact in exact mode). */
-  def estimateLong(sketch: Column): Column =
-    round(ThetaFunctions.thetaEstimate(sketch)).cast("long")
 
   /** Stream-maintained segment sketches: per-microbatch theta sketches
     * landed exactly-once under batch_id=N/ (the
     * [[graft.streaming.BatchPartitionIngest]] primitive shared with
     * [[Kll.sketchIngestOnce]]); serve with [[rollup]] over the state
-    * dir, then [[pairwiseOverlap]] / [[estimateLong]]. */
+    * dir, then [[pairwiseOverlap]] / `theta_sketch_estimate`. */
   def sketchIngestOnce(spark: org.apache.spark.sql.SparkSession,
       srcDir: String, schema: org.apache.spark.sql.types.StructType,
       stateDir: String, checkpointDir: String, groupCols: Seq[String],
@@ -77,11 +86,11 @@ object Theta {
       col(sketchCol).as("__tb"))
     a.join(b, col("seg_a") < col("seg_b"))
       .select(col("seg_a"), col("seg_b"),
-        estimateLong(col("__ta")).as("users_a"),
-        estimateLong(col("__tb")).as("users_b"),
-        estimateLong(ThetaFunctions.thetaIntersect(col("__ta"), col("__tb")))
+        theta_sketch_estimate(col("__ta")).as("users_a"),
+        theta_sketch_estimate(col("__tb")).as("users_b"),
+        theta_sketch_estimate(theta_intersection(col("__ta"), col("__tb")))
           .as("overlap"),
-        estimateLong(ThetaFunctions.thetaAnotB(col("__ta"), col("__tb")))
+        theta_sketch_estimate(theta_difference(col("__ta"), col("__tb")))
           .as("only_a"))
   }
 }

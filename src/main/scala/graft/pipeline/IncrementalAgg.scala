@@ -45,8 +45,10 @@ object IncrementalAgg {
 
   /** [[merge]] extended with sketch-form measures: `sketches` names
     * binary HLL sketch columns ([[graft.operators.Sketches.build]]'s
-    * output, distinct counts) and `kllSketches` names binary KLL sketch
-    * columns ([[graft.operators.Kll.build]]'s output, quantiles), each
+    * output, distinct counts), `kllSketches` names binary KLL sketch
+    * columns ([[graft.operators.Kll.build]]'s output, quantiles) and
+    * `thetaSketches` names binary theta sketch columns
+    * ([[graft.operators.Theta.build]]'s output, set algebra), each
     * combined per key with a lossless sketch union. Exact distinct and
     * exact quantiles are NOT mergeable — `distinct(a ∪ b)` / an exact
     * percentile of `a ∪ b` cannot be computed from the per-side results
@@ -72,10 +74,9 @@ object IncrementalAgg {
         maxs.map(c => max(col(c)).as(c)) ++
         sketches.map(c => hll_union_agg(col(c),
           allowDifferentLgConfigK = false).as(c)) ++
-        kllSketches.map(c =>
-          org.apache.spark.sql.graft.KllFunctions.kllUnion(col(c)).as(c)) ++
-        thetaSketches.map(c =>
-          org.apache.spark.sql.graft.ThetaFunctions.thetaUnion(col(c)).as(c))
+        kllSketches.map(c => kll_merge_agg_double(col(c)).as(c)) ++
+        thetaSketches.map(c => theta_union_agg(col(c),
+          graft.operators.Theta.UnionLgK).as(c))
     gold.unionByName(increment)
       .groupBy(keys.map(col): _*)
       .agg(measures.head, measures.tail: _*)

@@ -1465,25 +1465,28 @@ object ExtQueries {
   }
 
   /** Guard for the q142/q158 `assumeDistinct` structural-uniqueness
-    * argument: the two union branches are duplicate-free only while the
-    * supplier id space stays below the +100000 customer offset
-    * (suppkeys = 10k×SF in TPC-H, so the bound holds through SF 10 and
-    * breaks silently past it — duplicate directed edges would then
-    * double-count in PageRank). One narrow column scan per (process,
-    * dir), cached like the other per-dir fixtures; trips loudly instead
-    * of returning wrong ranks. */
+    * argument: the two union branches are duplicate-free only while
+    * every supplier id stays below every customer id offset by +100000,
+    * i.e. max(l_suppkey) < min(o_custkey) + 100000. Suppkeys = 10k×SF in
+    * TPC-H, so the bound holds through SF 10 and breaks silently past
+    * it; a custkey below 1 (the fixtures hold custkey 0) lowers the
+    * bound — duplicate directed edges would then double-count in
+    * PageRank. One narrow column scan per table per (process, dir),
+    * cached like the other per-dir fixtures; trips loudly instead of
+    * returning wrong ranks. */
   private val nodeSpaceChecked =
-    scala.collection.concurrent.TrieMap.empty[String, Boolean]
+    scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
 
-  private def requireDisjointNodeSpaces(s: SparkSession, dir: String): Unit = {
-    val ok = nodeSpaceChecked.getOrElseUpdate(dir, {
-      val m = t(s, dir, "lineitem").agg(max(col("l_suppkey"))).head().getLong(0)
-      m <= 100000L
-    })
-    require(ok,
-      s"q142/q158 node spaces collide at this SF (max l_suppkey > 100000): " +
+  private[queries] def requireDisjointNodeSpaces(s: SparkSession,
+      dir: String): Unit = {
+    val (maxSupp, minCust) = nodeSpaceChecked.getOrElseUpdate(dir, (
+      t(s, dir, "lineitem").agg(max(col("l_suppkey"))).head().getLong(0),
+      t(s, dir, "orders").agg(min(col("o_custkey"))).head().getLong(0)))
+    require(maxSupp < minCust + 100000L,
+      s"q142/q158 node spaces collide in $dir: max l_suppkey = $maxSupp " +
+        s"is not below min o_custkey + 100000 = ${minCust + 100000L}, so " +
         "the +100000 customer offset no longer separates supplier and " +
-        "customer ids, so the union is not structurally duplicate-free — " +
+        "customer ids and the union is not structurally duplicate-free — " +
         "assumeDistinct would silently double-count edges")
   }
 
@@ -1626,8 +1629,7 @@ object ExtQueries {
       t(s, dir, "documents").filter(col("n_chars").isNotNull),
       Seq("lang", "source"), "n_chars", k = 8192)
     val perLang = graft.operators.Kll.rollup(perSource, Seq("lang"))
-      .withColumn("n_items",
-        org.apache.spark.sql.graft.KllFunctions.kllN(col("kll")))
+      .withColumn("n_items", kll_sketch_get_n_double(col("kll")))
     graft.operators.Kll.quantiles(perLang, Seq("lang", "n_items"),
         percents = Seq(25, 50, 75, 95, 100))
       .select(col("lang"), col("pct"), col("q_value"), col("n_items"))
@@ -1675,27 +1677,34 @@ object ExtQueries {
 
   /** q164's KLL profile from PURE SQL TEXT (the reference's Athena
     * discipline, q74/q69 pattern): build/union/probe driven entirely
-    * through `spark.sql` over the registered views + the graft_kll_*
-    * functions — proving the sketch family is first-class on the SQL
-    * surface, not DataFrame-only. Same construction-pinned oracle as
-    * q164 (exact-retention regime). */
+    * through `spark.sql` over the registered views + Spark's built-in
+    * `kll_sketch_agg_double` / `kll_merge_agg_double` /
+    * `kll_sketch_get_quantile_double` / `kll_sketch_get_n_double` —
+    * proving the sketch family is first-class on the SQL surface, not
+    * DataFrame-only. The probe takes its ranks as a literal array
+    * (0.95D is the same double as 95 / 100). Same construction-pinned
+    * oracle as q164 (exact-retention regime; the n_chars filter leaves
+    * no empty group, so the probe needs no n > 0 guard). */
   def q166SqlKll(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     graft.Tables.registerAll(s, dir)
     s.sql("""
       WITH sk AS (
         SELECT lang, source,
-               graft_kll_agg(CAST(n_chars AS DOUBLE), 8192) AS kll
+               kll_sketch_agg_double(CAST(n_chars AS DOUBLE), 8192) AS kll
         FROM documents WHERE n_chars IS NOT NULL
         GROUP BY lang, source),
       m AS (
-        SELECT lang, graft_kll_union_agg(kll) AS kll
+        SELECT lang, kll_merge_agg_double(kll) AS kll
         FROM sk GROUP BY lang),
-      p AS (SELECT explode(array(25, 50, 75, 95, 100)) AS pct)
-      SELECT m.lang, CAST(p.pct AS BIGINT) AS pct,
-             graft_kll_quantile(m.kll, CAST(p.pct AS DOUBLE) / 100) AS q_value,
-             graft_kll_n(m.kll) AS n_items
-      FROM m CROSS JOIN p
+      q AS (
+        SELECT lang, kll_sketch_get_n_double(kll) AS n_items,
+               kll_sketch_get_quantile_double(kll,
+                 array(0.25D, 0.5D, 0.75D, 0.95D, 1.0D)) AS qs
+        FROM m),
+      p AS (SELECT posexplode(array(25, 50, 75, 95, 100)) AS (i, pct))
+      SELECT q.lang, CAST(p.pct AS BIGINT) AS pct, q.qs[p.i] AS q_value,
+             q.n_items
+      FROM q CROSS JOIN p
       ORDER BY lang, pct""")
   }
 

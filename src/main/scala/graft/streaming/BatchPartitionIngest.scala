@@ -15,9 +15,12 @@ import org.apache.spark.sql.types.StructType
   *
   * This is the streaming primitive behind the sketch families
   * ([[graft.operators.Kll.sketchIngestOnce]],
-  * [[graft.operators.Theta.sketchIngestOnce]]): any aggregate whose
-  * MEASURES are mergeable (sketch blobs, sums, min/max) can be
-  * maintained this way, with serving reads folding the per-batch rows —
+  * [[graft.operators.Theta.sketchIngestOnce]], whose batch blobs come
+  * from Spark's built-in `kll_sketch_agg_double` / `theta_sketch_agg`
+  * and fold with `kll_merge_agg_double` / `theta_union_agg`; also
+  * [[graft.operators.Cms]] and [[graft.operators.Sketches]]): any
+  * aggregate whose MEASURES are mergeable (sketch blobs, sums, min/max)
+  * can be maintained this way, with serving reads folding the per-batch rows —
   * |batches|×|groups| rows, never the raw stream. Periodic compaction =
   * fold the batch table and restart the layout.
   */

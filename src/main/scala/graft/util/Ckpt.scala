@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Central localCheckpoint wrapper for every multi-consumer intermediate
@@ -23,6 +23,26 @@ object Ckpt {
     * `MEMORY_AND_DISK_SER`, `MEMORY_AND_DISK`, `DISK_ONLY`). Unset =
     * Spark's localCheckpoint default. */
   val ConfKey = "spark.graft.checkpoint.storageLevel"
+
+  /** Copy the harnesses' `SPARK_GRAFT_CKPT_LEVEL` A/B knob into
+    * [[ConfKey]]. The name is validated here, so a typo fails at session
+    * set-up naming the env var instead of at the first checkpoint deep
+    * inside some query. Unset = leave [[ConfKey]] unset. */
+  def setLevelFromEnv(spark: SparkSession): Unit =
+    sys.env.get(LevelEnv).foreach(n => spark.conf.set(ConfKey, validLevel(n)))
+
+  private val LevelEnv = "SPARK_GRAFT_CKPT_LEVEL"
+
+  /** `name` if it parses as a [[StorageLevel]], else an error naming
+    * [[LevelEnv]]. */
+  private[graft] def validLevel(name: String): String =
+    try { StorageLevel.fromString(name); name }
+    catch {
+      case e: IllegalArgumentException =>
+        throw new IllegalArgumentException(
+          s"$LevelEnv=$name names no StorageLevel " +
+            "(e.g. MEMORY_AND_DISK, MEMORY_AND_DISK_SER, DISK_ONLY)", e)
+    }
 
   def apply[T](ds: Dataset[T]): Dataset[T] =
     ds.sparkSession.conf.getOption(ConfKey) match {

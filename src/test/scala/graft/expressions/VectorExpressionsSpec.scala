@@ -288,14 +288,13 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(r.getDouble(1) == 1.0)
   }
 
-  test("SQL surface: graft_kll_* family registered and exact on small input") {
-    GraftFunctions.register(spark)
+  test("SQL surface: built-in KLL functions exact on small input") {
     val r = spark.sql(
       """WITH t AS (SELECT explode(array(1.0d, 2.0d, 3.0d, 4.0d)) AS v),
-        |sk AS (SELECT graft_kll_agg(v, 200) AS kll FROM t),
-        |m AS (SELECT graft_kll_union_agg(kll) AS kll FROM sk)
-        |SELECT graft_kll_quantile(kll, 0.5d) AS p50,
-        |       graft_kll_n(kll) AS n FROM m""".stripMargin).rows.head
+        |sk AS (SELECT kll_sketch_agg_double(v, 200) AS kll FROM t),
+        |m AS (SELECT kll_merge_agg_double(kll) AS kll FROM sk)
+        |SELECT kll_sketch_get_quantile_double(kll, 0.5d) AS p50,
+        |       kll_sketch_get_n_double(kll) AS n FROM m""".stripMargin).rows.head
     assert(r.getDouble(0) == 2.0) // inclusive rank: 2 of 4 <= 2.0
     assert(r.getLong(1) == 4L)
   }

@@ -32,16 +32,25 @@ class ThetaSpec extends SparkSpec {
       Theta.build(df.withColumn("all", lit(1)), Seq("all", "day"), "uid",
         lgK = 12), Seq("all"))
     def est(x: org.apache.spark.sql.DataFrame) =
-      x.select(Theta.estimateLong(col("theta"))).collect().head.getLong(0)
+      x.select(theta_sketch_estimate(col("theta"))).collect().head.getLong(0)
     assert(est(direct) == 500L)
     assert(est(merged) == 500L)
+    // lgK=14 day sketches whose union (5 000 ids) outgrows 2^12: every
+    // input is exact, so the rollup must be too — a union buffer below
+    // lgK 14 would drop the result into estimation mode
+    val big = (0 until 8000).map(i =>
+      (s"d${i / 2000}", (i % 2000 + (i / 2000) * 1000).toLong))
+      .toDF("day", "uid").withColumn("all", lit(1))
+    val bigMerged = Theta.rollup(
+      Theta.build(big, Seq("all", "day"), "uid", lgK = 14), Seq("all"))
+    assert(est(bigMerged) == 5000L)
   }
 
   test("estimation mode: relative error within theta bounds") {
     val n = 200000
     val df = (1 to n).map(_.toLong).toDF("uid")
     val sk = Theta.build(df, Nil, "uid", lgK = 12)
-    val est = sk.select(Theta.estimateLong(col("theta")))
+    val est = sk.select(theta_sketch_estimate(col("theta")))
       .collect().head.getLong(0)
     // RSE ~ 1/sqrt(2^12) ≈ 1.6%; allow 5%
     assert(math.abs(est.toDouble - n) / n < 0.05, s"estimate $est vs $n")
@@ -50,7 +59,7 @@ class ThetaSpec extends SparkSpec {
   test("string keys hash consistently across build and union") {
     val df = Seq("x", "y", "z", "x", "y").map(Tuple1(_)).toDF("k")
     val direct = Theta.build(df, Nil, "k", lgK = 12)
-    assert(direct.select(Theta.estimateLong(col("theta")))
+    assert(direct.select(theta_sketch_estimate(col("theta")))
       .collect().head.getLong(0) == 3L)
   }
 }

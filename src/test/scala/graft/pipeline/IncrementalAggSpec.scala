@@ -83,7 +83,7 @@ class IncrementalAggSpec extends SparkSpec {
     val merged = IncrementalAgg.mergeWithSketches(aggOf("old"), aggOf("new"),
       Seq("k"), sums = Nil, thetaSketches = Seq("theta"))
     val est = merged
-      .select(col("k"), Theta.estimateLong(col("theta")).as("n"))
+      .select(col("k"), theta_sketch_estimate(col("theta")).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // k0 holds even i: uid = i%300 over even i → 150 distinct... replay:
     val exact = facts.groupBy("k").agg(countDistinct(col("uid")).as("d"))

@@ -53,7 +53,6 @@ object SketchProps extends Properties("graft.sketches") {
   property("random day-split sketch merge == full recompute") =
     Prop.forAll(Gen.choose(0L, Long.MaxValue / 2)) { seed =>
       import spark.implicits._
-      import org.apache.spark.sql.graft.{KllFunctions, ThetaFunctions}
       val rnd = new scala.util.Random(seed)
       val days = IndexedSeq("2026-01-01", "2026-01-02", "2026-01-03")
       val n = 60 + rnd.nextInt(240)
@@ -67,8 +66,8 @@ object SketchProps extends Properties("graft.sketches") {
           else part.toDF("day", "uid", "v")
         df.groupBy(col("day")).agg(count(lit(1)).as("n"),
           hll_sketch_agg(col("uid")).as("h"),
-          ThetaFunctions.thetaAgg(col("uid"), 12).as("th"),
-          KllFunctions.kllAgg(col("v"), 1024).as("vq"))
+          theta_sketch_agg(col("uid"), 12).as("th"),
+          kll_sketch_agg_double(col("v"), 1024).as("vq"))
       }
       val merged = graft.pipeline.IncrementalAgg.mergeWithSketches(
         aggOf(rows.take(cut)), aggOf(rows.drop(cut)),
@@ -76,10 +75,9 @@ object SketchProps extends Properties("graft.sketches") {
         kllSketches = Seq("vq"), thetaSketches = Seq("th"))
       val got = merged.select(col("day"), col("n"),
           hll_sketch_estimate(col("h")).as("hest"),
-          round(ThetaFunctions.thetaEstimate(col("th"))).cast("long")
-            .as("test"),
-          KllFunctions.kllQuantile(col("vq"), lit(0.5d)).as("med"),
-          KllFunctions.kllN(col("vq")).as("kn"))
+          theta_sketch_estimate(col("th")).as("test"),
+          kll_sketch_get_quantile_double(col("vq"), lit(0.5d)).as("med"),
+          kll_sketch_get_n_double(col("vq")).as("kn"))
         .collect()
         .map(r => r.getString(0) ->
           ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4),

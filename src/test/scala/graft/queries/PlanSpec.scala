@@ -81,15 +81,15 @@ class PlanSpec extends SparkSpec {
   test("q164 KLL build partial-aggregates sketches map-side (ObjectHashAggregate)") {
     val p = plan("q164_kll_quantiles")
     assert(p.contains("ObjectHashAggregate"), p)
-    assert(p.contains("partial_graft_kll_agg"), p)
+    assert(p.contains("partial_kll_sketch_agg_double"), p)
     // the scan reads only the three needed columns
     assert(p.contains("ReadSchema: struct<lang:string,source:string,n_chars:bigint>"), p)
   }
 
   test("q167 theta build partial-aggregates sketches map-side") {
     val p = plan("q167_theta_overlap")
-    assert(p.contains("partial_graft_theta_agg"), p)
-    assert(p.contains("partial_graft_theta_union_agg"), p)
+    assert(p.contains("partial_theta_sketch_agg"), p)
+    assert(p.contains("partial_theta_union_agg"), p)
   }
 
   test("pagerank iteration broadcasts the rank state under the gate") {
