@@ -405,7 +405,7 @@ object Bench {
         val ev = Tables.load(spark, src, "events")
           .select(to_date(col("ts")).as("event_date"), col("user_id"),
             col("value"))
-        val cut = ev.select(max(col("event_date"))).head.getDate(0)
+        val cut = ev.select(max(col("event_date"))).head().getDate(0)
         val cutoff = java.time.LocalDate.parse(cut.toString).minusDays(2)
         def aggOf(df: org.apache.spark.sql.DataFrame) = df
           .groupBy(col("event_date"))

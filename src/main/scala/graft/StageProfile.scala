@@ -13,10 +13,11 @@ import org.apache.spark.sql.SparkSession
   */
 object StageProfile {
 
+  private final case class St(id: Int, name: String, tasks: Int,
+      wallMs: Long, taskMs: Long, gcMs: Long, shufRead: Long,
+      shufWrite: Long, input: Long, spill: Long)
+
   private final class Recorder extends SparkListener {
-    final case class St(id: Int, name: String, tasks: Int, wallMs: Long,
-        taskMs: Long, gcMs: Long, shufRead: Long, shufWrite: Long,
-        input: Long, spill: Long)
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[St]
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long)]
     private val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]
@@ -124,7 +125,7 @@ object StageProfile {
           println(f"jobs=${js.length} firstJobLag=${js.head._2 - t0Epoch}%d ms " +
             f"inJobs=$inJobs ms interJobGaps=$gapSum ms")
         }
-        rec.stages.toArray(Array.empty[rec.St]).sortBy(-_.wallMs).take(14)
+        rec.stages.toArray(Array.empty[St]).sortBy(-_.wallMs).take(14)
           .foreach { s =>
             println(f"  stage ${s.id}%4d wall=${s.wallMs}%5d ms task=${s.taskMs}%6d ms " +
               f"gc=${s.gcMs}%4d tasks=${s.tasks}%3d in=${s.input / 1024}%6d KB " +

@@ -3,20 +3,24 @@ package graft.operators
 import graft.util.Ckpt.CkptOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{ArrayFunctions, TextExpressionFunctions}
 
 import graft.functions.TextFunctions
 
 /** Near-duplicate detection: MinHash+LSH, SimHash, and n-gram Jaccard.
   *
   * Scale design: the naive near-dup join is O(n²). Both LSH families here
-  * reduce it to (1) signature construction as an explode + codegen'd hash
-  * aggregation (higher-order-function lambdas are interpreted in Spark, so
-  * per-seed `transform` passes over shingle arrays are deliberately
-  * avoided), (2) a shuffle on (band, band_hash) — a few bytes per row,
-  * never the document — and (3) an equi self-join within buckets. Candidate
-  * pairs are verified with exact Jaccard computed by *counting* shared
-  * shingles through the inverted index, so no shingle arrays are ever
-  * shuffled or joined.
+  * reduce it to (1) signature construction as per-row codegen'd
+  * expressions (MinHash: one sorted shingle-hash array per document and
+  * k seeded minima over it, no explode and no exchange; higher-order-
+  * function lambdas are interpreted in Spark, so per-seed `transform`
+  * passes over shingle arrays are deliberately avoided), (2) a shuffle on
+  * (band, band_hash) — a few bytes per row, never the document — and (3)
+  * an equi self-join within buckets. MinHash candidate pairs are verified
+  * with exact Jaccard by joining each pair to the two documents' sorted
+  * shingle-hash arrays by id and intersecting them with one two-pointer
+  * merge, so no shingle is ever exploded into its own row on the pair
+  * path.
   */
 object NearDup {
 
@@ -87,39 +91,57 @@ object NearDup {
       .select(col(idCol), xxhash64(col("shingle")).as("sh"))
       .distinct()
 
-  /** MinHash signature per document: k seeded xxhash64 minima, built with a
-    * single explode + hash-aggregate (map-side partial min → the shuffle
-    * carries k longs per doc, and everything stays in codegen). Each
-    * shingle STRING is hashed once; the k seeded values are derived from
-    * that 8-byte hash (`xxhash64(seed, xxhash64(shingle))`) — an equally
-    * valid minhash family that replaces k string walks per shingle
-    * occurrence with one, and shares its base hash with the verify
-    * index. Documents with fewer tokens than the shingle size produce no
-    * shingles and are omitted. Output: (idCol, sig: array<long>). */
+  /** (id, hs, sig), one row per input row: `hs` is the document's sorted,
+    * distinct shingle-hash array (`xxhash64` of each word n-gram, the
+    * values [[explodedShingles]] holds as rows) and `sig` its k seeded
+    * minima (`xxhash64(seed, xxhash64(shingle))` — the k seeded values
+    * derive from each shingle's one 8-byte hash, so every shingle string
+    * is walked once). Both are codegen'd per-row expressions: no explode,
+    * no exchange. `sig` is NULL when `hs` is empty (null text, or fewer
+    * tokens than the shingle size). */
+  private def minhashDocs(df: DataFrame, idCol: String, textCol: String,
+      shingleSize: Int, k: Int): DataFrame =
+    df.select(col(idCol), TextExpressionFunctions.shingleHashes(
+        TextFunctions.tokens(col(textCol)), shingleSize).as("hs"))
+      .select(col(idCol), col("hs"),
+        TextExpressionFunctions.minHashSig(col("hs"), k).as("sig"))
+
+  /** MinHash signature per document: k seeded xxhash64 minima over the
+    * document's shingle hashes (see [[minhashDocs]]). Bit-identical to
+    * the k × `min(xxhash64(seed, sh))` aggregate over the shingle stream
+    * — a set-dedup never changes a minimum. Documents with null text or
+    * fewer tokens than the shingle size produce no shingles and are
+    * omitted.
+    *
+    * Ids must be unique: each input row is its own document, so two rows
+    * sharing an id yield two signatures under that id (they are not
+    * merged). Output: (idCol, sig: array<long>). */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, k: Int): DataFrame =
-    // No set-dedup needed: duplicates cannot change a minimum.
-    shingleRows(df, idCol, textCol, shingleSize)
-      .select(col(idCol), xxhash64(col("shingle")).as("sh"))
-      .groupBy(col(idCol))
-      .agg(array((0 until k).map { seed =>
-        min(xxhash64(lit(seed), col("sh")))
-      }: _*).as("sig"))
+    // explode of a zero- or one-element array, not a filter: a filter on
+    // `sig` would be pushed below the projection and evaluate both
+    // expressions twice per row; a generator's output is a barrier
+    minhashDocs(df, idCol, textCol, shingleSize, k)
+      .select(col(idCol),
+        explode(when(col("sig").isNotNull, array(col("sig")))).as("sig"))
 
   /** Per-band bucket hashes of a minhash signature column, as an array:
-    * element b hashes the b-th `rowsPerBand` slice of the signature. */
+    * element b hashes the b-th `rowsPerBand` slice of the signature. A
+    * NULL signature yields a NULL array, so a posexplode over it emits
+    * no band rows for a document without shingles. */
   private def bandHashArray(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
+    when(sig.isNotNull, array((0 until bands).map { b =>
       xxhash64(concat_ws(",",
         slice(sig, b * rowsPerBand + 1, rowsPerBand).cast("array<string>")))
-    }: _*)
+    }: _*))
 
   /** doc_id, band, band_hash — one row per LSH band. Docs agreeing on all
     * `rowsPerBand` signature slots of any band land in the same bucket.
-    * numHashes = bands * rowsPerBand. */
+    * numHashes = bands * rowsPerBand. Same omission and unique-id
+    * contract as [[minhashSignatures]]. */
   def minhashBands(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, bands: Int = 8, rowsPerBand: Int = 2): DataFrame =
-    minhashSignatures(df, idCol, textCol, shingleSize, bands * rowsPerBand)
+    minhashDocs(df, idCol, textCol, shingleSize, bands * rowsPerBand)
       .select(col(idCol),
         posexplode(bandHashArray(col("sig"), bands, rowsPerBand))
           .as(Seq("band", "band_hash")))
@@ -151,7 +173,13 @@ object NearDup {
     *    candidate stream the first-agreeing-band trick exists to avoid.
     *
     * Input: one row per (doc, band) with the cell id in `bucketCol`.
-    * Output: unique (id_a < id_b) candidate pairs. */
+    * Output: unique (id_a < id_b) candidate pairs.
+    *
+    * `pinParallelism` repartitions the doc-id exchange to an explicit N
+    * (below). An explicit-N repartition is safe only on a BOUNDED set:
+    * it opts the exchange out of AQE's coalescing and skew handling, so
+    * the input must be small per doc — here a few bands of longs per
+    * document, never the document text or its shingles. */
   private[operators] def bandedCandidates(ids: DataFrame, idCol: String,
       bandCol: String, bucketCol: String, bands: Int,
       maxBucketSize: Int, pinParallelism: Boolean = true): DataFrame = {
@@ -174,7 +202,7 @@ object NearDup {
     // one out of AQE coalescing). Everything downstream of the window —
     // the band self-join, candidate dedup and the caller's verify —
     // fuses into the window's whole-stage, so when the verify does
-    // HEAVY per-pair work (minhash's inverted-index probes are
+    // HEAVY per-pair work (minhash's sorted-set intersections are
     // O(|shingles|) per pair, cosine is O(dim)) AQE's byte-based
     // coalescing misjudges it badly: at sf0.1 a 1 MB exchange collapsed
     // q27's whole chain to ONE task of 1.1 s while 31 cores idled.
@@ -215,65 +243,60 @@ object NearDup {
     joined.select("id_a", "id_b").unionAll(stars).distinct()
   }
 
-  /** Exact Jaccard for candidate pairs, by counting shingles shared through
-    * the inverted index (never joining the arrays themselves). `exploded`
-    * must have distinct (id, shingle) rows. */
-  private def verifyJaccard(candidates: DataFrame, exploded: DataFrame,
-      idCol: String): DataFrame = {
-    val sizes = exploded.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
-    val common = candidates
-      .join(exploded.select(col(idCol).as("id_a"), col("sh")), Seq("id_a"))
-      .join(exploded.select(col(idCol).as("id_b"), col("sh")),
-        Seq("id_b", "sh"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_common"))
-    common
-      .join(sizes.select(col(idCol).as("id_a"), col("n").as("n_a")), Seq("id_a"))
-      .join(sizes.select(col(idCol).as("id_b"), col("n").as("n_b")), Seq("id_b"))
+  /** Exact Jaccard for candidate pairs: each pair meets the two
+    * documents' sorted, distinct shingle-hash arrays (`sets`: one
+    * (id, hs) row per document) in two id joins, and the shared-shingle
+    * count is the size of their two-pointer-merge intersection
+    * ([[org.apache.spark.sql.graft.SortedLongIntersect]]). Pairs sharing
+    * no shingle are dropped, as the inverted-index join of
+    * [[minhashPairsSql]] never forms them. */
+  private def verifyJaccard(candidates: DataFrame, sets: DataFrame,
+      idCol: String): DataFrame =
+    candidates
+      .join(sets.select(col(idCol).as("id_a"), col("hs").as("__ha")),
+        Seq("id_a"))
+      .join(sets.select(col(idCol).as("id_b"), col("hs").as("__hb")),
+        Seq("id_b"))
+      .select(col("id_a"), col("id_b"),
+        size(ArrayFunctions.sortedIntersect(col("__ha"), col("__hb")))
+          .cast("long").as("n_common"),
+        size(col("__ha")).cast("long").as("n_a"),
+        size(col("__hb")).cast("long").as("n_b"))
+      .filter(col("n_common") > 0L)
       .select(col("id_a"), col("id_b"),
         (col("n_common").cast("double") /
           (col("n_a") + col("n_b") - col("n_common"))).as("jaccard"))
-  }
 
   /** Candidate pairs from shared LSH buckets, verified with exact Jaccard
     * over distinct shingle sets; keeps pairs with jaccard >= threshold.
     * Candidate generation is [[bandedCandidates]]: exact first-small-cell
     * pair semantics, representative stars for cells beyond
-    * `maxBucketSize`.
+    * `maxBucketSize`. Documents with null text or fewer tokens than the
+    * shingle size are omitted.
+    *
+    * Ids must be unique: each input row is its own document (a repeated
+    * id is not merged into one shingle set; it pairs as two documents
+    * under one id).
     * Output: id_a < id_b, jaccard. */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, bands: Int = 8, rowsPerBand: Int = 2,
       threshold: Double = 0.5, maxBucketSize: Int = 1000): DataFrame = {
-    // ONE tokenize/shingle pass (r17): the distinct (id, shingle-hash)
-    // inverted index is materialized first and the signatures are
-    // derived FROM it — a set-dedup never changes a minimum, so the
-    // k seeded minima over the distinct hashes are bit-identical to
-    // minhashSignatures over the raw shingle stream (SqlNearDupSpec +
-    // the planted oracles pin this). The previous shape ran the
-    // scan→tokenize→shingle→hash pipeline twice (once for signatures,
-    // once for the verify index); at corpus scale tokenization is the
-    // dominant scan-side cost, and the replacement — one extra
-    // id-keyed exchange of 8-byte hashes off the checkpointed index —
-    // is strictly cheaper (measured 0.75 s → 0.57 s on the sf0.1
-    // front end).
-    val ex = explodedShingles(df, idCol, textCol, shingleSize)
+    // ONE tokenize/shingle pass into one row per document: the sorted
+    // shingle-hash set and the band hashes of the signature derived from
+    // it (hashed once here, not once per consumer branch). Checkpointed:
+    // the table feeds the band rows (both self-join sides, cell stats,
+    // adjusted arrays) and both verify lookups; physical exchange reuse
+    // does not survive the differing predicates each branch pushes down.
+    val docs = minhashDocs(df, idCol, textCol, shingleSize,
+        bands * rowsPerBand)
+      .select(col(idCol), col("hs"),
+        bandHashArray(col("sig"), bands, rowsPerBand).as("bh"))
       .ckpt()
-    val k = bands * rowsPerBand
-    // checkpoint: the signature table feeds several consumers (both
-    // self-join sides, cell stats, adjusted arrays); physical exchange
-    // reuse does not survive the differing predicates each branch
-    // pushes down — k longs per doc, the cheapest thing to hold.
-    val sigs = ex.groupBy(col(idCol))
-      .agg(array((0 until k).map { seed =>
-        min(xxhash64(lit(seed), col("sh")))
-      }: _*).as("sig"))
-      .ckpt()
-    val ids = sigs.select(col(idCol),
-      posexplode(bandHashArray(col("sig"), bands, rowsPerBand))
-        .as(Seq("band", "band_hash")))
+    val ids = docs.select(col(idCol),
+      posexplode(col("bh")).as(Seq("band", "band_hash")))
     val candidates = bandedCandidates(ids, idCol, "band", "band_hash",
       bands, maxBucketSize)
-    verifyJaccard(candidates, ex, idCol)
+    verifyJaccard(candidates, docs, idCol)
       .filter(col("jaccard") >= threshold)
   }
 
@@ -285,7 +308,8 @@ object NearDup {
     * built-in SQL (`xxhash64`, `posexplode`). Semantically identical to
     * the DataFrame operator — same shingling, seeded minima, band
     * hashing, oversized-bucket star guard, first-agreeing-band dedup and
-    * inverted-index Jaccard verify — and cross-checked equal in
+    * exact Jaccard (counted here through the inverted index, there by
+    * sorted-set intersection) — and cross-checked equal in
     * SqlNearDupSpec. */
   def minhashPairsSql(shingleSize: Int = 3, bands: Int = 8,
       rowsPerBand: Int = 2, threshold: Double = 0.5,

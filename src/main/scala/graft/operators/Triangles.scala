@@ -97,6 +97,16 @@ object Triangles {
     else spark.conf.getOption(IntersectGateConfKey).map(_.toLong)
       .getOrElse(derivedGate(spark) / 13L)
 
+  /** Whether the degree table is broadcast for the orientation joins. It
+    * holds |V| ≤ 2|E| rows of ~16 bytes — a hash relation, not a bloom
+    * blob — so its budget is the edge-iterator gate, the one sized for a
+    * relation of ~16 bytes per edge; the bloom gate budgets 1.25 bytes
+    * per edge and would admit a multi-GB build near its limit. A
+    * disabled gate (0) never broadcasts. */
+  private[operators] def broadcastDegrees(nEdges: Long,
+      intersectGate: Long): Boolean =
+    intersectGate > 0L && nEdges <= intersectGate
+
   /** (node, n_triangles) — exact per-node triangle memberships over the
     * undirected simple graph induced by `edges` (direction and
     * duplicates ignored, self-loops dropped). Nodes in no triangle are
@@ -174,13 +184,12 @@ object Triangles {
     // edge is oriented by — each tip pair is then emitted exactly once,
     // already in closing-edge orientation (halves the wedge volume vs
     // emitting both orders and letting the join discard one).
-    // Build side: deg has |V| ≤ 2|E| rows of 16 bytes — under the bloom
-    // gate (|E| bounded by the broadcast budget) broadcast it EXPLICITLY
+    // Build side: under the relation-size gate broadcast deg EXPLICITLY
     // and reuse the one relation for both endpoint joins (rename the
-    // payload after each join, as with `adj` below); above the gate
-    // leave the planner free — at that scale both sides are huge and
-    // sort-merge is the right call anyway.
-    val degB = if (nEdges <= gate && gate > 0L) broadcast(deg) else deg
+    // payload after each join, as with `adj` below); above it leave the
+    // planner free — at that scale both sides are huge and sort-merge is
+    // the right call anyway.
+    val degB = if (broadcastDegrees(nEdges, iGate)) broadcast(deg) else deg
     val oriented = und
       .join(degB, col("a") === col("n"))
       .withColumnRenamed("d", "da").drop("n")

@@ -118,7 +118,8 @@ class GraftProcedureCatalog extends ProcedureCatalog with TableCatalog
     val dir = tableDir(ident)
     val (fs, p) = graft.util.Fs.fsFor(dir)
     if (!fs.exists(p))
-      throw new NoSuchTableException(ident.namespace() :+ ident.name())
+      throw new NoSuchTableException(
+        (ident.namespace() :+ ident.name()).toIndexedSeq)
     resolve(dir)
   }
 
@@ -269,7 +270,7 @@ class GraftProcedureCatalog extends ProcedureCatalog with TableCatalog
     val dir = tableDir(ident)
     if (tableExists(ident))
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
-        ident.namespace() :+ ident.name())
+        (ident.namespace() :+ ident.name()).toIndexedSeq)
     val partCols = partitions.toSeq.map {
       case t if t.name == "identity" && t.references.length == 1 =>
         t.references.head.fieldNames.mkString(".")

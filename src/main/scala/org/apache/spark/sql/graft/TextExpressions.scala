@@ -4,11 +4,12 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression, UnsafeArrayData, XXH64, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 
 /** Order-sensitive rolling hash over a token array: the chained-xxhash64
   * fold `acc_i = xxhash64(acc_{i-1}, token_i)` (acc_0 = 0) as ONE codegen'd
@@ -131,6 +132,137 @@ case class WordShingles(child: Expression, n: Int)
     })
 
   override protected def withNewChildInternal(newChild: Expression): WordShingles =
+    copy(child = newChild)
+}
+
+/** The SET of a document's word n-gram hashes as one sorted, distinct
+  * array<bigint>: element values are exactly `xxhash64(shingle)` over
+  * the [[WordShingles]] strings (n = 1: over the tokens themselves, a
+  * null token hashing like `xxhash64(null)`, i.e. to the seed 42).
+  * Each n-gram's space-joined UTF-8 bytes are assembled in one reused
+  * buffer and hashed in place, so no shingle string is ever allocated;
+  * sorting lets the MinHash verify intersect two sets with one
+  * two-pointer merge ([[SortedLongIntersect]]). Shorter-than-n docs
+  * yield an empty array. */
+case class ShingleHashes(child: Expression, n: Int)
+    extends UnaryExpression with ImplicitCastInputTypes with Serializable {
+  require(n >= 1, s"shingle size must be >= 1, got $n")
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_shingle_hashes"
+
+  def doEval(arr: ArrayData): ArrayData = {
+    val len = arr.numElements()
+    val count = if (n == 1) len else math.max(0, len - n + 1)
+    val out = new Array[Long](count)
+    var buf = new Array[Byte](64)
+    var i = 0
+    while (i < count) {
+      // concat_ws(" ", tokens[i, i+n)) byte for byte: nulls are skipped
+      // along with their separator
+      var pos = 0
+      var first = true
+      var j = 0
+      while (j < n) {
+        if (!arr.isNullAt(i + j)) {
+          val t = arr.getUTF8String(i + j)
+          val need = pos + t.numBytes() + 1
+          if (need > buf.length)
+            buf = java.util.Arrays.copyOf(buf, math.max(need, buf.length * 2))
+          if (!first) { buf(pos) = ' '; pos += 1 }
+          t.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + pos)
+          pos += t.numBytes()
+          first = false
+        }
+        j += 1
+      }
+      out(i) =
+        if (n == 1 && first) 42L
+        else XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, pos, 42L)
+      i += 1
+    }
+    java.util.Arrays.sort(out)
+    var k = 0
+    i = 0
+    while (i < count) {
+      if (k == 0 || out(i) != out(k - 1)) { out(k) = out(i); k += 1 }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(
+      if (k == count) out else java.util.Arrays.copyOf(out, k))
+  }
+
+  override def nullSafeEval(input: Any): Any =
+    doEval(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("shingleHashesExpr", this,
+      classOf[ShingleHashes].getName)
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.doEval($a);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
+    copy(child = newChild)
+}
+
+/** MinHash signature of a shingle-hash array in one loop: element `seed`
+  * (0 ≤ seed < k) is the minimum over the array of
+  * `hashLong(h, hashInt(seed, 42))` — exactly Spark's
+  * `xxhash64(lit(seed: Int), h: Long)` chain, so the signature is
+  * bit-identical to the k × `min(xxhash64(seed, sh))` aggregate over the
+  * same hashes (a null element hashes like the aggregate's null `sh`:
+  * to `hashInt(seed, 42)`). Duplicates never change a minimum, so a set
+  * and a multiset of the same hashes give the same signature. An empty
+  * array has no minima and yields NULL, as a document with no shingles
+  * forms no aggregate group. */
+case class MinHashSig(child: Expression, k: Int)
+    extends UnaryExpression with ImplicitCastInputTypes with Serializable {
+  require(k >= 1, s"signature length must be >= 1, got $k")
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_minhash_sig"
+
+  @transient private lazy val seedHashes: Array[Long] =
+    Array.tabulate(k)(s => XXH64.hashInt(s, 42L))
+
+  def doEval(hs: ArrayData): ArrayData = {
+    val n = hs.numElements()
+    if (n == 0) return null
+    val seeds = seedHashes
+    val mins = Array.fill(k)(Long.MaxValue)
+    var i = 0
+    while (i < n) {
+      val isNull = hs.isNullAt(i)
+      val h = if (isNull) 0L else hs.getLong(i)
+      var s = 0
+      while (s < k) {
+        val v = if (isNull) seeds(s) else XXH64.hashLong(h, seeds(s))
+        if (v < mins(s)) mins(s) = v
+        s += 1
+      }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(mins)
+  }
+
+  override def nullSafeEval(input: Any): Any =
+    doEval(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("minHashSigExpr", this,
+      classOf[MinHashSig].getName)
+    val r = ctx.freshName("r")
+    nullSafeCodeGen(ctx, ev, a => s"""
+       |org.apache.spark.sql.catalyst.util.ArrayData $r = $ref.doEval($a);
+       |if ($r == null) { ${ev.isNull} = true; }
+       |else { ${ev.value} = $r; }
+     """.stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
     copy(child = newChild)
 }
 
@@ -962,6 +1094,12 @@ object TextExpressionFunctions {
 
   def wordShingles(tokens: Column, n: Int): Column =
     ExpressionUtils.column(WordShingles(ExpressionUtils.expression(tokens), n))
+
+  def shingleHashes(tokens: Column, n: Int): Column =
+    ExpressionUtils.column(ShingleHashes(ExpressionUtils.expression(tokens), n))
+
+  def minHashSig(hashes: Column, k: Int): Column =
+    ExpressionUtils.column(MinHashSig(ExpressionUtils.expression(hashes), k))
 
   def tokenChunks(tokens: Column, size: Int, stride: Int): Column =
     ExpressionUtils.column(TokenChunks(

@@ -32,6 +32,100 @@ class NearDupSpec extends SparkSpec {
     assert(!plan.contains("Exchange"), s"exchange in shingle plan:\n$plan")
   }
 
+  // ShingleHashes / MinHashSig: the per-doc expressions behind the
+  // minhash family must reproduce the exploded formulation they replace
+  // value for value, through both the codegen and the interpreted path.
+  private def interpreted(e: org.apache.spark.sql.catalyst.expressions.Expression): Seq[Long] =
+    Option(e.eval(null)).map(_.asInstanceOf[
+      org.apache.spark.sql.catalyst.util.ArrayData].toLongArray().toSeq)
+      .orNull
+
+  test("ShingleHashes == distinct xxhash64 over shingleRows (non-ASCII, " +
+      "short and duplicate-heavy docs), codegen and interpreted agree") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.graft.{ShingleHashes, TextExpressionFunctions}
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    val rnd = new scala.util.Random(17)
+    val vocab = Seq("a", "b", "the", "é", "日本", "straße", "😀x", "")
+    val seps = Seq(" ", "  ", "\t", " \n")
+    val texts: Seq[Option[String]] = Seq(None, Some(""), Some(" a"),
+      Some("a a a a a a a a"), Some("é 日本")) ++ Seq.fill(150) {
+      val len = rnd.nextInt(9)
+      val pool = if (rnd.nextBoolean()) vocab.take(2) else vocab
+      Some((0 until len).map(_ => pool(rnd.nextInt(pool.size)))
+        .mkString(seps(rnd.nextInt(seps.size))))
+    }
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val toks = df.select(col("doc_id"), TextFunctions.tokens(col("text")))
+      .rows.map(r => r.getLong(0) -> Option(r.getSeq[String](1))).toMap
+    for (n <- Seq(1, 2, 3)) {
+      val want = NearDup.shingleRows(df, "doc_id", "text", n)
+        .select(col("doc_id"), xxhash64(col("shingle")).as("sh")).distinct()
+        .rows.groupBy(_.getLong(0)).map { case (id, rs) =>
+          id -> rs.map(_.getLong(1)).sorted }
+      val got = df.select(col("doc_id"), TextExpressionFunctions
+          .shingleHashes(TextFunctions.tokens(col("text")), n))
+        .rows.map(r => r.getLong(0) -> Option(r.getSeq[Long](1))).toMap
+      texts.indices.map(_.toLong).foreach { id =>
+        val interp = toks(id).map(t =>
+          interpreted(ShingleHashes(Literal.create(t, ArrayType(StringType)), n)))
+        val expect = toks(id).map(_ => want.getOrElse(id, Seq.empty[Long]))
+        assert(got(id) == expect, s"codegen n=$n doc=$id ${texts(id.toInt)}")
+        assert(interp == expect, s"interpreted n=$n doc=$id ${texts(id.toInt)}")
+      }
+    }
+  }
+
+  test("MinHashSig == k x min(xxhash64(seed, sh)) aggregate (random, empty, " +
+      "duplicate-heavy, near Long.MinValue/MaxValue), both eval paths") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.graft.{MinHashSig, TextExpressionFunctions}
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    val rnd = new scala.util.Random(23)
+    val edge = Seq(Long.MinValue, Long.MinValue + 1, Long.MaxValue,
+      Long.MaxValue - 1, 0L, -1L)
+    val arrays: Seq[Seq[Long]] = Seq(Seq.empty, edge, Seq.fill(40)(7L)) ++
+      Seq.fill(150) {
+        rnd.nextInt(4) match {
+          case 0 => Seq.empty[Long]
+          case 1 => Seq.fill(rnd.nextInt(30) + 1)(edge(rnd.nextInt(edge.size)))
+          case 2 =>
+            val few = Seq.fill(3)(rnd.nextLong())
+            Seq.fill(rnd.nextInt(50) + 1)(few(rnd.nextInt(3)))
+          case _ => Seq.fill(rnd.nextInt(60) + 1)(rnd.nextLong())
+        }
+      }
+    val df = arrays.zipWithIndex.map { case (a, i) => (i.toLong, a) }
+      .toDF("id", "hs")
+    for (k <- Seq(1, 16)) {
+      val want = df.select(col("id"), explode(col("hs")).as("sh"))
+        .groupBy(col("id"))
+        .agg(array((0 until k).map(s => min(xxhash64(lit(s), col("sh")))): _*))
+        .rows.map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+      val got = df.select(col("id"), TextExpressionFunctions.minHashSig(col("hs"), k))
+        .rows.map(r => r.getLong(0) -> Option(r.getSeq[Long](1))).toMap
+      arrays.zipWithIndex.foreach { case (a, i) =>
+        val expect = want.get(i.toLong)
+        assert(got(i.toLong) == expect, s"codegen k=$k array=$a")
+        assert(Option(interpreted(MinHashSig(
+          Literal.create(a, ArrayType(LongType)), k))) == expect,
+          s"interpreted k=$k array=$a")
+      }
+    }
+    // a null element hashes like the aggregate's null `sh`
+    val withNull = Seq[java.lang.Long](5L, null, -3L)
+    val nullDf = Seq((0L, withNull)).toDF("id", "hs")
+    val wantNull = nullDf.select(col("id"), explode(col("hs")).as("sh"))
+      .groupBy(col("id"))
+      .agg(array((0 until 4).map(s => min(xxhash64(lit(s), col("sh")))): _*))
+      .rows.head.getSeq[Long](1)
+    assert(nullDf.select(TextExpressionFunctions.minHashSig(col("hs"), 4))
+      .rows.head.getSeq[Long](0) == wantNull)
+    assert(interpreted(MinHashSig(
+      Literal.create(withNull, ArrayType(LongType)), 4)) == wantNull)
+  }
+
   test("minhashPairs plan fuses the adjusted-key pass into one window op") {
     // the per-doc adjusted-array construction must collapse all `bands`
     // max(when) aggregates into a SINGLE WindowExec per consumer branch

@@ -130,6 +130,14 @@ class TrianglesSpec extends SparkSpec {
       intersectMaxEdges = 0L).rows.isEmpty)
   }
 
+  test("degree-table broadcast is gated by the edge-iterator budget, " +
+      "inclusive at the boundary; a disabled gate never broadcasts") {
+    assert(Triangles.broadcastDegrees(nEdges = 1000L, intersectGate = 1000L))
+    assert(!Triangles.broadcastDegrees(nEdges = 1001L, intersectGate = 1000L))
+    assert(Triangles.broadcastDegrees(nEdges = 0L, intersectGate = 1L))
+    assert(!Triangles.broadcastDegrees(nEdges = 0L, intersectGate = 0L))
+  }
+
   test("intersect gate: conf knob overrides derivation, argument wins") {
     val df = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
     // derived default: bloom gate / 13

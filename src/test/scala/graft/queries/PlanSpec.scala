@@ -170,5 +170,17 @@ class PlanSpec extends SparkSpec {
       s"q118: ${shuffles("q118_packed_sequences")}")
     assert(shuffles("q110_funnel") == 1,     // three stages, ONE exchange
       s"q110: ${shuffles("q110_funnel")}")
+    // q27 verifies candidates against per-doc sorted shingle-hash arrays
+    // (one checkpointed row per doc): no shingle explode, and no join,
+    // aggregate or exchange over a per-shingle `sh` column. At this scale
+    // an exploded verify's (id_b, sh) join plans as a broadcast, so the
+    // check covers every operator, not only exchanges.
+    val q27 = plan("q27_minhash_pairs")
+    // band-cell stats once per consumer branch (3), the three pinned
+    // doc-id window exchanges, the candidate distinct
+    assert(shuffles("q27_minhash_pairs") == 7,
+      s"q27: ${shuffles("q27_minhash_pairs")}")
+    assert(!q27.contains("Generate explode"), q27)
+    assert("""\bsh#\d""".r.findFirstIn(q27).isEmpty, q27)
   }
 }
