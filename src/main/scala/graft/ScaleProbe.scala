@@ -426,12 +426,11 @@ object ScaleProbe {
     require(zeroed == m, s"UPDATE touched wrong rows: $zeroed != $m")
   }
 
-  /** Refs + commit protocols (r14): the same fixed slice appended under
-    * the RENAME and the CREATE protocol (their delta is the claim /
-    * conditional-create overhead — metadata ops, so it must NOT scale
-    * with SF), a branch staging commit (same O(new data) as an append),
-    * fast_forward (metadata-only — flat across SF), and tag-guarded
-    * expiry. */
+  /** Refs (r14): a fixed slice appended (claim + write + conditional-
+    * create publish — the claim/publish overhead is metadata ops, so it
+    * must NOT scale with SF), a branch staging commit (same O(new data)
+    * as an append), fast_forward (metadata-only — flat across SF), and
+    * tag-guarded expiry. */
   def refsWap(s: SparkSession, dir: String): Unit = {
     import graft.pipeline.VersionedTable
     val root = tmp("graft-probe-refs-")
@@ -444,22 +443,8 @@ object ScaleProbe {
       .withColumn("l_orderkey", col("l_orderkey") + 100000001L)
     val m = slice.count()
 
-    val (_, tAppR) = timed { VersionedTable.append(slice, table) }
-    emit("refswap", "append_rename", tAppR, m, dir)
-
-    // the SAME base + slice under the CREATE protocol: the reading is
-    // rename-append plus claim + conditional-create publish overhead.
-    // The WHOLE table lives under the protocol from its first commit —
-    // the r15 protocol pin refuses mixing (a rename-pinned base cannot
-    // take a create-protocol append), which is itself the contract.
-    val t2 = tmp("graft-probe-refs-cp-") + "/li"
-    s.conf.set(VersionedTable.ProtocolConfKey, "create")
-    val tAppC =
-      try {
-        VersionedTable.write(li, t2)
-        timed { VersionedTable.append(slice, t2) }._2
-      } finally s.conf.unset(VersionedTable.ProtocolConfKey)
-    emit("refswap", "append_create_protocol", tAppC, m, dir)
+    val (_, tApp) = timed { VersionedTable.append(slice, table) }
+    emit("refswap", "append", tApp, m, dir)
 
     // WAP: staging commit, then the metadata-only publish
     VersionedTable.createBranch(table, "wap")

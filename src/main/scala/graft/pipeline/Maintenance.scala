@@ -575,32 +575,13 @@ object Maintenance {
         Report(tableDir, "expire_branch_snapshots", ok = false, e.toString)
     }
 
-  /** Deliberate commit-protocol migration (r15): re-pin the table's
-    * persisted protocol. The everyday path never needs this — the pin
-    * is written at first commit and `auto` follows it; this verb is
-    * for the real migration (a table tested on file: moving to an
-    * object store, or back). Refuses while commit claims are
-    * outstanding; like remove_orphan_files, do not run concurrently
-    * with live writers in other processes. */
-  def setCommitProtocol(tableDir: String, protocol: String): Report =
-    try {
-      require(VersionedTable.isVersioned(tableDir),
-        s"$tableDir is not a versioned table root")
-      VersionedTable.setCommitProtocol(tableDir, protocol)
-      Report(tableDir, "set_commit_protocol", ok = true,
-        s"pinned commit protocol '$protocol'")
-    } catch {
-      case e: Throwable =>
-        Report(tableDir, "set_commit_protocol", ok = false, e.toString)
-    }
-
   /** Deliberate claim-TTL migration (r17): re-pin the table's
     * persisted claim-liveness TTL. The everyday path never needs this
     * — the pin is written at first commit from the session conf (or
     * the 10-minute default) and every later process follows it; this
     * verb is for tuning retention-of-liveness deliberately. Refuses
     * while any claim still shows liveness under the current TTL; like
-    * set_commit_protocol, do not run concurrently with live writers
+    * remove_orphan_files, do not run concurrently with live writers
     * in other processes. */
   def setClaimTtl(tableDir: String, ttlMs: Long): Report =
     try {
@@ -630,8 +611,8 @@ object Maintenance {
       // lifecycle on rename/delete), so this name check only ever fires
       // on raw stores where a committer genuinely stranded one — the
       // hidden-and-managed case needs no cleaning by construction.
-      // CREATE-protocol committers write DIRECTLY into their claimed
-      // `v=N` while the claim is young (TTL) or owned in-JVM — the walk
+      // Committers write DIRECTLY into their claimed `v=N` while the
+      // claim is young (TTL) or owned in-JVM — the walk
       // must skip those subtrees WHOLE (r15): their `_temporary` /
       // task-attempt dirs are in-flight work, and deleting them would
       // let the committer publish a manifest over lost data (with
@@ -651,9 +632,10 @@ object Maintenance {
         if (st.isDirectory) {
           if (claimProtected(st.getPath)) () // live claimed dir: hands off
           else if (name == "_temporary") { fs.delete(st.getPath, true); removed += 1 }
-          // a crashed committer's staged-but-never-claimed data (r14
-          // commit protocol: stage → claim-rename → manifest). Safe to
-          // drop because a CLAIMED stage no longer has this name; like
+          // staged-but-never-claimed data left by a crashed committer
+          // of the retired rename protocol (`.stage-*`,
+          // `.replace-staging-*`) or by a partitioned row-level task
+          // attempt that died without aborting (`.inflight-*`); like
           // Iceberg's remove_orphan_files, do not run concurrently
           // with live writers on the same table.
           else if (name.startsWith(".stage-") ||

@@ -12,52 +12,62 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * the reference's Iceberg snapshot semantics (time travel: README.md:87-88;
   * expire_snapshots: glue-jobs/iceberg_maintenance.py:48-55).
   *
-  * Commit protocol: data lands in `v=N` first, then a one-line manifest
-  * `_versions/N` is created — readers only see manifested versions, so a
-  * torn write is invisible (no manifest → no version). The manifest
-  * itself lands via temp-write + rename, so a reader can never observe
-  * a HALF-WRITTEN manifest either (matters for rollback redirects,
-  * where truncated content would silently mean "data=self").
+  * ONE commit protocol, on every scheme and with no conf — Delta Lake's
+  * log discipline (data is written once and never renamed; a commit is a
+  * create-if-absent of the next log entry):
+  *   1. CLAIM `v=N` by conditional create of the marker
+  *      `_versions/.claim-N` ([[claimVersion]]);
+  *   2. WRITE `df` directly into `v=N` — the claim makes the final name
+  *      exclusive, so there is no staging dir and no rename;
+  *   3. PUBLISH the manifest `_versions/N` by conditional create, in
+  *      claim order ([[publishClaimed]]).
+  * Readers only see manifested versions, so a torn or abandoned write is
+  * invisible (no manifest → no version). Metadata-only commits (rollback,
+  * fast_forward, rewrite_manifests) claim a number the same way and
+  * publish without writing a data dir. Every create-if-absent goes
+  * through [[graft.util.Fs.createNew]] (O_EXCL + hard link on `file:`,
+  * so a manifest appears whole; `create(overwrite=false)` elsewhere),
+  * and every mutation — deletes included — first passes one object-store
+  * gate, [[probeConditionalCreate]].
   *
-  * Substrate (r12): all I/O runs over Hadoop's `FileSystem`, resolved
-  * per table path — the same code commits on `file:`, `hdfs:`, or NFS
-  * mounts. Reads work anywhere. TWO commit protocols (r14, selected by
-  * `spark.graft.commit.protocol`): the default RENAME protocol rests on
-  * rename being an atomic metadata operation and refuses object-store
-  * schemes ([[graft.util.Fs.NonAtomicRenameSchemes]]); the CREATE
-  * protocol is object-store-native — versions are claimed by
-  * CONDITIONAL CREATE (S3 If-None-Match PUT, GCS preconditions, Azure
-  * ETag), data writes directly into the claimed `v=N`, manifests
-  * publish by conditional create, ZERO renames on the commit path —
-  * see the protocol-selection comment below.
+  * Where each guarantee of the retired rename protocol (stage into
+  * `.stage-*`, claim `v=N` by rename, publish the manifest by temp +
+  * rename, pick and pin the protocol per table) now lives:
+  *   - one owner per number: the `.claim-N` create-if-absent, not a dir
+  *     rename (a POSIX rename onto a non-empty dir can even "succeed" by
+  *     moving the source inside it);
+  *   - a reader never sees a half-written manifest: `Fs.createNew`'s
+  *     hard-link publish on `file:`, whole-object PUT on object stores;
+  *   - serializable appends (a later manifest carries every earlier
+  *     commit's dirs): publish in claim order, content resolved from the
+  *     version list read at publish time;
+  *   - a crashed committer never wedges the table: claim liveness
+  *     (timestamp, heartbeat sidecar, newest mtime under `v=N`) and the
+  *     pinned TTL (`.liveness`, `set_claim_ttl`) reap cold claims and
+  *     cold marker-less `v=N` dirs;
+  *   - a loser cleans only what it owns: [[abandonClaim]] deletes the
+  *     claimed dir and marker, never a published snapshot.
+  * Tables written by the old code keep working: `.protocol` pins are
+  * ignored, an in-place-rewritten `.table` is generation -1 of the
+  * table meta, marker-less `v=N` dirs self-reap once cold, and
+  * `remove_orphan_files` still sweeps `.stage-*`/`.replace-staging-*`.
   *
-  * Concurrency (r14, tightened r15): commits are optimistic. Data is
-  * STAGED into a dot-prefixed temp dir by an ordinary distributed
-  * write (no lock held), then the commit CLAIMS `v=N` with one rename
-  * and publishes the manifest — both inside a per-root driver-side
-  * monitor, so every committer in one driver JVM serializes (Spark
-  * manifests commit on the driver; a `local[*]` or single-driver
-  * cluster app gets true multi-thread safety: two concurrent appends
-  * both land, the second's manifest including the first's dirs).
-  * Across DRIVERS on an atomic-rename filesystem, EVERY commit —
-  * data AND metadata (r15) — claims its number by exactly one dir
-  * rename, a number cannot be claimed while a lower claimed number is
-  * still unmanifested (the exists-wait), and each committer's content
-  * resolves from the version list read in the same claim attempt — so
-  * cross-process commits serialize too: a later manifest always
-  * carries every earlier commit's dirs, and two manifests can never
-  * silently target one number (pre-r15, metadata commits renamed
-  * their manifest unclaimed, and POSIX rename REPLACES — a real
-  * cross-process lost-commit window, now closed). A committer that
-  * CRASHES between claim and publish self-heals on BOTH protocols
-  * (r16): its claim/dir is reaped by the next blocked commit once
-  * every LIVENESS signal — claim timestamp, heartbeat sidecar, newest
-  * mtime under the claimed dir — is past the TTL, so a live slow
+  * The claimed dir keeps the name `v=N` (rather than a unique,
+  * never-claimed name) because that name is visible: `history`'s and
+  * `graft_files`' `data_version`, the DML `v` metadata column, and
+  * partition discovery with `basePath` at the table root all read it.
+  *
+  * Concurrency: all I/O runs over Hadoop's `FileSystem`, resolved per
+  * table path. In one driver JVM every claim and publish on a root
+  * serializes under a per-root monitor (two concurrent appends both
+  * land, the second's manifest including the first's dirs). Across
+  * drivers the claim marker is the linearization point; a committer
+  * that crashes between claim and publish is reaped by the next blocked
+  * commit once every liveness signal is past the TTL, so a live slow
   * writer is never destroyed and a dead one never wedges the table.
   * Remaining cross-driver caveat, documented not hidden: `expire`
-  * racing a cross-process in-flight commit can fail that commit
-  * loudly (never silently). The reference's Glue-job model is
-  * one writer per table; both protocols are now strictly stronger. */
+  * racing a cross-process in-flight commit can fail that commit loudly
+  * (never silently). */
 object VersionedTable extends org.apache.spark.internal.Logging {
 
   // per-root commit monitor: all manifest mutations on one table root
@@ -87,270 +97,67 @@ object VersionedTable extends org.apache.spark.internal.Logging {
 
   private def manifestDir(root: Path): Path = new Path(root, "_versions")
 
-  // ---- commit protocol selection (r14) ---------------------------------
-  //
-  // Two ways a commit can make its version visible, selected per session:
-  //   - RENAME (default on rename-capable schemes): stage data under a
-  //     unique dot-prefixed dir, CLAIM `v=N` with one atomic rename,
-  //     publish the manifest by temp-write + rename. Sound on `file:`,
-  //     `hdfs:`, NFS — anywhere rename is an atomic metadata operation.
-  //   - CREATE (`spark.graft.commit.protocol=create`): ZERO renames.
-  //     Version N is claimed by a CONDITIONAL CREATE of the marker
-  //     `_versions/.claim-N` (create-if-absent — S3's If-None-Match
-  //     PUT, GA since Nov 2024; GCS `ifGenerationMatch=0`; Azure ETag
-  //     `If-None-Match: *`), data is written DIRECTLY into the claimed
-  //     `v=N` (exclusivity makes a unique final name safe), and the
-  //     manifest publishes by conditional create too. This is the
-  //     object-store-native path: the only atomicity it needs is
-  //     "create fails if the object exists", which conditional PUT
-  //     provides; single-object PUTs are atomic (readers never observe
-  //     a torn manifest). On POSIX filesystems the manifest create has
-  //     a visible-while-open window the rename protocol lacks, so
-  //     CREATE is only the right choice where conditional PUT is the
-  //     best primitive available — exactly object stores. Data-file
-  //     task commits inside the claimed dir may still rename
-  //     (FileOutputCommitter); on object stores deployments point
-  //     Spark at the store's zero-rename committer (e.g. the S3A
-  //     committers) — correctness does not depend on it, because
-  //     visibility is manifest-gated.
-  //   - `auto` (default conf): rename-capable scheme → RENAME; object
-  //     store → refuse with a pointer to the conf, because the engine
-  //     cannot verify conditional-create support from the scheme alone.
-
-  /** Session conf selecting the commit protocol: `auto` (default),
-    * `rename`, or `create`. */
-  val ProtocolConfKey = "spark.graft.commit.protocol"
-
-  private[graft] sealed trait Protocol
-  private[graft] case object RenameCommit extends Protocol
-  private[graft] case object CreateCommit extends Protocol
-
-  private def protocolConf: String =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .flatMap(s => scala.util.Try(s.conf.get(ProtocolConfKey, "auto")).toOption)
-      .getOrElse("auto")
-
-  private[graft] def protocolFor(fs: FileSystem, table: String,
-      action: String): Protocol = {
-    val scheme = Option(fs.getUri.getScheme).getOrElse("file")
-    val objectStore = graft.util.Fs.NonAtomicRenameSchemes(scheme)
-    def requireRenameCapable(how: String): Unit =
-      require(!objectStore,
-        s"VersionedTable.$action on '$table': $how but scheme '$scheme' " +
-          "has no atomic rename, so the rename commit protocol is " +
-          s"unsound there — set $ProtocolConfKey=create IF the store " +
-          "supports conditional create (S3 If-None-Match PUT — GA " +
-          "since Nov 2024, GCS ifGenerationMatch, Azure ETag), or use " +
-          "a catalog-backed table format (Iceberg)")
-    val conf = protocolConf match {
-      case p @ ("auto" | "rename" | "create") => p
-      case other =>
-        // a typo'd protocol silently running the other one would let a
-        // user believe they validated a protocol they never ran
-        throw new IllegalArgumentException(
-          s"$ProtocolConfKey='$other' is not a protocol — use " +
-            "auto | rename | create")
-    }
-    // The TABLE's persisted protocol wins (r15, like an Iceberg table
-    // property): two processes writing one table under DIFFERENT
-    // protocols would claim via different objects (v=N rename vs
-    // .claim-N marker) with no common linearization point and could
-    // allocate the same version — so the choice is pinned at first
-    // commit ([[ensureProtocolPersisted]]) and a session conf that
-    // EXPLICITLY disagrees is refused (auto follows the table; change
-    // deliberately via CALL graft.system.set_commit_protocol).
-    persistedProtocolOn(fs, fs.makeQualified(new Path(table))) match {
-      case Some(p) =>
-        val pName = protocolName(p)
-        require(conf == "auto" || conf == pName,
-          s"VersionedTable.$action on '$table': the table's commit " +
-            s"protocol is pinned to '$pName' (first commit) but " +
-            s"$ProtocolConfKey='$conf' — unset the conf, or migrate " +
-            "deliberately with CALL graft.system.set_commit_protocol")
-        if (p == RenameCommit)
-          requireRenameCapable(s"the table is pinned to 'rename'")
-        p
-      case None => conf match {
-        case "create" => CreateCommit
-        case "rename" =>
-          requireRenameCapable(s"$ProtocolConfKey=rename")
-          RenameCommit
-        case "auto" =>
-          requireRenameCapable("no protocol is pinned or configured")
-          RenameCommit
-      }
-    }
-  }
-
-  // ---- persisted protocol choice (r15) --------------------------------
-  //
-  // `_versions/.protocol` (generations `.protocol.gK` for migrations —
-  // object stores cannot atomically overwrite, so a change writes the
-  // NEXT generation by conditional create; newest wins, like `.table`).
-  // Written create-if-absent by the FIRST commit; losing that race
-  // re-reads and verifies agreement, so the very first two racing
-  // commits of a table already share one linearization point.
-
-  private def protocolName(p: Protocol): String = p match {
-    case RenameCommit => "rename"
-    case CreateCommit => "create"
-  }
-
-  private def protocolMetaGen(name: String): Option[Long] =
-    if (name == ".protocol") Some(-1L)
-    else if (name.startsWith(".protocol.g")) {
-      val g = name.stripPrefix(".protocol.g")
-      if (g.nonEmpty && g.forall(_.isDigit)) Some(g.toLong) else None
-    } else None
-
-  private def currentProtocolMetaOn(fs: FileSystem,
-      root: Path): Option[(Path, Long)] = {
-    val dir = manifestDir(root)
-    if (!fs.exists(dir)) None
-    else {
-      val metas = fs.listStatus(dir).toSeq.map(_.getPath.getName)
-        .flatMap(n => protocolMetaGen(n).map(n -> _))
-      if (metas.isEmpty) None
-      else {
-        val (name, gen) = metas.maxBy(_._2)
-        Some((new Path(dir, name), gen))
-      }
-    }
-  }
-
-  private[pipeline] def persistedProtocolOn(fs: FileSystem,
-      root: Path): Option[Protocol] =
-    currentProtocolMetaOn(fs, root).map { case (p, _) =>
-      graft.util.Fs.readSmallFileFs(fs, p).trim match {
-        case "rename" => RenameCommit
-        case "create" => CreateCommit
-        case other => sys.error(
-          s"unreadable protocol pin '$other' in $p — expected " +
-            "rename | create")
-      }
-    }
-
-  /** Pin the protocol at first commit (create-if-absent; both protocols
-    * can, and it IS the linearization point two racing first commits
-    * share). Pre-r15 tables have no pin: their next commit writes one
-    * for the protocol it runs under, so existing tables adopt the pin
-    * without a migration step. */
-  private def ensureProtocolPersisted(fs: FileSystem, root: Path,
-      table: String, proto: Protocol): Unit = {
-    if (persistedProtocolOn(fs, root).nonEmpty) return
-    fs.mkdirs(manifestDir(root))
-    try {
-      val out = fs.create(new Path(manifestDir(root), ".protocol"), false)
-      try out.write(protocolName(proto)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        // lost the create race (or a connector-shaped failure): if
-        // someone pinned first, all that matters is that the pin
-        // AGREES; if nothing is pinned, the failure was a real I/O
-        // error and must surface as itself
-        persistedProtocolOn(fs, root) match {
-          case Some(p) => require(p == proto,
-            s"commit on $table: a concurrent first commit pinned the " +
-              s"protocol to '${protocolName(p)}' while this one runs " +
-              s"'${protocolName(proto)}' — re-run under the pinned " +
-              "protocol")
-          case None => throw e
-        }
-    }
-  }
-
-  /** Deliberate protocol migration (`CALL graft.system
-    * .set_commit_protocol`): re-pin the table to `protocol`. Writes the
-    * next `.protocol.gK` generation by conditional create (atomic on
-    * both protocols; racing migrations collide on the generation name
-    * and the loser fails loudly). Refuses while commit claims are
-    * outstanding — migrating under a live committer is exactly the
-    * mixed-protocol race the pin exists to prevent; like
-    * remove_orphan_files, do not run concurrently with live writers in
-    * other processes. The target protocol must be sound on the table's
-    * filesystem (rename → rename-atomic scheme; create → the
-    * conditional-create probe runs at the next commit). */
-  def setCommitProtocol(table: String, protocol: String): Unit = {
-    val (fs, root) = fsFor(table)
-    val target = protocol match {
-      case "rename" =>
-        val scheme = Option(fs.getUri.getScheme).getOrElse("file")
-        require(!graft.util.Fs.NonAtomicRenameSchemes(scheme),
-          s"set_commit_protocol($table, rename): scheme '$scheme' has " +
-            "no atomic rename")
-        RenameCommit
-      case "create" => CreateCommit
-      case other => throw new IllegalArgumentException(
-        s"set_commit_protocol($table, '$other'): use rename | create")
-    }
-    withCommitLock(root) {
-      require(claimsOn(fs, root).isEmpty,
-        s"set_commit_protocol($table): outstanding commit claims " +
-          s"${claimsOn(fs, root)} — wait for in-flight commits (or " +
-          "clean crashed ones with remove_orphan_files), then retry")
-      if (persistedProtocolOn(fs, root).contains(target)) return
-      fs.mkdirs(manifestDir(root))
-      val gen = currentProtocolMetaOn(fs, root).map(_._2).getOrElse(-1L) + 1L
-      val out = fs.create(
-        new Path(manifestDir(root), s".protocol.g$gen"), false)
-      try out.write(protocolName(target)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-  }
-
-  /** The pinned protocol name, if the table has pinned one. */
-  def commitProtocolOf(table: String): Option[String] = {
-    val (fs, root) = fsFor(table)
-    persistedProtocolOn(fs, root).map(protocolName)
-  }
-
   // ---- persisted claim-liveness TTL (r17) ------------------------------
   //
   // `_versions/.liveness` (generations `.liveness.gK` for migrations —
-  // the `.protocol` discipline exactly): `claimTtlMs=N`, pinned
-  // create-if-absent at first commit. The TTL governs BOTH the
-  // committer's heartbeat period (TTL/3) and the reaper's coldness
-  // test, and those run in DIFFERENT processes — a reaper session
-  // configured with a shorter TTL than a committer's beat period would
-  // read a live, heartbeating claim as cold between beats and destroy
-  // its in-flight data (r16 verdict, missing #2). Pinning makes every
-  // process — committer, blocked publisher, orphan walk — reap against
-  // the TABLE's TTL; a session conf that EXPLICITLY disagrees refuses
-  // with the migration verb named, and deliberate migration goes
-  // through CALL graft.system.set_claim_ttl. Pre-r17 tables have no
-  // pin: the session conf (default 10 min) applies and their next
-  // commit writes the pin, adopting without a migration step.
+  // an object store cannot atomically overwrite, so a change writes the
+  // NEXT generation by conditional create and the newest wins, like
+  // `.table`): `claimTtlMs=N`, pinned create-if-absent at first commit.
+  // The TTL governs BOTH the committer's heartbeat period (TTL/3) and
+  // the reaper's coldness test, and those run in DIFFERENT processes — a
+  // reaper session configured with a shorter TTL than a committer's beat
+  // period would read a live, heartbeating claim as cold between beats
+  // and destroy its in-flight data (r16 verdict, missing #2). Pinning
+  // makes every process — committer, blocked publisher, orphan walk —
+  // reap against the TABLE's TTL; a session conf that EXPLICITLY
+  // disagrees refuses with the migration verb named, and deliberate
+  // migration goes through CALL graft.system.set_claim_ttl. Pre-r17
+  // tables have no pin: the session conf (default 10 min) applies and
+  // their next commit writes the pin, adopting without a migration step.
   //
   // The pinned value is CACHED per root per JVM (positive entries
   // only — reap paths poll liveness at 100 ms and must not pay a LIST
   // per poll); set_claim_ttl refreshes the writer's own cache, and
-  // cross-process it shares set_commit_protocol's documented
-  // discipline: do not migrate concurrently with live writers in
-  // other processes.
+  // cross-process the documented discipline holds: do not migrate
+  // concurrently with live writers in other processes.
 
-  private def livenessMetaGen(name: String): Option[Long] =
-    if (name == ".liveness") Some(-1L)
-    else if (name.startsWith(".liveness.g")) {
-      val g = name.stripPrefix(".liveness.g")
+  /** Generation of a generational meta file named `base` (`.table`,
+    * `.liveness`): the bare name is generation -1, `base.gK` is K. */
+  private def metaGen(base: String, name: String): Option[Long] =
+    if (name == base) Some(-1L)
+    else if (name.startsWith(s"$base.g")) {
+      val g = name.stripPrefix(s"$base.g")
       if (g.nonEmpty && g.forall(_.isDigit)) Some(g.toLong) else None
     } else None
 
-  private def currentLivenessMetaOn(fs: FileSystem,
-      root: Path): Option[(Path, Long)] = {
+  /** The newest generation of meta `base` — one listing of `_versions`,
+    * the same small dir every read already lists. */
+  private def currentMetaOn(fs: FileSystem, root: Path,
+      base: String): Option[(Path, Long)] = {
     val dir = manifestDir(root)
     if (!fs.exists(dir)) None
     else {
       val metas = fs.listStatus(dir).toSeq.map(_.getPath.getName)
-        .flatMap(n => livenessMetaGen(n).map(n -> _))
+        .flatMap(n => metaGen(base, n).map(n -> _))
       if (metas.isEmpty) None
       else {
         val (name, gen) = metas.maxBy(_._2)
         Some((new Path(dir, name), gen))
       }
     }
+  }
+
+  /** Write the next generation of meta `base` by create-if-absent: two
+    * racing writers collide on the generation name and the loser fails
+    * loudly (never a silent lost update). */
+  private def writeNextMetaGen(fs: FileSystem, root: Path, base: String,
+      content: String): Unit = {
+    val name = currentMetaOn(fs, root, base) match {
+      case Some((_, g)) => s"$base.g${g + 1}"
+      case None => base
+    }
+    graft.util.Fs.createNew(fs, new Path(manifestDir(root), name),
+      content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   private val pinnedTtlCache =
@@ -359,7 +166,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   private[pipeline] def pinnedClaimTtlOn(fs: FileSystem,
       root: Path): Option[Long] =
     pinnedTtlCache.get(root.toString).orElse {
-      val read = currentLivenessMetaOn(fs, root).map { case (p, _) =>
+      val read = currentMetaOn(fs, root, ".liveness").map { case (p, _) =>
         val content = graft.util.Fs.readSmallFileFs(fs, p).trim
         content.linesIterator.map(_.trim)
           .collectFirst { case l if l.startsWith("claimTtlMs=") =>
@@ -395,20 +202,15 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       case None => explicitSessionClaimTtl.getOrElse(DefaultClaimTtlMs)
     }
 
-  /** Pin the claim TTL at first commit (create-if-absent, the
-    * [[ensureProtocolPersisted]] shape). A lost race needs no
-    * agreement check here — the winner's pin simply rules, and a
-    * session whose EXPLICIT conf disagrees with it refuses at its next
+  /** Pin the claim TTL at first commit (create-if-absent). A lost race
+    * needs no agreement check here — the winner's pin simply rules, and
+    * a session whose EXPLICIT conf disagrees with it refuses at its next
     * liveness decision ([[claimTtlMsFor]]). */
   private def ensureLivenessPersisted(fs: FileSystem, root: Path): Unit = {
     if (pinnedClaimTtlOn(fs, root).nonEmpty) return
     val ttl = explicitSessionClaimTtl.getOrElse(DefaultClaimTtlMs)
-    fs.mkdirs(manifestDir(root))
     try {
-      val out = fs.create(new Path(manifestDir(root), ".liveness"), false)
-      try out.write(s"claimTtlMs=$ttl\n"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      writeNextMetaGen(fs, root, ".liveness", s"claimTtlMs=$ttl\n")
       pinnedTtlCache.put(root.toString, ttl)
     } catch {
       case scala.util.control.NonFatal(e) =>
@@ -425,13 +227,14 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * the old TTL is exactly the cross-process corruption the pin
     * exists to prevent. Cold (crashed-committer) claims do NOT block:
     * shortening the TTL is often the operator's tool to reap them
-    * sooner. Like set_commit_protocol, do not run concurrently with
+    * sooner. Like remove_orphan_files, do not run concurrently with
     * live writers in other processes (their cached pin refreshes at
     * their next JVM, not mid-flight). */
   def setClaimTtl(table: String, ttlMs: Long): Unit = {
     require(ttlMs > 0, s"set_claim_ttl($table, $ttlMs): TTL must be " +
       "positive millis")
     val (fs, root) = fsFor(table)
+    probeConditionalCreate(fs, root, table)
     withCommitLock(root) {
       val curTtl = pinnedClaimTtlOn(fs, root)
         .orElse(explicitSessionClaimTtl).getOrElse(DefaultClaimTtlMs)
@@ -443,13 +246,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
           "under the current TTL — wait for in-flight commits (crashed " +
           "ones go cold and stop blocking), then retry")
       if (pinnedClaimTtlOn(fs, root).contains(ttlMs)) return
-      fs.mkdirs(manifestDir(root))
-      val gen = currentLivenessMetaOn(fs, root).map(_._2).getOrElse(-1L) + 1L
-      val out = fs.create(
-        new Path(manifestDir(root), s".liveness.g$gen"), false)
-      try out.write(s"claimTtlMs=$ttlMs\n"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      writeNextMetaGen(fs, root, ".liveness", s"claimTtlMs=$ttlMs\n")
       pinnedTtlCache.put(root.toString, ttlMs)
     }
   }
@@ -627,170 +424,23 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   private val batchMarkerCache =
     scala.collection.concurrent.TrieMap.empty[String, (Long, Option[Long])]
 
-  /** Manifest commit: temp in the manifest dir (dot-prefixed, skipped
-    * by the numeric-name filter in [[versionsOn]]) + atomic rename.
-    * `branch` redirects the manifest into that branch's dir (r14) —
-    * branch commits never touch the main marker cache. */
-  private def commitManifest(fs: FileSystem, root: Path, v: Long,
-      content: String, branch: Option[String] = None): Unit = {
-    val dir = branch.map(branchManifestDir(root, _)).getOrElse(manifestDir(root))
-    fs.mkdirs(dir)
-    val tmp = new Path(dir,
-      s".$v.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!fs.rename(tmp, new Path(dir, v.toString))) {
-      fs.delete(tmp, false)
-      sys.error(s"manifest commit failed for version $v in $root")
-    }
-    // the committed content is authoritative for the newest marker:
-    // every commit path re-carries the newest batch= line, so absence
-    // here means absence everywhere at-or-below v
-    if (branch.isEmpty) batchMarkerCache.put(root.toString,
-      (v, content.linesIterator.collectFirst {
-        case l if l.startsWith("batch=") =>
-          l.stripPrefix("batch=").trim.toLong
-      }))
-  }
-
   /** Commit a new FULL snapshot (the whole table's content is `df`);
     * returns its version. O(|df|) — the INSERT OVERWRITE shape. For
     * O(new rows) commits that keep prior data by reference, use
     * [[append]]. */
   def write(df: DataFrame, table: String): Long = {
     val (fs, root) = fsFor(table)
-    val content = (next: Long) =>
+    commitData(fs, root, table, df)((_, next) =>
       manifestContent(Seq(next), next, carryBatchLine(fs, root),
-        op = "overwrite")
-    protocolFor(fs, table, "write") match {
-      case RenameCommit =>
-        val stage = stageData(df, root, table)
-        commitStaged(fs, root, stage)((_, next) => content(next))
-      case CreateCommit =>
-        commitCreate(fs, root, table, df)((_, next) => content(next))
-    }
+        op = "overwrite"))
   }
 
-  /** Stage `df` into a dot-prefixed temp dir under the root — the
-    * distributed half of every commit, run with NO lock held. Partition
-    * columns declared at [[create]] time lay out inside the staged dir,
-    * so the claim rename publishes the final structure verbatim. */
-  private def stageData(df: DataFrame, root: Path, table: String): Path = {
-    val stage = new Path(root,
-      s".stage-${java.util.UUID.randomUUID().toString.take(12)}")
-    partitionColsOf(table) match {
-      case cols if cols.nonEmpty =>
-        df.write.partitionBy(cols: _*).parquet(stage.toString)
-      case _ => df.write.parquet(stage.toString)
-    }
-    stage
-  }
-
-  /** The commit half: under the root's monitor, resolve the next
-    * version, CLAIM its data dir by renaming the staged dir into place,
-    * and publish the manifest `content` computes from the (fresh)
-    * retained-version list. On a cross-process collision (the claim
-    * target already exists — another driver staged the same number) the
-    * claim retries against the advanced version; on any failure after
-    * the claim, the claimed dir is deleted so no orphan remains and the
-    * staged data is not silently half-published. */
-  private def commitStaged(fs: FileSystem, root: Path, stage: Path,
-      branch: Option[String] = None)(
-      content: (Seq[Long], Long) => String): Long =
-    try {
-      ensureProtocolPersisted(fs, root, root.toString, RenameCommit)
-      ensureLivenessPersisted(fs, root)
-      // validate the TTL up front (r17): a session conf disagreeing
-      // with the table's pin refuses at commit entry, the same
-      // predictable point on both protocols
-      claimTtlMsFor(fs, root)
-      // contention discipline (r15, mirrors claimVersion): each claim
-      // ATTEMPT holds the per-root lock; the retry sleep does not (a
-      // sleeping claimer must not stall sibling committers), and only
-      // a next that NEVER MOVES counts toward the failure bound — a
-      // moving next is live cross-process contention, retried with
-      // backoff indefinitely
-      var stuck = 0
-      var lastNext = -1L
-      var committed = -1L
-      while (committed < 0) {
-        val claimed: Boolean = withCommitLock(root) {
-          val vs = versionsOn(fs, root)
-          // global allocation: branch manifests and claims count too, so
-          // a main commit never claims a data dir a branch owns
-          val next = maxAllocatedOn(fs, root) + 1L
-          if (next != lastNext) { stuck = 0; lastNext = next }
-          val target = new Path(root, s"v=$next")
-          if (!fs.exists(target) && fs.rename(stage, target)) {
-            try {
-              // per-snapshot schema (r14): every commit of a DECLARED
-              // table embeds the schema current AT COMMIT TIME, so time
-              // travel to a pre-evolution snapshot can serve the schema
-              // as of that snapshot (Iceberg's per-snapshot schema-id
-              // contract; [[schemaAt]] reads it back)
-              val schemaLine = storedSchema(root.toString)
-                .map(sch => s"schema=${sch.json}\n").getOrElse("")
-              commitManifest(fs, root, next, content(vs, next) + schemaLine,
-                branch)
-              committed = next
-              true
-            } catch {
-              case e: Throwable => // loser/validation cleanup: un-claim
-                fs.delete(target, true)
-                throw e
-            }
-          } else false
-        }
-        if (!claimed) {
-          // v=next exists with no manifest: a concurrent (cross-process)
-          // committer is mid-commit, or a crash orphaned the dir. Wait
-          // for its manifest to land (advancing our next), bounded only
-          // while next stays stuck.
-          stuck += 1
-          // self-heal (r16 — rename-protocol parity with the CREATE
-          // protocol's TTL reap): a LIVE committer holds a claimed dir
-          // for the milliseconds between its claim rename and manifest
-          // rename, and its file mtimes are fresh (data staged just
-          // before the rename), so a dir whose EVERY liveness signal is
-          // past the claim TTL is a crashed committer's debris — reap
-          // it here instead of wedging every later commit until a
-          // manual remove_orphan_files (r15 verdict, missing #3).
-          if (stuck >= 2) {
-            // beyond every main/branch manifest and claim = pure orphan
-            // (see claimVersion's twin)
-            val reaped = withCommitLock(root) {
-              val ttl = claimTtlMsFor(fs, root)
-              maxAllocatedOn(fs, root) + 1L == lastNext &&
-                claimAgeMs(fs, root, lastNext, ttl) >= ttl &&
-                fs.delete(new Path(root, s"v=$lastNext"), true)
-            }
-            if (reaped) stuck = 0
-          }
-          require(stuck < 5,
-            s"cannot claim data dir v=$lastNext in $root after $stuck " +
-              "attempts with no concurrent commit advancing it — a " +
-              "live committer is mid-write (its dir self-reaps once " +
-              s"cold for $ClaimTtlConfKey) or crashed moments ago " +
-              "(retry, or CALL graft.system.remove_orphan_files)")
-          Thread.sleep(50L * stuck)
-        }
-      }
-      committed
-    } catch {
-      case e: Throwable =>
-        // the stage dir is ours alone — always safe to clean
-        try fs.delete(stage, true)
-        catch { case scala.util.control.NonFatal(_) => () }
-        throw e
-    }
-
-  // ---- CREATE-protocol commits (r14): claim → write → publish ---------
+  // ---- commits: claim → write → publish -------------------------------
 
   private def claimPath(root: Path, v: Long): Path =
     new Path(manifestDir(root), s".claim-$v")
 
-  /** Versions with an outstanding claim marker (CREATE protocol). */
+  /** Versions with an outstanding claim marker. */
   private def claimsOn(fs: FileSystem, root: Path): Seq[Long] =
     listVersionsDir(fs, root).claims
 
@@ -836,8 +486,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   //      committer's executors land task files there continuously, so
   //      even a committer that cannot heartbeat (crash-paused driver
   //      that later resumes, older library) stays protected while
-  //      bytes arrive. This signal also covers RENAME-protocol claimed
-  //      dirs, which carry no marker at all.
+  //      bytes arrive. This signal also covers marker-less `v=N` dirs
+  //      (crash debris of the retired rename protocol).
   // Signals are checked cheapest-first with early exit, so the 100 ms
   // publish-wait poll answers from the marker/heartbeat stat and never
   // pays the recursive dir listing for a live committer.
@@ -931,8 +581,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * (live): this signal authorizes DELETING a claimed dir, and a
     * transient listing error must make the reap retry after a clean
     * read, never destroy a live committer's in-flight data. For
-    * rename-protocol claimed dirs (no marker, no heartbeat) this scan
-    * is the ONLY protecting signal.
+    * marker-less dirs (no marker, no heartbeat) this scan is the ONLY
+    * protecting signal.
     *
     * Early exit (r17): the walk returns the moment ANY entry's mtime
     * is within `ttlMs` — one fresh task file proves liveness, and a
@@ -973,31 +623,28 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * manifest.
     *
     * Marker format (r16): the committer's unique TOKEN is the FIRST
-    * line, the claim timestamp the second — a partial flush (visible-
-    * while-open POSIX, close() failing after one line) then still
-    * identifies the OWNER, so the committer's read-back recognizes its
-    * own claim instead of misclassifying it as foreign and retrying at
-    * next+1 with its orphaned one-line claim wedging lower publishes
-    * (r15 ADVICE). Readers parse both orders (pre-r16 markers carry the
-    * timestamp first): a line that parses as a Long is the timestamp, a
-    * line that does not is the token — UUIDs never parse as Long.
+    * line, the claim timestamp the second. Readers parse both orders
+    * (pre-r16 markers carry the timestamp first): a line that parses as
+    * a Long is the timestamp, a line that does not is the token — UUIDs
+    * never parse as Long.
     *
-    * Soundness rests on the Hadoop connector mapping
-    * `create(path, overwrite=false)` to a CONDITIONAL write (S3A needs
-    * `fs.s3a.create.conditional.enabled`; GCS/ABFS enforce it natively)
-    * — the engine cannot verify that from the scheme, so the first
-    * create-protocol commit per table root PROBES it
-    * ([[probeConditionalCreate]]): a connector whose create(false) is
-    * check-then-PUT fails the probe loudly instead of silently letting
-    * two drivers claim one version. Connectors surface a lost
-    * conditional-PUT race in DIFFERENT shapes — FileAlreadyExists at
-    * create() on POSIX/HDFS, a precondition failure (HTTP 412, e.g.
-    * S3A's RemoteFileChangedException) at close() where the PUT
-    * actually happens — so on ANY IOException the claim is read back
-    * and disambiguated by the unique token this committer wrote: our
-    * token = the claim IS ours (won despite the error); a foreign or
-    * unreadable claim = lost race (retry); no claim = a real I/O
-    * failure that surfaces as itself.
+    * Soundness rests on [[graft.util.Fs.createNew]] being create-if-
+    * absent — O_EXCL on `file:`, the namenode on HDFS, a CONDITIONAL
+    * write on object stores, which [[probeConditionalCreate]] demands
+    * a positive signal for before the first claim. Connectors surface a
+    * lost conditional-PUT race in DIFFERENT shapes — FileAlreadyExists
+    * at create() on POSIX/HDFS, a precondition failure (HTTP 412, e.g.
+    * S3A's RemoteFileChangedException) at close() where the PUT actually
+    * happens — so on ANY IOException the claim is read back and
+    * disambiguated by the unique token this committer wrote: our token =
+    * the claim IS ours (won despite the error); a foreign or unreadable
+    * claim = lost race (retry); no claim = a real I/O failure that
+    * surfaces as itself.
+    *
+    * A `v=next` dir that already exists with no marker (a claimer whose
+    * marker was reaped but whose dir survived, or a crashed committer of
+    * the retired rename protocol) blocks the number: it is reaped once
+    * COLD, a fresh one keeps the bounded loud wait.
     *
     * Contention discipline (r15): the retry sleep runs OUTSIDE the
     * per-root lock (a sleeping claimer must not stall sibling in-JVM
@@ -1007,13 +654,12 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * (bounded, loud error naming the cleanup tool). */
   private[graft] def claimVersion(fs: FileSystem, root: Path,
       table: String): Long = {
-    ensureProtocolPersisted(fs, root, table, CreateCommit)
+    probeConditionalCreate(fs, root, table)
     ensureLivenessPersisted(fs, root)
     // resolve (and VALIDATE) the TTL before any marker is written: a
     // session conf disagreeing with the pin must refuse HERE, not
     // after a claim marker exists to strand (r17)
     val claimTtl = claimTtlMsFor(fs, root)
-    probeConditionalCreate(fs, root, table)
     var stuck = 0
     var lastNext = -1L
     var got = -1L
@@ -1022,21 +668,15 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       val collided: Boolean = withCommitLock(root) {
         val next = maxAllocatedOn(fs, root) + 1L
         if (next != lastNext) { stuck = 0; lastNext = next }
-        if (fs.exists(new Path(root, s"v=$next"))) true
-        else try {
-          fs.mkdirs(manifestDir(root))
-          val out = fs.create(claimPath(root, next), false)
+        val won = !fs.exists(new Path(root, s"v=$next")) && (try {
           // token FIRST (r16): a partial flush still identifies the owner
-          try out.write(s"$token\n${System.currentTimeMillis()}\n"
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-          addLiveClaim(root, next)
-          startClaimHeartbeat(fs, root, next, claimTtl)
-          got = next
-          false
+          graft.util.Fs.createNew(fs, claimPath(root, next),
+            s"$token\n${System.currentTimeMillis()}\n"
+              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          true
         } catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException => true
-          case _: java.nio.file.FileAlreadyExistsException => true
+          case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+          case _: java.nio.file.FileAlreadyExistsException => false
           case e: java.io.IOException =>
             // a connector may surface the lost race only at close()
             // (conditional-PUT 412); read the claim back and let the
@@ -1044,23 +684,21 @@ object VersionedTable extends org.apache.spark.internal.Logging {
             // leave NO claim and surface as themselves
             scala.util.Try(claimTokenOf(graft.util.Fs
               .readSmallFileFs(fs, claimPath(root, next)))) match {
-              case scala.util.Success(Some(t)) if t == token =>
-                addLiveClaim(root, next)
-                startClaimHeartbeat(fs, root, next, claimTtl)
-                got = next; false
-              case scala.util.Success(_) => true // foreign claim: lost race
+              case scala.util.Success(Some(t)) => t == token
+              case scala.util.Success(None) => false // no token: not ours
               case scala.util.Failure(_) =>
-                if (fs.exists(claimPath(root, next))) true else throw e
+                if (fs.exists(claimPath(root, next))) false else throw e
             }
+        })
+        if (won) {
+          addLiveClaim(root, next)
+          startClaimHeartbeat(fs, root, next, claimTtl)
+          got = next
         }
+        !won
       }
-      if (collided && got < 0) {
+      if (collided) {
         stuck += 1
-        // self-heal (r16, the commitStaged twin): a v=next dir with NO
-        // claim marker (a marker would have advanced `next`) is an
-        // orphan — a claimer whose marker was reaped but whose dir
-        // survived, or foreign debris. Reap it once COLD; a fresh dir
-        // keeps the bounded loud wait.
         if (stuck >= 2) {
           // `maxAllocatedOn + 1 == lastNext` ⟺ the number is beyond
           // every MAIN manifest, BRANCH manifest, and claim — a pure
@@ -1075,7 +713,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
           if (reaped) stuck = 0
         }
         require(stuck < 5,
-          s"cannot claim version $lastNext on $table after $stuck " +
+          s"cannot claim data dir v=$lastNext in $root after $stuck " +
             "attempts with no concurrent commit advancing it — a " +
             "live committer is mid-write (its debris self-reaps once " +
             s"cold for $ClaimTtlConfKey) or a crashed committer left " +
@@ -1129,60 +767,43 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     "fs.capability.conditional.create",
     "fs.capability.create.conditional.overwrite")
 
-  /** Per-root admission gate for the CREATE protocol's one assumption —
-    * that `create(path, overwrite=false)` is CONDITIONAL (atomic
-    * create-if-absent). Stated honestly (r16, replacing the r15
-    * behavioral claim): a sequential double-create probe CANNOT prove
-    * atomicity — a check-then-PUT connector also fails the second
+  /** Per-root admission gate for the commit protocol's one assumption —
+    * that [[graft.util.Fs.createNew]] is an atomic create-if-absent.
+    * Every mutation passes it first: commits, table declarations, tag
+    * and branch verbs, expiry. A sequential double-create probe CANNOT
+    * prove atomicity — a check-then-PUT connector also fails the second
     * create, because its existence check sees the already-visible
-    * marker; non-atomicity only manifests under a concurrent race
-    * (two HEADs both miss, both PUT, last-writer-wins) that a
-    * sequential probe never exercises. So the gate is layered:
+    * marker; non-atomicity only manifests under a concurrent race (two
+    * HEADs both miss, both PUT, last-writer-wins) that a sequential
+    * probe never exercises. So the gate is layered:
     *
-    *   1. SANITY probe (necessary, not sufficient): double-create a
-    *      marker and require the second create to fail — catches only
-    *      a connector whose create(false) ignores the flag entirely.
-    *   2. On rename-capable schemes (`file:`, `hdfs:`, NFS mounts) the
-    *      probe suffices: POSIX O_EXCL / the HDFS namenode make
-    *      create(false) genuinely atomic there.
-    *   3. On OBJECT-STORE schemes the gate demands a POSITIVE signal
-    *      that the connector maps create(false) to a conditional PUT:
-    *      a conditional-create path capability
-    *      ([[ConditionalCreateCapabilities]]), an S3A session with
-    *      `fs.s3a.create.conditional.enabled=true` in its Hadoop conf,
-    *      or the operator's explicit [[CreateTrustedConfKey]]
-    *      attestation. Without one, the protocol refuses up front —
+    *   1. On OBJECT-STORE schemes ([[graft.util.Fs.NonAtomicRenameSchemes]])
+    *      the gate first demands a POSITIVE signal that the connector
+    *      maps create(false) to a conditional PUT: a conditional-create
+    *      path capability ([[ConditionalCreateCapabilities]]), an S3A
+    *      session with `fs.s3a.create.conditional.enabled=true` in its
+    *      Hadoop conf, or the operator's explicit [[CreateTrustedConfKey]]
+    *      attestation. Without one it refuses before writing anything —
     *      false assurance here would let two drivers claim one version
     *      and the loser's cleanup delete the winner's published data.
+    *   2. SANITY probe on every connector-backed scheme (necessary,
+    *      not sufficient): double-create a marker in `_versions` and
+    *      require the second create to fail — catches a connector whose
+    *      create(false) ignores the flag entirely.
+    *   3. `file:` passes without a probe: `Fs.createNew` does not use
+    *      the connector there (Hadoop's local create(false) is
+    *      exists-then-open) but its own CREATE_NEW + hard-link path,
+    *      atomic by construction.
     *
     * Gated once per root per JVM; the probe marker is removed either
-    * way. */
+    * way. The gate creates nothing a commit needs: `Fs.createNew`
+    * makes missing parents where the writes happen. */
   private val probedRoots =
     scala.collection.concurrent.TrieMap.empty[String, Boolean]
   private def probeConditionalCreate(fs: FileSystem, root: Path,
       table: String): Unit = {
     if (probedRoots.contains(root.toString)) return
-    val p = new Path(manifestDir(root),
-      s".probe-${java.util.UUID.randomUUID().toString.take(8)}")
-    fs.mkdirs(manifestDir(root))
-    val out = fs.create(p, false)
-    try out.write('x') finally out.close()
-    val enforced =
-      try {
-        val second = fs.create(p, false)
-        second.close() // create-if-absent ignored: the create succeeded
-        false
-      } catch { case _: java.io.IOException => true }
-    try fs.delete(p, false)
-    catch { case scala.util.control.NonFatal(_) => () }
-    require(enforced,
-      s"$ProtocolConfKey=create on $table, but this filesystem's " +
-        "create(overwrite=false) does not even refuse a sequential " +
-        "duplicate — two committers could claim one version. Enable " +
-        "the connector's conditional write support (S3A: " +
-        "fs.s3a.create.conditional.enabled) or use the rename " +
-        "protocol on a rename-atomic filesystem")
-    val scheme = Option(fs.getUri.getScheme).getOrElse("file")
+    val scheme = graft.util.Fs.schemeOf(fs)
     if (graft.util.Fs.NonAtomicRenameSchemes(scheme)) {
       val capability = ConditionalCreateCapabilities.exists(c =>
         scala.util.Try(fs.hasPathCapability(root, c)).getOrElse(false))
@@ -1194,22 +815,37 @@ object VersionedTable extends org.apache.spark.internal.Logging {
           s.conf.get(CreateTrustedConfKey)).toOption)
         .exists(createTrustedMatches(_, scheme, root))
       require(capability || s3aConf || trusted,
-        s"$ProtocolConfKey=create on $table: scheme '$scheme' is an " +
-          "object store and no signal proves its create(false) is a " +
-          "CONDITIONAL PUT (a sequential probe cannot — a " +
-          "check-then-PUT connector passes it while still losing " +
-          "concurrent races). Enable the connector's conditional " +
-          "write (S3A: fs.s3a.create.conditional.enabled=true), or " +
-          "attest a natively-conditional store (GCS preconditions, " +
-          s"ABFS ETags) by naming its scheme or root: " +
-          s"$CreateTrustedConfKey=$scheme")
+        s"commit on $table: scheme '$scheme' is an object store and no " +
+          "signal proves its create(false) is a CONDITIONAL PUT (a " +
+          "sequential probe cannot — a check-then-PUT connector passes " +
+          "it while still losing concurrent races). Enable the " +
+          "connector's conditional write (S3A: " +
+          "fs.s3a.create.conditional.enabled=true), or attest a " +
+          "natively-conditional store (GCS preconditions, ABFS ETags) " +
+          s"by naming its scheme or root: $CreateTrustedConfKey=$scheme")
     }
+    if (scheme == "file") return
+    val p = new Path(manifestDir(root),
+      s".probe-${java.util.UUID.randomUUID().toString.take(8)}")
+    graft.util.Fs.createNew(fs, p, Array[Byte]('x'))
+    val enforced =
+      try {
+        graft.util.Fs.createNew(fs, p, Array[Byte]('y'))
+        false // create-if-absent ignored: the second create succeeded
+      } catch { case _: java.io.IOException => true }
+    try fs.delete(p, false)
+    catch { case scala.util.control.NonFatal(_) => () }
+    require(enforced,
+      s"commit on $table: this filesystem's create(overwrite=false) " +
+        "does not even refuse a sequential duplicate — two committers " +
+        "could claim one version. Enable the connector's conditional " +
+        "write support (S3A: fs.s3a.create.conditional.enabled)")
     probedRoots.put(root.toString, true)
   }
 
   /** Un-claim: delete the claimed data dir (if any was written) and the
-    * claim marker. The failure/abort path of every CREATE-protocol
-    * commit — never called after the manifest published. */
+    * claim marker. The failure/abort path of every commit — never
+    * called after the manifest published. */
   private[graft] def abandonClaim(fs: FileSystem, root: Path,
       v: Long): Unit = withCommitLock(root) {
     stopClaimHeartbeat(fs, root, v)
@@ -1224,8 +860,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * create, strictly in CLAIM ORDER — a manifest for `v` committed
     * while a LOWER claim is still writing would let a later append
     * resolve its `prev` dirs to a snapshot that does not yet include
-    * the lower committer's rows (the serializability the rename
-    * protocol gets from claiming inside the lock). Lower claims owned
+    * the lower committer's rows. Lower claims owned
     * by this JVM are waited out indefinitely (they are live, holding
     * real work); foreign claims get a bounded wait, then a loud error
     * naming remove_orphan_files. A lower claim whose manifest already
@@ -1246,7 +881,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
           if (lower.isEmpty) {
             val schemaLine = storedSchema(root.toString)
               .map(sch => s"schema=${sch.json}\n").getOrElse("")
-            commitManifestCreate(fs, root, v,
+            createManifest(fs, root, v,
               content(l.versions, v) + schemaLine, branch)
             manifested = true
             stopClaimHeartbeat(fs, root, v)
@@ -1327,9 +962,10 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * decision must use; this constant only seeds unpinned tables). */
   private[pipeline] val DefaultClaimTtlMs = 600000L
 
-  /** Manifest commit by conditional create — no temp, no rename: on a
-    * conditional-PUT object store the PUT is atomic whole-object, and
-    * the claim guarantees no competing writer of this version exists.
+  /** Manifest commit by conditional create ([[graft.util.Fs.createNew]]):
+    * a whole-object PUT on object stores, a hard-link publish on
+    * `file:` — readers never see a torn manifest — and the claim
+    * guarantees no competing writer of this version exists.
     *
     * Failure cleanup NEVER deletes a manifest it did not write (r15):
     * a create/close failure can mean the target ALREADY EXISTS (a
@@ -1338,18 +974,20 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * someone else's published commit. The target is read back and the
     * content decides: equal = this commit's object landed whole (the
     * commit stands — success); a strict PREFIX of ours = our own torn
-    * write (only possible on visible-while-open POSIX; deleted);
-    * anything else or unreadable = left untouched, error rethrown. */
-  private def commitManifestCreate(fs: FileSystem, root: Path, v: Long,
+    * write (a connector whose stream is visible while open; deleted);
+    * anything else or unreadable = left untouched, error rethrown.
+    *
+    * The committed content is authoritative for the newest batch
+    * marker: every commit path re-carries the newest `batch=` line, so
+    * absence here means absence everywhere at-or-below v. */
+  private def createManifest(fs: FileSystem, root: Path, v: Long,
       content: String, branch: Option[String] = None): Unit = {
     val dir = branch.map(branchManifestDir(root, _))
       .getOrElse(manifestDir(root))
     val target = new Path(dir, v.toString)
-    try {
-      val out = fs.create(target, false)
-      try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    } catch {
+    try graft.util.Fs.createNew(fs, target,
+      content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch {
       case e: Throwable =>
         scala.util.Try(graft.util.Fs.readSmallFileFs(fs, target))
           .toOption match {
@@ -1374,10 +1012,12 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       }))
   }
 
-  /** The CREATE-protocol data commit: claim a version, write `df`
-    * DIRECTLY into the claimed `v=N` (no staging, no rename — the claim
-    * makes the final name exclusive), publish in claim order. */
-  private def commitCreate(fs: FileSystem, root: Path, table: String,
+  /** The data commit: claim a version, write `df` DIRECTLY into the
+    * claimed `v=N` (no staging, no rename — the claim makes the final
+    * name exclusive; partition columns declared at [[create]] lay out
+    * inside it), publish in claim order. `branch` redirects the
+    * manifest into that branch's dir (r14). */
+  private def commitData(fs: FileSystem, root: Path, table: String,
       df: DataFrame, branch: Option[String] = None)(
       content: (Seq[Long], Long) => String): Long = {
     val v = claimVersion(fs, root, table)
@@ -1398,67 +1038,18 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** A data-less (metadata-only) CREATE-protocol commit — rollback,
-    * fast_forward, rewrite_manifests. */
-  private def commitMetaCreate(fs: FileSystem, root: Path,
+  /** A data-less (metadata-only) commit — rollback, fast_forward,
+    * rewrite_manifests: claims its number like a data commit, so a
+    * metadata commit can never publish over a number another committer
+    * owns, and publishes without writing a data dir (its manifest
+    * carries an explicit data directive). */
+  private def commitMeta(fs: FileSystem, root: Path,
       table: String)(content: (Seq[Long], Long) => String): Long = {
     val v = claimVersion(fs, root, table)
     try publishClaimed(fs, root, table, v)(content)
     catch { case e: Throwable => abandonClaim(fs, root, v); throw e }
   }
 
-  /** The RENAME-protocol twin of [[commitMetaCreate]]: one shared
-    * metadata-only commit body (global allocation, schema line,
-    * manifest publish) instead of a copy per verb.
-    *
-    * CLAIMS its version like a data commit (r15 — an empty staged dir,
-    * one atomic rename): pre-r15 metadata commits renamed their
-    * manifest in UNCLAIMED, and POSIX rename silently REPLACES files —
-    * two cross-process metadata commits (or a metadata commit racing a
-    * data commit) allocating one number could silently lose a
-    * manifest. With the dir claim exactly one committer owns each
-    * number, manifest renames can never collide, and — because a
-    * number cannot be claimed while a lower claimed number is still
-    * unmanifested (the same exists-wait every data commit applies) —
-    * cross-process rename-protocol commits serialize: a committer's
-    * manifest always resolves every lower-numbered commit's dirs. The
-    * empty claim dir is dropped once the manifest publishes (metadata
-    * manifests carry an explicit data directive, so the dir is never
-    * read; a crash before the drop leaves an empty dir that expiry or
-    * orphan cleanup removes). */
-  private def commitMetaRename(fs: FileSystem, root: Path,
-      table: String)(content: (Seq[Long], Long) => String): Long = {
-    require(versionsOn(fs, root).nonEmpty, s"no versions in $table")
-    val stage = new Path(root,
-      s".stage-${java.util.UUID.randomUUID().toString.take(12)}")
-    fs.mkdirs(stage)
-    val v = commitStaged(fs, root, stage)(content)
-    try fs.delete(new Path(root, s"v=$v"), true)
-    catch { case scala.util.control.NonFatal(_) => () }
-    v
-  }
-
-  /** Protocol-dispatched metadata-only commit. */
-  private def commitMeta(fs: FileSystem, root: Path, table: String,
-      proto: Protocol)(content: (Seq[Long], Long) => String): Long =
-    proto match {
-      case RenameCommit => commitMetaRename(fs, root, table)(content)
-      case CreateCommit => commitMetaCreate(fs, root, table)(content)
-    }
-
-  /** Remove crash debris of BOTH commit protocols (called by
-    * `remove_orphan_files`; like Iceberg's, NOT safe concurrently with
-    * live writers in other processes — in-JVM committers are protected
-    * by [[liveClaims]] and the commit lock):
-    *   - stale claim markers whose committer died (CREATE protocol) —
-    *     these BLOCK later publishes by design, so cleaning them is
-    *     what un-wedges the table;
-    *   - data dirs `v=K` with no manifest and no retained reference —
-    *     a CREATE-protocol claimer that died mid-write, or a RENAME-
-    *     protocol committer that crashed between the claim rename and
-    *     the manifest (the failure the commit error message points
-    *     here for).
-    * Returns the number of entries removed. */
   /** Effective age of claim `k` in millis — the YOUNGEST of the
     * liveness signals (claim timestamp line, marker mtime, heartbeat
     * sidecar mtime, newest mtime under the claimed `v=k`), so a claim
@@ -1569,8 +1160,23 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       .toSet
   }
 
+  /** Remove commit crash debris (called by `remove_orphan_files`; like
+    * Iceberg's, NOT safe concurrently with live writers in other
+    * processes — in-JVM committers are protected by [[liveClaims]] and
+    * the commit lock):
+    *   - stale claim markers whose committer died — these BLOCK later
+    *     publishes by design, so cleaning them is what un-wedges the
+    *     table;
+    *   - temp siblings of a crashed [[graft.util.Fs.createNew]] in
+    *     `_versions` and branch dirs, once older than the claim TTL;
+    *   - data dirs `v=K` with no manifest and no retained reference — a
+    *     claimer that died mid-write, or a committer of the retired
+    *     rename protocol that crashed between its claim rename and its
+    *     manifest (the failure the commit error message points here for).
+    * Returns the number of entries removed. */
   private[pipeline] def removeCommitDebris(fs: FileSystem,
       root: Path): Int = withCommitLock(root) {
+    probeConditionalCreate(fs, root, root.toString)
     var removed = 0
     val vs = versionsOn(fs, root)
     // branch manifests count as manifested (a claim whose publish went
@@ -1586,16 +1192,24 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     }
     // heartbeat sidecars whose claim marker is GONE (a racing final
     // beat after a publish's cleanup) are inert debris — sweep them
+    // and so are the temp siblings of an `Fs.createNew` that crashed
+    // between its temp write and its link, once older than the TTL
     val claimsLeft = claimsOn(fs, root).toSet
-    if (fs.exists(manifestDir(root)))
-      fs.listStatus(manifestDir(root)).foreach { st =>
+    val now = System.currentTimeMillis()
+    val metaDirs = manifestDir(root) +:
+      branchNamesOn(fs, root).map(branchManifestDir(root, _))
+    metaDirs.filter(fs.exists).foreach(dir =>
+      fs.listStatus(dir).foreach { st =>
         val n = st.getPath.getName
-        if (n.startsWith(".claim-") && n.endsWith(".hb") &&
-            !n.stripPrefix(".claim-").stripSuffix(".hb").toLongOption
-              .exists(claimsLeft)) {
+        val staleHb = n.startsWith(".claim-") && n.endsWith(".hb") &&
+          !n.stripPrefix(".claim-").stripSuffix(".hb").toLongOption
+            .exists(claimsLeft)
+        val staleTmp = n.startsWith(graft.util.Fs.CreateNewTmpPrefix) &&
+          now - st.getModificationTime >= ttl
+        if (staleHb || staleTmp) {
           fs.delete(st.getPath, false); removed += 1
         }
-      }
+      })
     // claims that survived the TTL guard still OWN their data dir —
     // the orphan-dir sweep must not pull it out from under them
     val surviving = claimsOn(fs, root).toSet
@@ -1643,10 +1257,9 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * Iceberg's rewrite_manifests discipline. */
   def append(df: DataFrame, table: String): Long = {
     val (fs, root) = fsFor(table)
-    // dirs resolve from the FRESH version list at publish time (inside
-    // the commit lock / in claim order), so a concurrent append that
-    // landed while this one staged is carried into this snapshot (no
-    // lost update within a driver)
+    // dirs resolve from the FRESH version list at publish time (in
+    // claim order), so a concurrent append that landed while this one
+    // wrote is carried into this snapshot (no lost update)
     val content = (vs: Seq[Long], next: Long) => {
       val dirs = vs.lastOption
         .map(prev => dataVersionsOn(fs, root, prev) :+ next)
@@ -1654,13 +1267,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       manifestContent(dirs, next, carryBatchLine(fs, root),
         op = "append")
     }
-    protocolFor(fs, table, "append") match {
-      case RenameCommit =>
-        val stage = stageData(df, root, table)
-        commitStaged(fs, root, stage)(content)
-      case CreateCommit =>
-        commitCreate(fs, root, table, df)(content)
-    }
+    commitData(fs, root, table, df)(content)
   }
 
   /** Commit a snapshot that keeps `keepDataVersions`' directories BY
@@ -1674,7 +1281,6 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   def replace(df: DataFrame, table: String,
       keepDataVersions: Seq[Long], baseVersion: Option[Long] = None): Long = {
     val (fs, root) = fsFor(table)
-    val proto = protocolFor(fs, table, "replace")
     def validate(vs: Seq[Long]): Unit = {
       require(vs.nonEmpty, s"replace on $table: no current snapshot")
       // a rewrite computed its survivors against a specific snapshot;
@@ -1690,30 +1296,20 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         s"replace on $table: kept data versions $unknown are not part " +
           s"of the current snapshot $current")
     }
-    validate(versionsOn(fs, root)) // cheap pre-check before staging
+    validate(versionsOn(fs, root)) // cheap pre-check before writing
     val content = (vs: Seq[Long], next: Long) => {
       validate(vs) // re-validated at publish time
       manifestContent(keepDataVersions :+ next, next,
         carryBatchLine(fs, root), op = "replace")
     }
-    proto match {
-      case RenameCommit =>
-        val stage = stageData(df, root, table)
-        commitStaged(fs, root, stage)(content)
-      case CreateCommit =>
-        commitCreate(fs, root, table, df)(content)
-    }
+    commitData(fs, root, table, df)(content)
   }
 
-  /** Publish a STAGED data dir (files already written by executors —
-    * the row-level-operation BatchWrite) as the next snapshot, keeping
-    * `keepDataVersions`' dirs by reference. `baseVersion` is the
-    * snapshot the rewrite's scan read: the commit refuses if the table
-    * moved since (the claim/manifest renames inside would fail loudly
-    * anyway, but by then the loser's executors have burned the IO —
-    * the check makes the conflict an explicit, clean error, and the
-    * caller's abort() only ever deletes its own staging dir, never a
-    * possibly-owned `v=N`). Returns the published version. */
+  /** Manifest content of a row-level rewrite published as the next
+    * snapshot, keeping `keepDataVersions`' dirs by reference.
+    * `baseVersion` is the snapshot the rewrite's scan read: the publish
+    * refuses if the table moved since (an explicit, clean error; the
+    * loser abandons only its own claim). */
   private def replaceContent(fs: FileSystem, root: Path, table: String,
       what: String, baseVersion: Option[Long],
       keepDataVersions: Seq[Long]): (Seq[Long], Long) => String =
@@ -1733,24 +1329,10 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         carryBatchLine(fs, root), op = "replace")
     }
 
-  private[graft] def publishStagedReplace(table: String, stagedDir: String,
-      baseVersion: Option[Long], keepDataVersions: Seq[Long]): Long = {
-    val (fs, root) = fsFor(table)
-    protocolFor(fs, table, "publishStagedReplace") match {
-      case RenameCommit => ()
-      case CreateCommit => sys.error(
-        s"publishStagedReplace($table): staged-dir publish renames — " +
-          "under the create protocol row-level writes claim their " +
-          "version up front (claimReplaceVersion/publishClaimedReplace)")
-    }
-    commitStaged(fs, root, new Path(stagedDir))(
-      replaceContent(fs, root, table, "publishStagedReplace",
-        baseVersion, keepDataVersions))
-  }
-
-  /** CREATE-protocol face of the row-level write: claim the target
-    * version up front so executors write DIRECTLY into `v=N` (no
-    * staging dir, no rename anywhere). Abort = [[abandonClaimOn]]. */
+  /** The row-level write claims its target version up front so
+    * executors write DIRECTLY into `v=N` (no staging dir, no rename
+    * anywhere). Publish = [[publishClaimedReplace]] /
+    * [[publishClaimedReplaceBranch]]; abort = [[abandonClaimOn]]. */
   private[graft] def claimReplaceVersion(table: String): Long = {
     val (fs, root) = fsFor(table)
     claimVersion(fs, root, table)
@@ -1808,22 +1390,6 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       manifestContent(keepDataVersions :+ next, next, op = "replace")
     }
 
-  private[graft] def publishStagedReplaceBranch(table: String,
-      stagedDir: String, branchName: String, baseHead: Option[Long],
-      keepDataVersions: Seq[Long]): Long = {
-    val (fs, root) = fsFor(table)
-    protocolFor(fs, table, "publishStagedReplaceBranch") match {
-      case RenameCommit => ()
-      case CreateCommit => sys.error(
-        s"publishStagedReplaceBranch($table): staged-dir publish " +
-          "renames — under the create protocol row-level writes claim " +
-          "their version up front (publishClaimedReplaceBranch)")
-    }
-    commitStaged(fs, root, new Path(stagedDir), Some(branchName))(
-      replaceBranchContent(fs, root, table, "publishStagedReplaceBranch",
-        branchName, baseHead, keepDataVersions))
-  }
-
   private[graft] def publishClaimedReplaceBranch(table: String, v: Long,
       branchName: String, baseHead: Option[Long],
       keepDataVersions: Seq[Long]): Long = {
@@ -1869,19 +1435,18 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * (pre-r14 the marker lived only in its own manifest, and a
     * compaction followed by expire(keepLast=1) would re-admit a
     * crash-redelivered batch — the r13 advice finding). */
-  /** Thrown inside the commit lock when the batch id turns out to be
-    * already committed — the data was staged by then, so the commit
-    * aborts (stage cleaned) and the caller reports the no-op. */
+  /** Thrown at publish when the batch id turns out to be already
+    * committed — the data was written by then, so the commit aborts
+    * (claim abandoned) and the caller reports the no-op. */
   private final class DuplicateBatch extends RuntimeException
 
   def appendBatch(df: DataFrame, table: String,
       batchId: Long): Option[Long] = {
     val (fs, root) = fsFor(table)
-    val proto = protocolFor(fs, table, "appendBatch")
     if (lastStreamBatchOn(fs, root).exists(_ >= batchId)) None
     else {
-      // RE-CHECKED at publish time (commit lock / claim order): the
-      // pre-stage check above is only an optimization — two racing
+      // RE-CHECKED at publish time (claim order): the pre-write check
+      // above is only an optimization — two racing
       // deliveries of one batch id (zombie pre-restart thread + the
       // restarted query) could both pass it, and exactly one may commit
       val content = (vs: Seq[Long], next: Long) => {
@@ -1893,12 +1458,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         manifestContent(dirs, next, Seq(s"batch=$batchId"),
           op = "append")
       }
-      try Some(proto match {
-        case RenameCommit =>
-          commitStaged(fs, root, stageData(df, root, table))(content)
-        case CreateCommit =>
-          commitCreate(fs, root, table, df)(content)
-      })
+      try Some(commitData(fs, root, table, df)(content))
       catch { case _: DuplicateBatch => None }
     }
   }
@@ -2113,11 +1673,9 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * current manifest already carries a file list). */
   def rewriteManifests(table: String): Option[Long] = {
     val (fs, root) = fsFor(table)
-    val proto = protocolFor(fs, table, "rewriteManifests")
     // gathers the file list for the snapshot CURRENT at gather time and
     // returns the manifest content (sans schema line), re-validating at
-    // publish that the snapshot hasn't moved — the two protocols share
-    // the computation, only the lock/claim discipline differs
+    // publish that the snapshot hasn't moved
     def contentFor(base: Long, dirVersions: Seq[Long])
         : (Seq[Long], Long) => String = {
       val rootPrefix = root.toString + "/"
@@ -2168,17 +1726,16 @@ object VersionedTable extends org.apache.spark.internal.Logging {
           .mkString("", "\n", "\n")
       }
     }
-    // gather OUTSIDE the lock (under CREATE, the claim-order publish
-    // wait must not run under it); contentFor revalidates the base at
-    // publish, so a concurrent commit is a loud refusal, never a
-    // manifest for a moved snapshot
+    // gather OUTSIDE the lock (the claim-order publish wait must not
+    // run under it); contentFor revalidates the base at publish, so a
+    // concurrent commit is a loud refusal, never a manifest for a moved
+    // snapshot
     val vs = versionsOn(fs, root)
     require(vs.nonEmpty, s"rewriteManifests on $table: no snapshot")
     val dirVersions = dataVersionsOn(fs, root, vs.last)
     if (dirVersions.size <= 1 ||
         manifestFilesOn(fs, root, vs.last).isDefined) None
-    else Some(commitMeta(fs, root, table, proto)(
-      contentFor(vs.last, dirVersions)))
+    else Some(commitMeta(fs, root, table)(contentFor(vs.last, dirVersions)))
   }
 
   private def parseFiles(content: String): Option[Seq[String]] =
@@ -2260,9 +1817,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   // snapshot while dailies expire". Tags resolve anywhere a version
   // does: `VERSION AS OF 'name'` through the catalog, the graft_version
   // TVF, and [[tagVersion]] for the API. Tag files are written by
-  // CONDITIONAL CREATE under both protocols — create-if-absent is the
-  // natural primitive for an immutable ref, and it is object-store
-  // native.
+  // CONDITIONAL CREATE — create-if-absent is the natural primitive for
+  // an immutable ref, and it is object-store native.
 
   private def tagPath(root: Path, name: String): Path =
     new Path(manifestDir(root), s".tag-$name")
@@ -2285,11 +1841,11 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   def createTag(table: String, name: String,
       version: Option[Long] = None): Long = {
     val (fs, root) = fsFor(table)
-    protocolFor(fs, table, "createTag")
     requireValidTagName(name)
     withCommitLock(root) {
       val vs = versionsOn(fs, root)
       require(vs.nonEmpty, s"no versions in $table")
+      probeConditionalCreate(fs, root, table)
       val v = version.getOrElse(vs.last)
       require(vs.contains(v), s"version $v not retained in $table")
       require(!fs.exists(tagPath(root, name)),
@@ -2302,10 +1858,9 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       require(!fs.exists(branchManifestDir(root, name)),
         s"'$name' already names a BRANCH on $table — refs share one " +
           "namespace")
-      val out = fs.create(tagPath(root, name), false)
-      try out.write(s"$v\n${System.currentTimeMillis()}\n"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      graft.util.Fs.createNew(fs, tagPath(root, name),
+        s"$v\n${System.currentTimeMillis()}\n"
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       v
     }
   }
@@ -2313,11 +1868,11 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   /** Drop a tag; its snapshot becomes expirable again. */
   def dropTag(table: String, name: String): Unit = {
     val (fs, root) = fsFor(table)
-    protocolFor(fs, table, "dropTag")
     requireValidTagName(name)
     withCommitLock(root) {
       require(fs.exists(tagPath(root, name)),
         s"no tag '$name' on $table")
+      probeConditionalCreate(fs, root, table)
       fs.delete(tagPath(root, name), false)
     }
   }
@@ -2384,20 +1939,19 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * string must resolve unambiguously). */
   def createBranch(table: String, name: String): Long = {
     val (fs, root) = fsFor(table)
-    protocolFor(fs, table, "createBranch")
     requireValidTagName(name)
     withCommitLock(root) {
       val vs = versionsOn(fs, root)
       require(vs.nonEmpty, s"no versions in $table")
+      probeConditionalCreate(fs, root, table)
       require(tagVersion(table, name).isEmpty,
         s"'$name' already names a TAG on $table — refs share one namespace")
       val dir = branchManifestDir(root, name)
       require(!fs.exists(dir), s"branch '$name' already exists on $table")
       fs.mkdirs(dir)
-      val out = fs.create(new Path(dir, ".base"), false)
-      try out.write(s"${vs.last}\n${System.currentTimeMillis()}\n"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      graft.util.Fs.createNew(fs, new Path(dir, ".base"),
+        s"${vs.last}\n${System.currentTimeMillis()}\n"
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       vs.last
     }
   }
@@ -2436,33 +1990,19 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * the staging half of write-audit-publish. */
   def appendToBranch(df: DataFrame, table: String, name: String): Long = {
     val (fs, root) = fsFor(table)
-    val proto = protocolFor(fs, table, "appendToBranch")
-    branchBaseOn(fs, root, name) // loud existence check before staging
-    val content = (_: Seq[Long], next: Long) =>
+    branchBaseOn(fs, root, name) // loud existence check before writing
+    commitData(fs, root, table, df, Some(name))((_, next) =>
       manifestContent(branchHeadDirsOn(fs, root, name) :+ next, next,
-        op = "append")
-    proto match {
-      case RenameCommit =>
-        commitStaged(fs, root, stageData(df, root, table), Some(name))(content)
-      case CreateCommit =>
-        commitCreate(fs, root, table, df, Some(name))(content)
-    }
+        op = "append"))
   }
 
   /** Replace a BRANCH's content wholesale (the full-recompute WAP
     * shape): the branch head becomes exactly `df`. */
   def writeToBranch(df: DataFrame, table: String, name: String): Long = {
     val (fs, root) = fsFor(table)
-    val proto = protocolFor(fs, table, "writeToBranch")
     branchBaseOn(fs, root, name)
-    val content = (_: Seq[Long], next: Long) =>
-      manifestContent(Seq(next), next, op = "overwrite")
-    proto match {
-      case RenameCommit =>
-        commitStaged(fs, root, stageData(df, root, table), Some(name))(content)
-      case CreateCommit =>
-        commitCreate(fs, root, table, df, Some(name))(content)
-    }
+    commitData(fs, root, table, df, Some(name))((_, next) =>
+      manifestContent(Seq(next), next, op = "overwrite"))
   }
 
   /** Read a BRANCH head (the audit half of write-audit-publish):
@@ -2562,8 +2102,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * The branch stays; drop it when the audit cycle is done. */
   def fastForward(table: String, name: String): Long = {
     val (fs, root) = fsFor(table)
-    val proto = protocolFor(fs, table, "fastForward")
-    val content = (vs: Seq[Long], next: Long) => {
+    commitMeta(fs, root, table) { (vs, next) =>
       val (base, _) = branchBaseOn(fs, root, name)
       require(vs.lastOption.contains(base),
         s"fast_forward('$name') on $table: main is at snapshot " +
@@ -2576,7 +2115,6 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       manifestContent(branchHeadDirsOn(fs, root, name), next,
         carryBatchLine(fs, root), op = "fast-forward")
     }
-    commitMeta(fs, root, table, proto)(content)
   }
 
   /** Drop a branch, reclaiming its EXCLUSIVE data dirs inline (dirs
@@ -2589,11 +2127,11 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * neither wait out nor cold-reap. */
   def dropBranch(table: String, name: String): Unit = {
     val (fs, root) = fsFor(table)
-    protocolFor(fs, table, "dropBranch")
     requireValidTagName(name)
     withCommitLock(root) {
       require(fs.exists(branchManifestDir(root, name)),
         s"no branch '$name' on $table")
+      probeConditionalCreate(fs, root, table)
       val mine = branchVersionsOn(fs, root, name).flatMap { v =>
         parseDirVersions(graft.util.Fs.readSmallFileFs(fs,
           new Path(branchManifestDir(root, name), v.toString)), v)
@@ -2627,11 +2165,11 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   def expireBranchSnapshots(table: String, name: String,
       keepLast: Int, olderThanMillis: Option[Long] = None): Seq[Long] = {
     val (fs, root) = fsFor(table)
-    protocolFor(fs, table, "expireBranchSnapshots")
     requireValidTagName(name)
     withCommitLock(root) {
       require(fs.exists(branchManifestDir(root, name)),
         s"no branch '$name' on $table")
+      probeConditionalCreate(fs, root, table)
       val bvs = branchVersionsOn(fs, root, name)
       // `older_than` (Iceberg's max-ref-age sibling): additionally keep
       // everything committed at-or-after the timestamp — the newest
@@ -2768,7 +2306,6 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * readable until [[expire]]d. Returns the new current version. */
   def rollback(table: String, toVersion: Long): Long = {
     val (fs, root) = fsFor(table)
-    val proto = protocolFor(fs, table, "rollback")
     // content computed from the FRESH version list at publish time;
     // single-dir targets keep the pre-r13 `data=K` form (same bytes a
     // pre-append reader of this layout understands); multi-dir targets
@@ -2776,7 +2313,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     // The redirect serves old DATA under the CURRENT declared schema
     // (evolved columns null-fill) — rollback restores content, not
     // schema, matching Iceberg's rollback_to_snapshot.
-    val content = (vs: Seq[Long], _: Long) => {
+    commitMeta(fs, root, table) { (vs, _) =>
       require(vs.contains(toVersion),
         s"version $toVersion not retained in $table")
       val target = dataVersionsOn(fs, root, toVersion)
@@ -2787,7 +2324,6 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         "op=rollback") ++
         carryBatchLine(fs, root)).mkString("", "\n", "\n")
     }
-    commitMeta(fs, root, table, proto)(content)
   }
 
   /** Logical-plan builder for the `graft_version('table'[, version])` SQL
@@ -3035,9 +2571,9 @@ object VersionedTable extends org.apache.spark.internal.Logging {
 
   def expire(table: String, keepLast: Int): Seq[Long] = {
     val (fs, root) = fsFor(table)
-    protocolFor(fs, table, "expire") // deletes are protocol-neutral; this validates scheme/conf
     withCommitLock(root) {
       val vs = versionsOn(fs, root)
+      if (vs.nonEmpty) probeConditionalCreate(fs, root, table)
       val pinned = expiryProofOn(fs, root)
       expireDrop(fs, root, vs, vs.dropRight(keepLast).filterNot(pinned))
     }
@@ -3051,9 +2587,9 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   def expireOlderThan(table: String, olderThanMillis: Long,
       retainLast: Int = 1): Seq[Long] = {
     val (fs, root) = fsFor(table)
-    protocolFor(fs, table, "expireOlderThan")
     withCommitLock(root) {
       val vs = versionsOn(fs, root)
+      if (vs.nonEmpty) probeConditionalCreate(fs, root, table)
       val guarded = vs.takeRight(math.max(1, retainLast)).toSet ++
         expiryProofOn(fs, root) // tags + branch fork bases
       val drop = vs.filter(v =>
@@ -3135,37 +2671,12 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   // INSERT of zero rows) stay readable and the multi-dir footer
   // sampling of append snapshots is skipped entirely.
 
-  private def tableMetaPath(root: Path): Path =
-    new Path(manifestDir(root), ".table")
-
-  /** The CURRENT table-meta file. Under the rename protocol `.table` is
-    * rewritten in place (atomic rename); under the CREATE protocol a
-    * schema evolution writes a fresh GENERATION `.table.gK` by
-    * conditional create (object stores cannot atomically overwrite
-    * without a CAS) — the newest generation wins, `.table` is the
-    * implicit generation -1. Resolution is one listing of `_versions`,
-    * the same small dir every read already lists. */
-  private def tableMetaGen(name: String): Option[Long] =
-    if (name == ".table") Some(-1L)
-    else if (name.startsWith(".table.g")) {
-      val g = name.stripPrefix(".table.g")
-      if (g.nonEmpty && g.forall(_.isDigit)) Some(g.toLong) else None
-    } else None
-
-  private def currentTableMetaOn(fs: FileSystem,
-      root: Path): Option[(Path, Long)] = {
-    val dir = manifestDir(root)
-    if (!fs.exists(dir)) None
-    else {
-      val metas = fs.listStatus(dir).toSeq.map(_.getPath.getName)
-        .flatMap(n => tableMetaGen(n).map(n -> _))
-      if (metas.isEmpty) None
-      else {
-        val (name, gen) = metas.maxBy(_._2)
-        Some((new Path(dir, name), gen))
-      }
-    }
-  }
+  // The CURRENT table meta is the newest generation ([[currentMetaOn]]):
+  // object stores cannot atomically overwrite without a CAS, so a schema
+  // evolution writes the NEXT generation `.table.gK` by conditional
+  // create and the newest wins; `.table` is generation -1 (tables
+  // written by older code may also carry a `.table` rewritten in place,
+  // read the same way).
 
   /** Declare a table: schema + optional identity partition columns.
     * Refuses to redeclare (schema evolution is a deliberate non-goal of
@@ -3175,7 +2686,6 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   def create(table: String, schema: org.apache.spark.sql.types.StructType,
       partitionCols: Seq[String] = Nil): Unit = {
     val (fs, root) = fsFor(table)
-    val proto = protocolFor(fs, table, "create")
     require(storedMeta(table).isEmpty,
       s"table $table is already declared; this layer does not evolve " +
         "schemas (drop and recreate, or write a new table)")
@@ -3190,25 +2700,17 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       s"partitioned table $table: a column named 'v' collides with the " +
         "snapshot directory level (v=N) in partition discovery — rename " +
         "the column or leave the table unpartitioned")
-    fs.mkdirs(manifestDir(root))
-    val content = s"partition=${partitionCols.mkString(",")}\n${schema.json}\n"
-    val bytes = content.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    proto match {
-      case RenameCommit =>
-        graft.util.Fs.writeFileAtomicFs(fs, tableMetaPath(root), bytes)
-      case CreateCommit =>
-        // conditional create: two racing declarations — one wins, the
-        // other fails loudly (the storedMeta pre-check above is only a
-        // fast path)
-        val out = fs.create(tableMetaPath(root), false)
-        try out.write(bytes) finally out.close()
-    }
+    probeConditionalCreate(fs, root, table)
+    // conditional create: two racing declarations — one wins, the other
+    // fails loudly (the storedMeta pre-check above is only a fast path)
+    writeNextMetaGen(fs, root, ".table",
+      s"partition=${partitionCols.mkString(",")}\n${schema.json}\n")
   }
 
   private def storedMeta(table: String)
       : Option[(Seq[String], org.apache.spark.sql.types.StructType)] = {
     val (fs, root) = fsFor(table)
-    currentTableMetaOn(fs, root).map { case (p, _) =>
+    currentMetaOn(fs, root, ".table").map { case (p, _) =>
       val lines = graft.util.Fs.readSmallFileFs(fs, p).linesIterator.toSeq
       val cols = lines.head.stripPrefix("partition=").split(",")
         .toSeq.map(_.trim).filter(_.nonEmpty)
@@ -3249,7 +2751,6 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   def addColumns(spark: SparkSession, table: String,
       newFields: Seq[org.apache.spark.sql.types.StructField]): Unit = {
     val (fs, root) = fsFor(table)
-    val proto = protocolFor(fs, table, "addColumns")
     val (pcols, base) = storedMeta(table).getOrElse {
       val s = read(spark, table).schema
       create(table, s)
@@ -3269,21 +2770,9 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         "snapshot directory level (v=N) in partition discovery")
     val evolved =
       org.apache.spark.sql.types.StructType(base.fields ++ newFields)
-    val content = s"partition=${pcols.mkString(",")}\n${evolved.json}\n"
-    val bytes = content.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    proto match {
-      case RenameCommit =>
-        graft.util.Fs.writeFileAtomicFs(fs, tableMetaPath(root), bytes)
-      case CreateCommit =>
-        // object stores can't atomically overwrite `.table` — write the
-        // NEXT GENERATION by conditional create; two racing evolutions
-        // collide on the generation name and the loser fails loudly
-        // (never a silent lost update)
-        val gen = currentTableMetaOn(fs, root).map(_._2).getOrElse(-1L) + 1L
-        val out = fs.create(
-          new Path(manifestDir(root), s".table.g$gen"), false)
-        try out.write(bytes) finally out.close()
-    }
+    probeConditionalCreate(fs, root, table)
+    writeNextMetaGen(fs, root, ".table",
+      s"partition=${pcols.mkString(",")}\n${evolved.json}\n")
   }
 
   /** Commit an EMPTY snapshot (SQL TRUNCATE TABLE): history and prior

@@ -1058,9 +1058,8 @@ object CdcQueries {
 
   /** Object-store-native commits (r14): the snapshot lifecycle — a full
     * write, two by-reference appends, a metadata-only manifest collapse
-    * — committed through the CREATE protocol
-    * (`spark.graft.commit.protocol=create`): versions are claimed by
-    * CONDITIONAL CREATE of a marker (`S3 If-None-Match PUT`), data
+    * — committed through the one commit protocol: versions are claimed
+    * by CONDITIONAL CREATE of a marker (`S3 If-None-Match PUT`), data
     * writes directly into the claimed `v=N`, manifests publish by
     * conditional create — ZERO renames on the commit path (the
     * rename-refusing-filesystem proof lives in CreateProtocolSpec; this
@@ -1078,28 +1077,20 @@ object CdcQueries {
         .createTempDirectory("graft-rollback-").toString + "/cc"
       val li = t(s, dir, "lineitem")
         .select("l_orderkey", "l_returnflag", "l_linestatus", "l_quantity")
-      val prev = s.conf.getOption(VersionedTable.ProtocolConfKey)
-      s.conf.set(VersionedTable.ProtocolConfKey, "create")
-      try {
-        VersionedTable.write(li.filter(col("l_orderkey") % 3 === 0), t0)
-        VersionedTable.append(li.filter(col("l_orderkey") % 3 === 1), t0)
-        VersionedTable.append(li.filter(col("l_orderkey") % 3 === 2), t0)
-        val dirs = VersionedTable.dataDirs(t0).map(_.split("/v=").last)
-        require(dirs == Seq("1", "2", "3"),
-          s"create-protocol appends must keep prior dirs by reference " +
-            s"([1,2,3]); got $dirs")
-        require(VersionedTable.rewriteManifests(t0).contains(4L),
-          "rewrite_manifests must commit the collapse as v4")
-        require(VersionedTable.dataFiles(t0).exists(_.nonEmpty),
-          "the collapsed manifest must carry a pre-resolved file list")
-        val (fs, vroot) = graft.util.Fs.fsFor(s"$t0/_versions")
-        require(!fs.listStatus(vroot).exists(
-          _.getPath.getName.startsWith(".claim-")),
-          "create-protocol commits must clean their claim markers")
-      } finally prev match {
-        case Some(p) => s.conf.set(VersionedTable.ProtocolConfKey, p)
-        case None => s.conf.unset(VersionedTable.ProtocolConfKey)
-      }
+      VersionedTable.write(li.filter(col("l_orderkey") % 3 === 0), t0)
+      VersionedTable.append(li.filter(col("l_orderkey") % 3 === 1), t0)
+      VersionedTable.append(li.filter(col("l_orderkey") % 3 === 2), t0)
+      val dirs = VersionedTable.dataDirs(t0).map(_.split("/v=").last)
+      require(dirs == Seq("1", "2", "3"),
+        s"appends must keep prior dirs by reference ([1,2,3]); got $dirs")
+      require(VersionedTable.rewriteManifests(t0).contains(4L),
+        "rewrite_manifests must commit the collapse as v4")
+      require(VersionedTable.dataFiles(t0).exists(_.nonEmpty),
+        "the collapsed manifest must carry a pre-resolved file list")
+      val (fs, vroot) = graft.util.Fs.fsFor(s"$t0/_versions")
+      require(!fs.listStatus(vroot).exists(
+        _.getPath.getName.startsWith(".claim-")),
+        "commits must clean their claim markers")
       t0
     })
     VersionedTable.read(s, table)

@@ -638,17 +638,6 @@ object GraftProcedureCatalog {
         if (input.isNullAt(3)) None else Some(input.getLong(3) / 1000L)))
   }
 
-  private object SetCommitProtocol extends MaintProc("set_commit_protocol",
-    "deliberately migrate a table's pinned commit protocol " +
-      "(rename | create) — the pin is set at first commit and a " +
-      "disagreeing session conf is refused; do not run concurrently " +
-      "with live writers (r15)",
-    Array(p("table", StringType), p("protocol", StringType))) {
-    override protected def run(spark: SparkSession,
-        input: InternalRow): Seq[Maintenance.Report] =
-      Seq(Maintenance.setCommitProtocol(str(input, 0), str(input, 1)))
-  }
-
   private object SetClaimTtl extends MaintProc("set_claim_ttl",
     "deliberately migrate a table's pinned claim-liveness TTL " +
       "(millis) — pinned at first commit so committer heartbeats and " +
@@ -672,6 +661,5 @@ object GraftProcedureCatalog {
     "fast_forward" -> FastForward,
     "drop_branch" -> DropBranch,
     "expire_branch_snapshots" -> ExpireBranchSnapshots,
-    "set_commit_protocol" -> SetCommitProtocol,
     "set_claim_ttl" -> SetClaimTtl)
 }

@@ -166,17 +166,14 @@ final class GraftVersionedTable(
       .map(c => Expressions.identity(c)).toArray
 
   override def properties(): util.Map[String, String] = {
-    // surfaced by SHOW TBLPROPERTIES / DESCRIBE EXTENDED: the pinned
-    // commit protocol (r15) and the current snapshot — the two facts an
-    // operator checks before pointing a second writer at the table
+    // surfaced by SHOW TBLPROPERTIES / DESCRIBE EXTENDED, with the
+    // current snapshot
     val base = Map("location" -> root,
       "format" -> "parquet",
       "provider" -> "graft")
-    val pin = VersionedTable.commitProtocolOf(root)
-      .map("graft.commit-protocol" -> _)
     val cur = VersionedTable.latestVersion(root)
       .map(v => "graft.current-version" -> v.toString)
-    (base ++ pin ++ cur).asJava
+    (base ++ cur).asJava
   }
 
   override def capabilities(): util.Set[TableCapability] =
@@ -619,21 +616,21 @@ private final class GraftCowScan(
 }
 
 /** The write half of a group-based row-level operation (ReplaceData):
-  * the rewritten content lands as a NEW snapshot. Executors write into
-  * a UNIQUE dot-prefixed staging dir (never into `v=N` directly — a
-  * concurrent commit could own that name by the time this write
-  * finishes, and an abort must never be able to delete a published
-  * snapshot's data: the r13 advice finding). Unpartitioned tables ride
-  * Spark's own parquet BatchWrite; partitioned tables write their Hive
-  * layout DIRECTLY in the same single pass
-  * ([[org.apache.spark.sql.graft.PartitionedStagingWrite]] — r14,
-  * replacing the r13 stage-flat-then-re-lay second job that doubled
-  * the rewrite's write IO). The driver-side commit() publishes through
-  * [[VersionedTable.publishStagedReplace]]: claim `v=N` by rename,
-  * manifest carries the untouched dirs by reference, and the whole
-  * publish re-validates the base version under the commit lock — a
-  * lost race is a clean error with the staging dir the only thing
-  * cleaned up. */
+  * the rewritten content lands as a NEW snapshot. [[toBatch]] CLAIMS
+  * the target version up front ([[VersionedTable.claimReplaceVersion]])
+  * and executors write DIRECTLY into the claimed `v=N` — no staging dir,
+  * no rename anywhere on the commit path; the claim makes the name
+  * exclusive, so no concurrent commit can own it and an abort
+  * ([[VersionedTable.abandonClaimOn]]) deletes only the claimed dir and
+  * its marker, never a published snapshot's data. Unpartitioned tables
+  * ride Spark's own parquet BatchWrite; partitioned tables write their
+  * Hive layout in the same single pass
+  * ([[org.apache.spark.sql.graft.PartitionedStagingWrite]]). The
+  * driver-side commit() publishes through
+  * [[VersionedTable.publishClaimedReplace]] (or its branch twin): the
+  * manifest carries the untouched dirs by reference and the publish
+  * re-validates the base version — a lost race is a clean error with
+  * the claim the only thing cleaned up. */
 private final class GraftReplaceWrite(
     root: String,
     spark: SparkSession,
@@ -644,23 +641,8 @@ private final class GraftReplaceWrite(
     touchedDirs: () => Option[Set[Long]]) extends Write {
 
   override def toBatch: BatchWrite = {
-    val (fs, _) = graft.util.Fs.fsFor(root)
-    // CREATE protocol (r14): claim the target version UP FRONT and have
-    // executors write DIRECTLY into the claimed `v=N` — no staging dir,
-    // no rename anywhere on the commit path (the object-store shape);
-    // abort abandons the claim (deletes the claimed dir + marker, never
-    // anything another commit could own). RENAME protocol: stage under
-    // a unique dot-prefixed dir, publish claims `v=N` by rename.
-    val claimed = VersionedTable.protocolFor(fs, root, "rowLevelWrite") match {
-      case VersionedTable.CreateCommit =>
-        Some(VersionedTable.claimReplaceVersion(root))
-      case VersionedTable.RenameCommit => None
-    }
-    val dir = claimed match {
-      case Some(v) => s"$root/v=$v"
-      case None => s"$root/.replace-staging-" +
-        java.util.UUID.randomUUID().toString.take(8)
-    }
+    val claimed = VersionedTable.claimReplaceVersion(root)
+    val dir = s"$root/v=$claimed"
     if (partitionCols.isEmpty) flatBatch(dir, claimed)
     else partitionedBatch(dir, claimed)
   }
@@ -690,35 +672,22 @@ private final class GraftReplaceWrite(
     found
   }
 
-  private def publish(dir: String, claimed: Option[Long]): Unit =
-    if (provablyNoop(dir)) abortCleanup(dir, claimed)
-    else (target, claimed) match {
-      case (MainTarget(base), Some(v)) =>
-        VersionedTable.publishClaimedReplace(root, v, base,
+  private def publish(dir: String, claimed: Long): Unit =
+    if (provablyNoop(dir)) VersionedTable.abandonClaimOn(root, claimed)
+    else target match {
+      case MainTarget(base) =>
+        VersionedTable.publishClaimedReplace(root, claimed, base,
           keptDirVersions())
-      case (MainTarget(base), None) =>
-        VersionedTable.publishStagedReplace(root, dir, base,
-          keptDirVersions())
-      case (BranchTarget(b, head), Some(v)) =>
-        VersionedTable.publishClaimedReplaceBranch(root, v, b, head,
-          keptDirVersions())
-      case (BranchTarget(b, head), None) =>
-        VersionedTable.publishStagedReplaceBranch(root, dir, b, head,
+      case BranchTarget(b, head) =>
+        VersionedTable.publishClaimedReplaceBranch(root, claimed, b, head,
           keptDirVersions())
     }
 
-  private def abortCleanup(dir: String, claimed: Option[Long]): Unit =
-    claimed match {
-      case Some(v) => VersionedTable.abandonClaimOn(root, v)
-      case None => deleteDir(dir)
-    }
-
-  /** Unpartitioned: Spark's v2 parquet BatchWrite into the staging
-    * dir, op-column adaptation per row, publish by rename. */
-  private def flatBatch(stagingDir: String,
-      claimed: Option[Long]): BatchWrite = {
-    val staged = ParquetTable("graft-replace-staging", spark,
-      CaseInsensitiveStringMap.empty(), Seq(stagingDir),
+  /** Unpartitioned: Spark's v2 parquet BatchWrite into the claimed
+    * dir, op-column adaptation per row, publish by conditional create. */
+  private def flatBatch(dir: String, claimed: Long): BatchWrite = {
+    val staged = ParquetTable("graft-replace", spark,
+      CaseInsensitiveStringMap.empty(), Seq(dir),
       Some(info.schema()), classOf[ParquetFileFormat])
     val inner = staged.newWriteBuilder(info).build().toBatch
 
@@ -745,27 +714,24 @@ private final class GraftReplaceWrite(
           case GraftNoRowsMessage => false
           case _ => true
         })
-        // publish: the snapshot becomes visible only here (rename: the
-        // staged dir is consumed into v=N; create: the claimed dir's
-        // manifest lands)
-        publish(stagingDir, claimed)
+        // publish: the snapshot becomes visible only here, when the
+        // claimed dir's manifest lands
+        publish(dir, claimed)
       }
 
       override def abort(messages: Array[WriterCommitMessage]): Unit = {
         inner.abort(messages)
-        abortCleanup(stagingDir, claimed)
+        VersionedTable.abandonClaimOn(root, claimed)
       }
     }
   }
 
   /** Partitioned: ONE distributed pass lays the Hive structure inside
-    * the staging dir; commit reconciles the listing against the task
-    * messages (exactly-once against retried attempts) and publishes by
-    * rename. */
-  private def partitionedBatch(stagingDir: String,
-      claimed: Option[Long]): BatchWrite = {
+    * the claimed dir; commit reconciles the listing against the task
+    * messages (exactly-once against retried attempts) and publishes. */
+  private def partitionedBatch(dir: String, claimed: Long): BatchWrite = {
     import org.apache.spark.sql.graft.PartitionedStagingWrite
-    val factory = PartitionedStagingWrite.factory(spark, stagingDir,
+    val factory = PartitionedStagingWrite.factory(spark, dir,
       info.schema(), partitionCols)
 
     new BatchWrite {
@@ -773,18 +739,13 @@ private final class GraftReplaceWrite(
           pi: PhysicalWriteInfo): DataWriterFactory = factory
 
       override def commit(messages: Array[WriterCommitMessage]): Unit = {
-        PartitionedStagingWrite.reconcile(stagingDir, messages)
-        publish(stagingDir, claimed)
+        PartitionedStagingWrite.reconcile(dir, messages)
+        publish(dir, claimed)
       }
 
       override def abort(messages: Array[WriterCommitMessage]): Unit =
-        abortCleanup(stagingDir, claimed)
+        VersionedTable.abandonClaimOn(root, claimed)
     }
-  }
-
-  private def deleteDir(d: String): Unit = {
-    val (fs, p) = graft.util.Fs.fsFor(d)
-    fs.delete(p, true)
   }
 }
 

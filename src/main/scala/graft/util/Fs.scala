@@ -93,8 +93,8 @@ object Fs {
     * every rename-based commit in the engine shares this one set.
     * `graftnr` is the test-only simulated object store
     * (`graft.util.NoCommitRenameFileSystem`): a local filesystem whose
-    * rename REFUSES commit-protocol targets, so the create-protocol
-    * specs prove structurally that no commit ever renames. */
+    * rename REFUSES versioned-table commit targets, so the commit specs
+    * prove structurally that no commit ever renames. */
   val NonAtomicRenameSchemes: Set[String] =
     Set("s3", "s3a", "s3n", "gs", "wasb", "wasbs", "abfs", "abfss",
       "oss", "cos", "swift", "graftnr")
@@ -177,6 +177,49 @@ object Fs {
         try renameOrThrow(fs, tmp, path)
         catch { case e: Throwable => fs.delete(tmp, false); throw e }
       }
+    }
+
+  /** Name prefix of [[createNew]]'s temp sibling on `file:` (a crash
+    * between the temp write and the link leaves one behind). */
+  val CreateNewTmpPrefix = ".tmp-"
+
+  /** Create-if-absent of a small file: exactly one of any number of
+    * racing callers on one path succeeds, every other one throws a
+    * `FileAlreadyExistsException` (java.nio's on `file:`, whatever the
+    * connector raises elsewhere). The one primitive every versioned-table
+    * commit rests on: claim markers, manifests, table metas, the
+    * liveness pin and tags.
+    *
+    * On `file:` Hadoop cannot be trusted with this: in Hadoop 3.4
+    * `RawLocalFileSystem.create(p, overwrite = false)` is `exists()`
+    * followed by a plain open, so two racers can both "create" and the
+    * later writer silently wins. Local paths therefore go through
+    * java.nio: the bytes land in a uniquely named sibling
+    * (`CREATE_NEW`, forced), which is then hard-linked onto `p`
+    * (`link(2)` fails with EEXIST, the same O_EXCL exclusivity) — so
+    * the file appears with its whole content at once and a reader never
+    * sees it half-written (a local filesystem without hard links refuses
+    * the create loudly). Missing parent directories are created first,
+    * as Hadoop's `create` does, so a table root that was deleted (a
+    * DROP TABLE) can be written again. Every other scheme uses
+    * `fs.create(p, false)`, whose atomicity is the connector's (HDFS
+    * namenode; a conditional PUT on object stores, which callers must
+    * establish before relying on it). */
+  def createNew(fs: FileSystem, p: HPath, bytes: Array[Byte]): Unit =
+    if (isLocal(fs)) {
+      import java.nio.file.StandardOpenOption.{CREATE_NEW, WRITE}
+      val target = localPath(p)
+      Files.createDirectories(target.getParent)
+      val tmp = target.resolveSibling(CreateNewTmpPrefix +
+        s"${java.util.UUID.randomUUID()}-${target.getFileName}")
+      val ch = java.nio.channels.FileChannel.open(tmp, CREATE_NEW, WRITE)
+      try { ch.write(java.nio.ByteBuffer.wrap(bytes)); ch.force(true) }
+      finally ch.close()
+      try Files.createLink(target, tmp)
+      finally Files.deleteIfExists(tmp)
+    } else {
+      val out = fs.create(p, false)
+      try out.write(bytes) finally out.close()
     }
 
   /** Small-file read through a Hadoop FileSystem (UTF-8). */

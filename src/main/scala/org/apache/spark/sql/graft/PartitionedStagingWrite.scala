@@ -33,10 +33,10 @@ import org.apache.spark.util.SerializableConfiguration
   *      mutate its own dot-prefixed dir — invisible to Spark reads
   *      forever, even if it survives into the published `v=N`;
   *   2. a failed attempt's abort deletes everything it wrote;
-  *   3. the driver's commit RECONCILES the staging dir against the
+  *   3. the driver's commit RECONCILES the claimed dir against the
   *      union of the commit messages' file lists — stray visible
   *      files and leftover inflight dirs from attempts that died
-  *      without aborting are deleted before the publish rename, so
+  *      without aborting are deleted before the manifest publishes, so
   *      the committed snapshot contains exactly the files of the
   *      authorized attempts.
   *

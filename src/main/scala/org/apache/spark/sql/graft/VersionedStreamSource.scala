@@ -202,10 +202,8 @@ object VersionedStreamProvider {
       val resolved = resolveStart(table, parameters)
       fs.mkdirs(p.getParent)
       try {
-        val out = fs.create(p, false)
-        try out.write(resolved.map(_.toString).getOrElse("none")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
+        graft.util.Fs.createNew(fs, p, resolved.map(_.toString)
+          .getOrElse("none").getBytes(java.nio.charset.StandardCharsets.UTF_8))
         resolved
       } catch {
         // lost a concurrent-first-start race: the winner's pin rules

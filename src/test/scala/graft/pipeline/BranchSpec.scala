@@ -382,22 +382,19 @@ class BranchSpec extends SparkSpec {
   }
 
   test("the whole WAP flow runs under the CREATE protocol") {
-    spark.conf.set(VersionedTable.ProtocolConfKey, "create")
-    try {
-      val table = Files.createTempDirectory("graft_br6_").toString + "/t"
-      VersionedTable.write(Seq(1).toDF("x"), table)
-      VersionedTable.createBranch(table, "wap")
-      VersionedTable.appendToBranch(Seq(2).toDF("x"), table, "wap")
-      assert(VersionedTable.read(spark, table).count() == 1)
-      assert(VersionedTable.readBranch(spark, table, "wap").count() == 2)
-      VersionedTable.fastForward(table, "wap")
-      assert(VersionedTable.read(spark, table).collect()
-        .map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
-      VersionedTable.dropBranch(table, "wap")
-      // no claim debris anywhere
-      val (fs, root) = graft.util.Fs.fsFor(s"$table/_versions")
-      assert(!fs.listStatus(root).exists(
-        _.getPath.getName.startsWith(".claim-")))
-    } finally spark.conf.unset(VersionedTable.ProtocolConfKey)
+    val table = Files.createTempDirectory("graft_br6_").toString + "/t"
+    VersionedTable.write(Seq(1).toDF("x"), table)
+    VersionedTable.createBranch(table, "wap")
+    VersionedTable.appendToBranch(Seq(2).toDF("x"), table, "wap")
+    assert(VersionedTable.read(spark, table).count() == 1)
+    assert(VersionedTable.readBranch(spark, table, "wap").count() == 2)
+    VersionedTable.fastForward(table, "wap")
+    assert(VersionedTable.read(spark, table).collect()
+      .map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
+    VersionedTable.dropBranch(table, "wap")
+    // no claim debris anywhere
+    val (fs, root) = graft.util.Fs.fsFor(s"$table/_versions")
+    assert(!fs.listStatus(root).exists(
+      _.getPath.getName.startsWith(".claim-")))
   }
 }

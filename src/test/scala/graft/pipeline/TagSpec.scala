@@ -116,17 +116,14 @@ class TagSpec extends SparkSpec {
 
   test("tags work under the CREATE protocol and survive " +
       "remove_orphan_files") {
-    spark.conf.set(VersionedTable.ProtocolConfKey, "create")
-    try {
-      val table = Files.createTempDirectory("graft_tag4_").toString + "/t"
-      VersionedTable.write(Seq(1).toDF("x"), table)
-      VersionedTable.createTag(table, "cp")
-      VersionedTable.append(Seq(2).toDF("x"), table)
-      val rep = Maintenance.removeOrphans(spark, table)
-      assert(rep.ok, rep.detail)
-      assert(VersionedTable.tags(table) == Map("cp" -> 1L))
-      assert(VersionedTable.expire(table, keepLast = 1).isEmpty)
-      assert(VersionedTable.versions(table) == Seq(1L, 2L))
-    } finally spark.conf.unset(VersionedTable.ProtocolConfKey)
+    val table = Files.createTempDirectory("graft_tag4_").toString + "/t"
+    VersionedTable.write(Seq(1).toDF("x"), table)
+    VersionedTable.createTag(table, "cp")
+    VersionedTable.append(Seq(2).toDF("x"), table)
+    val rep = Maintenance.removeOrphans(spark, table)
+    assert(rep.ok, rep.detail)
+    assert(VersionedTable.tags(table) == Map("cp" -> 1L))
+    assert(VersionedTable.expire(table, keepLast = 1).isEmpty)
+    assert(VersionedTable.versions(table) == Seq(1L, 2L))
   }
 }

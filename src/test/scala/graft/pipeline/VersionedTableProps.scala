@@ -237,23 +237,8 @@ class VersionedTableProps extends SparkSpec {
     Seq(5L, 13L).foreach(runBranchModel(_, steps = 40))
   }
 
-  test("the SAME gate holds under the CREATE commit protocol (claims + " +
-      "conditional-create publishes instead of renames)") {
-    spark.conf.set(VersionedTable.ProtocolConfKey, "create")
-    try Seq(7L, 42L).foreach(runModel(_, steps = 30, withTags = false))
-    finally spark.conf.unset(VersionedTable.ProtocolConfKey)
-  }
-
   test("with tag ops mixed in: tag-guarded expiry and tag resolution " +
       "match the model at every step") {
     Seq(3L, 11L).foreach(runModel(_, steps = 30, withTags = true))
-  }
-
-  test("the BRANCH gate holds under the CREATE commit protocol (r16): " +
-      "claimed staging, branch publishes, retention, and drops " +
-      "interleave against the model") {
-    spark.conf.set(VersionedTable.ProtocolConfKey, "create")
-    try Seq(5L, 13L).foreach(runBranchModel(_, steps = 40))
-    finally spark.conf.unset(VersionedTable.ProtocolConfKey)
   }
 }

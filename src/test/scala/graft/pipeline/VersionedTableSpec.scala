@@ -29,6 +29,28 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.read(spark, table, Some(2L)).count() == 3)
   }
 
+  test("a root deleted out from under the JVM is written again from " +
+      "version 1, path-written and declared alike") {
+    import org.apache.spark.sql.types.StructType
+    val table = Files.createTempDirectory("graft_vt_re_").toString + "/t"
+    def rmRoot(): Unit = {
+      val (fs, root) = graft.util.Fs.fsFor(table)
+      assert(fs.delete(root, true))
+    }
+    VersionedTable.write(Seq(1, 2).toDF("x"), table)
+    VersionedTable.append(Seq(3).toDF("x"), table)
+    rmRoot()
+    assert(VersionedTable.write(Seq(4).toDF("x"), table) == 1L)
+    assert(VersionedTable.read(spark, table).collect().map(_.getInt(0))
+      .toSeq == Seq(4))
+    rmRoot()
+    VersionedTable.create(table, StructType.fromDDL("x INT"))
+    assert(VersionedTable.append(Seq(5).toDF("x"), table) == 1L)
+    assert(VersionedTable.versions(table) == Seq(1L))
+    assert(VersionedTable.read(spark, table).collect().map(_.getInt(0))
+      .toSeq == Seq(5))
+  }
+
   test("SQL time travel: graft_version TVF reads retained versions") {
     graft.expressions.GraftFunctions.register(spark)
     val table = Files.createTempDirectory("graft_vt3_").toString + "/t"
@@ -132,11 +154,12 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.read(spark, table).count() == 2)
     // the commit protocol really ran on the stub scheme's local tree
     assert(new java.io.File(s"$local/_versions/3").isFile)
-    // object-store scheme: every mutation refuses with the boundary named
+    // object-store scheme with no conditional-create signal: every
+    // mutation refuses with the boundary named
     val e = intercept[IllegalArgumentException] {
       VersionedTable.write(Seq(1).toDF("x"), "s3a:" + local)
     }
-    assert(e.getMessage.contains("atomic rename"), e.getMessage)
+    assert(e.getMessage.contains("CONDITIONAL PUT"), e.getMessage)
     intercept[IllegalArgumentException] {
       VersionedTable.rollback("s3a:" + local, 1L)
     }

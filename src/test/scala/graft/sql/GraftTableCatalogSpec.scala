@@ -160,6 +160,26 @@ class GraftTableCatalogSpec extends SparkSpec {
     }
   }
 
+  test("DROP TABLE then CREATE TABLE / CTAS of the same name in one " +
+      "session starts a fresh table at version 1") {
+    val w = java.nio.file.Files.createTempDirectory("graft_cat_").toString
+    val cat = freshCatalog(w)
+    Seq((1L, "x"), (2L, "y")).toDF("k", "v").createOrReplaceTempView("src_re")
+    spark.sql(s"CREATE TABLE $cat.r AS SELECT * FROM src_re")
+    spark.sql(s"INSERT INTO $cat.r VALUES (3, 'z')")
+    spark.sql(s"DROP TABLE $cat.r")
+    spark.sql(s"CREATE TABLE $cat.r (k BIGINT, v STRING)")
+    spark.sql(s"INSERT INTO $cat.r VALUES (7, 'q')")
+    assert(VersionedTable.versions(s"$w/r") == Seq(1L))
+    assert(spark.sql(s"SELECT k FROM $cat.r").collect()
+      .map(_.getLong(0)).toSeq == Seq(7L))
+    spark.sql(s"DROP TABLE $cat.r")
+    spark.sql(s"CREATE TABLE $cat.r AS SELECT * FROM src_re WHERE k = 2")
+    assert(VersionedTable.versions(s"$w/r") == Seq(1L))
+    assert(spark.sql(s"SELECT v FROM $cat.r").collect()
+      .map(_.getString(0)).toSeq == Seq("y"))
+  }
+
   test("DELETE FROM rewrites copy-on-write at dir granularity: " +
       "untouched dirs carry by reference, time travel keeps the rows") {
     val w = java.nio.file.Files.createTempDirectory("graft_cat_").toString
@@ -408,20 +428,21 @@ class GraftTableCatalogSpec extends SparkSpec {
     spark.sql(s"CREATE TABLE $cat.cc (k BIGINT, tag STRING)")
     spark.sql(s"INSERT INTO $cat.cc SELECT id, 'a' FROM range(0, 10)")
     val table = s"$w/cc"
-    // simulate a concurrent committer landing AFTER the rewrite's base
-    // was captured: publishStagedReplace must refuse
-    val stage = s"$table/.replace-staging-test"
-    spark.range(1).selectExpr("id AS k", "'x' AS tag")
-      .write.parquet(stage)
+    // a concurrent committer lands AFTER the rewrite's base (v1) was
+    // captured; the rewrite then claims its version and writes into it:
+    // the publish must refuse
     VersionedTable.append(
       spark.range(20, 22).selectExpr("id AS k", "'b' AS tag"), table)
+    val claimed = VersionedTable.claimReplaceVersion(table)
+    val dir = s"$table/v=$claimed"
+    spark.range(1).selectExpr("id AS k", "'x' AS tag").write.parquet(dir)
     val e = intercept[IllegalArgumentException] {
-      VersionedTable.publishStagedReplace(table, stage,
+      VersionedTable.publishClaimedReplace(table, claimed,
         baseVersion = Some(1L), keepDataVersions = Nil)
     }
     assert(e.getMessage.contains("concurrent commit"))
-    // loser cleanup: the staged dir is gone, the appender's commit stands
-    assert(!new java.io.File(stage).exists())
+    // loser cleanup: the claimed dir is gone, the appender's commit stands
+    assert(!new java.io.File(dir).exists())
     assert(VersionedTable.read(spark, table).count() == 12L)
     assert(VersionedTable.versions(table) == Seq(1L, 2L))
   }
@@ -535,10 +556,9 @@ class GraftTableCatalogSpec extends SparkSpec {
     assert(spark.sql(s"SELECT operation FROM $cat.mt.history " +
         "ORDER BY version").collect().map(_.getString(0)).toSeq ==
       Seq("append", "append", "rollback"))
-    // SHOW TBLPROPERTIES surfaces the protocol pin + current snapshot
+    // SHOW TBLPROPERTIES surfaces the current snapshot
     val props = spark.sql(s"SHOW TBLPROPERTIES $cat.mt").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(props.get("graft.commit-protocol").contains("rename"))
     assert(props.get("graft.current-version").contains("3"))
     // a plain parquet dir has no snapshots to serve
     Seq((1L, "x")).toDF("k", "v").write.parquet(s"$w/plainmt")

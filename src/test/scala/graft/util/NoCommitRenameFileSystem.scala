@@ -7,20 +7,20 @@ import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** Test-only SIMULATED OBJECT STORE: a local filesystem under the
-  * scheme `graftnr` ("no rename") whose `rename` REFUSES every
-  * commit-protocol target — a `v=N` data dir at any level, or anything
-  * inside a `_versions` metadata dir. Running the whole versioned-table
-  * verb suite on it proves STRUCTURALLY that the CREATE commit protocol
-  * performs zero renames on its commit path, which is exactly the
-  * property a conditional-PUT object store (S3 If-None-Match, GCS
-  * preconditions, Azure ETag) needs. Data-FILE renames (task commits
-  * inside a claimed dir — FileOutputCommitter and the partitioned
-  * staging writers) stay allowed: real object stores implement those as
-  * copies, slow but correct, and deployments swap in a zero-rename
-  * committer without touching the table layer. The scheme is listed in
-  * [[Fs.NonAtomicRenameSchemes]], so `auto`-protocol commits refuse it
-  * the way they refuse `s3a:` — the specs must opt in via
-  * `spark.graft.commit.protocol=create`, same as a real object store.
+  * scheme `graftnr` ("no rename") whose `rename` REFUSES every commit
+  * target — a `v=N` data dir at any level, or anything inside a
+  * `_versions` metadata dir. Running the whole versioned-table verb
+  * suite on it proves STRUCTURALLY that the commit protocol performs
+  * zero renames on its commit path, which is exactly the property a
+  * conditional-PUT object store (S3 If-None-Match, GCS preconditions,
+  * Azure ETag) needs. Data-FILE renames (task commits inside a claimed
+  * dir — FileOutputCommitter and the partitioned row-level writers)
+  * stay allowed: real object stores implement those as copies, slow but
+  * correct, and deployments swap in a zero-rename committer without
+  * touching the table layer. The scheme is listed in
+  * [[Fs.NonAtomicRenameSchemes]], so it passes the commit gate only
+  * because it reports the conditional-create capability — the gate a
+  * real object store faces, with no conf set.
   */
 final class NoCommitRenameFileSystem extends RawLocalFileSystem {
 
@@ -64,10 +64,12 @@ final class NoCommitRenameFileSystem extends RawLocalFileSystem {
   override def listStatus(f: Path): Array[FileStatus] =
     super.listStatus(f).map(sanitize)
 
-  // the simulated store's create(overwrite=false) IS its conditional
-  // create (single-JVM local O_EXCL-backed), so it reports the
-  // capability a real conditional-PUT connector would — exercising the
-  // CREATE protocol's r16 capability gate instead of bypassing it
+  // the simulated store reports the capability a real conditional-PUT
+  // connector would — exercising the commit gate instead of bypassing
+  // it. Its create(overwrite=false) is RawLocalFileSystem's
+  // exists-then-open, atomic only because every commit in one JVM
+  // serializes under the table's commit lock; it is not a
+  // cross-process store.
   override def hasPathCapability(path: Path, capability: String): Boolean =
     capability == "fs.capability.conditional.create" ||
       super.hasPathCapability(path, capability)
