@@ -575,26 +575,6 @@ object Maintenance {
         Report(tableDir, "expire_branch_snapshots", ok = false, e.toString)
     }
 
-  /** Deliberate claim-TTL migration (r17): re-pin the table's
-    * persisted claim-liveness TTL. The everyday path never needs this
-    * — the pin is written at first commit from the session conf (or
-    * the 10-minute default) and every later process follows it; this
-    * verb is for tuning retention-of-liveness deliberately. Refuses
-    * while any claim still shows liveness under the current TTL; like
-    * remove_orphan_files, do not run concurrently with live writers
-    * in other processes. */
-  def setClaimTtl(tableDir: String, ttlMs: Long): Report =
-    try {
-      require(VersionedTable.isVersioned(tableDir),
-        s"$tableDir is not a versioned table root")
-      VersionedTable.setClaimTtl(tableDir, ttlMs)
-      Report(tableDir, "set_claim_ttl", ok = true,
-        s"pinned claim TTL ${ttlMs}ms")
-    } catch {
-      case e: Throwable =>
-        Report(tableDir, "set_claim_ttl", ok = false, e.toString)
-    }
-
   def removeOrphans(tableDir: String): Report =
     removeOrphansOn(new Configuration(), tableDir)
 
@@ -611,14 +591,14 @@ object Maintenance {
       // lifecycle on rename/delete), so this name check only ever fires
       // on raw stores where a committer genuinely stranded one — the
       // hidden-and-managed case needs no cleaning by construction.
-      // Committers write DIRECTLY into their claimed `v=N` while the
-      // claim is young (TTL) or owned in-JVM — the walk
-      // must skip those subtrees WHOLE (r15): their `_temporary` /
-      // task-attempt dirs are in-flight work, and deleting them would
-      // let the committer publish a manifest over lost data (with
-      // FileOutputCommitter v1 the job can even commit an empty dir).
-      // removeCommitDebris below applies the same TTL guard to the
-      // claims themselves.
+      // Committers write DIRECTLY into their reserved `v=K` while the
+      // claim shows life (a young marker or fresh files under `v=K`) or
+      // is owned in-JVM — the walk must skip those subtrees WHOLE (r15):
+      // their `_temporary` / task-attempt dirs are in-flight work, and
+      // deleting them would let the committer publish a manifest over
+      // lost data (with FileOutputCommitter v1 the job can even commit
+      // an empty dir). removeCommitDebris below applies the same age
+      // test to the claims themselves.
       val protectedVs: Set[Long] =
         if (isDir(fs, new Path(root, "_versions")))
           VersionedTable.protectedClaimVersions(fs, root)

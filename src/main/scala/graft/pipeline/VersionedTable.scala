@@ -7,67 +7,91 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Minimal snapshot/time-travel layer over parquet: every write creates an
-  * immutable `v=N` directory; reads address the latest or any retained
+  * immutable `v=K` directory; reads address the latest or any retained
   * version; expiry deletes old versions — the parquet-path realization of
   * the reference's Iceberg snapshot semantics (time travel: README.md:87-88;
   * expire_snapshots: glue-jobs/iceberg_maintenance.py:48-55).
   *
   * ONE commit protocol, on every scheme and with no conf — Delta Lake's
   * log discipline (data is written once and never renamed; a commit is a
-  * create-if-absent of the next log entry):
-  *   1. CLAIM `v=N` by conditional create of the marker
-  *      `_versions/.claim-N` ([[claimVersion]]);
-  *   2. WRITE `df` directly into `v=N` — the claim makes the final name
+  * create-if-absent of the next log entry; a writer that loses that race
+  * re-reads the log and retries at the next number):
+  *   1. RESERVE a data-dir id K by conditional create of the marker
+  *      `_versions/.claim-K`, then check `v=K` is absent
+  *      ([[claimVersion]]) — the marker reserves the dir name and
+  *      nothing else;
+  *   2. WRITE `df` directly into `v=K` — the reservation makes the name
   *      exclusive, so there is no staging dir and no rename;
-  *   3. PUBLISH the manifest `_versions/N` by conditional create, in
-  *      claim order ([[publishClaimed]]).
+  *   3. PUBLISH by conditional create of manifest `_versions/N`, N = the
+  *      newest manifest + 1 ([[publishClaimed]]); a foreign manifest
+  *      already at N means re-list and retry at N+1. Every line shares
+  *      this namespace — a branch manifest is `_versions/N` with a
+  *      `branch=<name>` line — so main and branch commits contend on
+  *      one name per number.
   * Readers only see manifested versions, so a torn or abandoned write is
-  * invisible (no manifest → no version). Metadata-only commits (rollback,
-  * fast_forward, rewrite_manifests) claim a number the same way and
-  * publish without writing a data dir. Every create-if-absent goes
-  * through [[graft.util.Fs.createNew]] (O_EXCL + hard link on `file:`,
-  * so a manifest appears whole; `create(overwrite=false)` elsewhere),
-  * and every mutation — deletes included — first passes one object-store
-  * gate, [[probeConditionalCreate]].
+  * invisible (no manifest → no version). Uncontended K == N, so the
+  * manifest of a data commit carries no `dirs=` line and `history`'s and
+  * `graft_files`' `data_version`, the DML `v` metadata column and
+  * `basePath` partition discovery (all of which read the dir name) see
+  * the same numbers as before; when K ≠ N the manifest names its dirs
+  * explicitly. Metadata-only commits (rollback, fast_forward,
+  * rewrite_manifests) reserve nothing and only publish. Every
+  * create-if-absent goes through [[graft.util.Fs.createNew]] (O_EXCL +
+  * hard link on `file:`, so a manifest appears whole;
+  * `create(overwrite=false)` elsewhere), and every mutation — deletes
+  * included — first passes one object-store gate,
+  * [[probeConditionalCreate]].
   *
-  * Where each guarantee of the retired rename protocol (stage into
-  * `.stage-*`, claim `v=N` by rename, publish the manifest by temp +
-  * rename, pick and pin the protocol per table) now lives:
-  *   - one owner per number: the `.claim-N` create-if-absent, not a dir
-  *     rename (a POSIX rename onto a non-empty dir can even "succeed" by
-  *     moving the source inside it);
-  *   - a reader never sees a half-written manifest: `Fs.createNew`'s
-  *     hard-link publish on `file:`, whole-object PUT on object stores;
-  *   - serializable appends (a later manifest carries every earlier
-  *     commit's dirs): publish in claim order, content resolved from the
-  *     version list read at publish time;
-  *   - a crashed committer never wedges the table: claim liveness
-  *     (timestamp, heartbeat sidecar, newest mtime under `v=N`) and the
-  *     pinned TTL (`.liveness`, `set_claim_ttl`) reap cold claims and
-  *     cold marker-less `v=N` dirs;
-  *   - a loser cleans only what it owns: [[abandonClaim]] deletes the
-  *     claimed dir and marker, never a published snapshot.
-  * Tables written by the old code keep working: `.protocol` pins are
-  * ignored, an in-place-rewritten `.table` is generation -1 of the
-  * table meta, marker-less `v=N` dirs self-reap once cold, and
-  * `remove_orphan_files` still sweeps `.stage-*`/`.replace-staging-*`.
-  *
-  * The claimed dir keeps the name `v=N` (rather than a unique,
-  * never-claimed name) because that name is visible: `history`'s and
-  * `graft_files`' `data_version`, the DML `v` metadata column, and
-  * partition discovery with `basePath` at the table root all read it.
+  * Where each guarantee lives:
+  *   - a crashed writer never blocks and never corrupts: nothing ever
+  *     waits on another writer's marker — the dir-id allocator steps
+  *     past outstanding markers and existing `v=K` dirs, and publishing
+  *     ignores markers — and an unpublished dir is invisible;
+  *     `remove_orphan_files` reclaims the debris;
+  *   - a slow writer never has its data deleted while it shows life:
+  *     `remove_orphan_files` removes a marker and its `v=K` only when the
+  *     marker's claim time and the newest entry under `v=K` are both
+  *     older than [[ClaimColdMs]] (fail-closed, early-exit dir walk), and
+  *     a publisher re-reads its own marker's token before it creates the
+  *     manifest, so a claim removed anyway fails the commit loudly
+  *     instead of landing a manifest over deleted data. A writer that
+  *     lands no file for [[ClaimColdMs]] (one long shuffle) reads as
+  *     dead: `remove_orphan_files` may then hand its dir id to another
+  *     writer, and files its tasks land later join that writer's dir —
+  *     which is why `remove_orphan_files` must not run while writers in
+  *     other processes are mid-commit;
+  *   - appends stay serializable, on every line: a manifest's content is
+  *     computed from the listing that chose its number N, that listing
+  *     shows every manifest below N (each one was created at the
+  *     newest-plus-one of a listing, all lines create in one namespace,
+  *     and only maintenance deletes a manifest), and the
+  *     create-if-absent of N fails if anyone
+  *     published there first (the content functions re-validate on
+  *     every retry: the replace base check, `DuplicateBatch`, the
+  *     branch-head check);
+  *   - a lost race cleans up only its own claim: [[abandonClaim]]
+  *     deletes `v=K` and the marker only while the marker still carries
+  *     this writer's token, and [[createManifest]] never deletes a
+  *     manifest it did not write.
+  * Tables written by the old code keep working: `.protocol` and
+  * `.liveness` pins and the old claim-TTL session conf are ignored, an
+  * in-place-rewritten `.table` is generation -1 of the table meta,
+  * branch manifests under `_versions/branch-<name>/N` are still read
+  * and counted, and `remove_orphan_files` sweeps `.claim-N.hb`
+  * sidecars, marker-less `v=N` dirs and `.stage-*`/`.replace-staging-*`.
   *
   * Concurrency: all I/O runs over Hadoop's `FileSystem`, resolved per
-  * table path. In one driver JVM every claim and publish on a root
+  * table path. In one driver JVM every reservation and publish on a root
   * serializes under a per-root monitor (two concurrent appends both
-  * land, the second's manifest including the first's dirs). Across
-  * drivers the claim marker is the linearization point; a committer
-  * that crashes between claim and publish is reaped by the next blocked
-  * commit once every liveness signal is past the TTL, so a live slow
-  * writer is never destroyed and a dead one never wedges the table.
-  * Remaining cross-driver caveat, documented not hidden: `expire`
-  * racing a cross-process in-flight commit can fail that commit loudly
-  * (never silently). */
+  * land, the later manifest including the earlier's dirs). Across
+  * drivers the create-if-absent of the manifest number is the
+  * linearization point. Remaining cross-driver caveat, documented not
+  * hidden: deleting a manifest frees its number, so `expire`,
+  * `expire_branch_snapshots` and `drop_branch`, like
+  * `remove_orphan_files`, must not run while writers in other processes
+  * are mid-commit — a commit that listed before the deletion could land
+  * at the freed number below a newer manifest, or above a commit that
+  * reused it. In one JVM the commit lock rules this out. */
 object VersionedTable extends org.apache.spark.internal.Logging {
 
   // per-root commit monitor: all manifest mutations on one table root
@@ -97,48 +121,26 @@ object VersionedTable extends org.apache.spark.internal.Logging {
 
   private def manifestDir(root: Path): Path = new Path(root, "_versions")
 
-  // ---- persisted claim-liveness TTL (r17) ------------------------------
-  //
-  // `_versions/.liveness` (generations `.liveness.gK` for migrations —
-  // an object store cannot atomically overwrite, so a change writes the
-  // NEXT generation by conditional create and the newest wins, like
-  // `.table`): `claimTtlMs=N`, pinned create-if-absent at first commit.
-  // The TTL governs BOTH the committer's heartbeat period (TTL/3) and
-  // the reaper's coldness test, and those run in DIFFERENT processes — a
-  // reaper session configured with a shorter TTL than a committer's beat
-  // period would read a live, heartbeating claim as cold between beats
-  // and destroy its in-flight data (r16 verdict, missing #2). Pinning
-  // makes every process — committer, blocked publisher, orphan walk —
-  // reap against the TABLE's TTL; a session conf that EXPLICITLY
-  // disagrees refuses with the migration verb named, and deliberate
-  // migration goes through CALL graft.system.set_claim_ttl. Pre-r17
-  // tables have no pin: the session conf (default 10 min) applies and
-  // their next commit writes the pin, adopting without a migration step.
-  //
-  // The pinned value is CACHED per root per JVM (positive entries
-  // only — reap paths poll liveness at 100 ms and must not pay a LIST
-  // per poll); set_claim_ttl refreshes the writer's own cache, and
-  // cross-process the documented discipline holds: do not migrate
-  // concurrently with live writers in other processes.
-
-  /** Generation of a generational meta file named `base` (`.table`,
-    * `.liveness`): the bare name is generation -1, `base.gK` is K. */
-  private def metaGen(base: String, name: String): Option[Long] =
-    if (name == base) Some(-1L)
-    else if (name.startsWith(s"$base.g")) {
-      val g = name.stripPrefix(s"$base.g")
+  /** Generation of the table meta file `.table`: the bare name is
+    * generation -1, `.table.gK` is K. An object store cannot atomically
+    * overwrite, so a change writes the NEXT generation by conditional
+    * create and the newest wins. */
+  private def metaGen(name: String): Option[Long] =
+    if (name == ".table") Some(-1L)
+    else if (name.startsWith(".table.g")) {
+      val g = name.stripPrefix(".table.g")
       if (g.nonEmpty && g.forall(_.isDigit)) Some(g.toLong) else None
     } else None
 
-  /** The newest generation of meta `base` — one listing of `_versions`,
-    * the same small dir every read already lists. */
-  private def currentMetaOn(fs: FileSystem, root: Path,
-      base: String): Option[(Path, Long)] = {
+  /** The newest generation of the table meta — one listing of
+    * `_versions`, the same small dir every read already lists. */
+  private def currentMetaOn(fs: FileSystem,
+      root: Path): Option[(Path, Long)] = {
     val dir = manifestDir(root)
     if (!fs.exists(dir)) None
     else {
       val metas = fs.listStatus(dir).toSeq.map(_.getPath.getName)
-        .flatMap(n => metaGen(base, n).map(n -> _))
+        .flatMap(n => metaGen(n).map(n -> _))
       if (metas.isEmpty) None
       else {
         val (name, gen) = metas.maxBy(_._2)
@@ -147,143 +149,92 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Write the next generation of meta `base` by create-if-absent: two
-    * racing writers collide on the generation name and the loser fails
-    * loudly (never a silent lost update). */
-  private def writeNextMetaGen(fs: FileSystem, root: Path, base: String,
+  /** Write the next generation of the table meta by create-if-absent:
+    * two racing writers collide on the generation name and the loser
+    * fails loudly (never a silent lost update). */
+  private def writeNextMetaGen(fs: FileSystem, root: Path,
       content: String): Unit = {
-    val name = currentMetaOn(fs, root, base) match {
-      case Some((_, g)) => s"$base.g${g + 1}"
-      case None => base
+    val name = currentMetaOn(fs, root) match {
+      case Some((_, g)) => s".table.g${g + 1}"
+      case None => ".table"
     }
     graft.util.Fs.createNew(fs, new Path(manifestDir(root), name),
       content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
-
-  private val pinnedTtlCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  private[pipeline] def pinnedClaimTtlOn(fs: FileSystem,
-      root: Path): Option[Long] =
-    pinnedTtlCache.get(root.toString).orElse {
-      val read = currentMetaOn(fs, root, ".liveness").map { case (p, _) =>
-        val content = graft.util.Fs.readSmallFileFs(fs, p).trim
-        content.linesIterator.map(_.trim)
-          .collectFirst { case l if l.startsWith("claimTtlMs=") =>
-            l.stripPrefix("claimTtlMs=").toLongOption }
-          .flatten.getOrElse(sys.error(
-            s"unreadable liveness pin '$content' in $p — expected " +
-              "claimTtlMs=<millis>"))
-      }
-      read.foreach(pinnedTtlCache.put(root.toString, _))
-      read
-    }
-
-  /** The session's EXPLICIT TTL conf, if set (None = default applies). */
-  private def explicitSessionClaimTtl: Option[Long] =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .flatMap(s => scala.util.Try(s.conf.get(ClaimTtlConfKey)).toOption)
-      .flatMap(_.toLongOption)
-
-  /** The claim TTL EVERY liveness decision on this table must use:
-    * the table's pinned value when one exists (an explicitly
-    * disagreeing session conf refuses, naming the migration verb),
-    * else the session conf, else the 10-minute default. */
-  private[pipeline] def claimTtlMsFor(fs: FileSystem, root: Path): Long =
-    pinnedClaimTtlOn(fs, root) match {
-      case Some(pinned) =>
-        explicitSessionClaimTtl.foreach(conf => require(conf == pinned,
-          s"claim TTL on $root is pinned to ${pinned}ms (first commit) " +
-            s"but $ClaimTtlConfKey=${conf} — a session reaping under a " +
-            "different TTL than committers heartbeat under can destroy " +
-            "live in-flight commits; unset the conf, or migrate " +
-            "deliberately with CALL graft.system.set_claim_ttl"))
-        pinned
-      case None => explicitSessionClaimTtl.getOrElse(DefaultClaimTtlMs)
-    }
-
-  /** Pin the claim TTL at first commit (create-if-absent). A lost race
-    * needs no agreement check here — the winner's pin simply rules, and
-    * a session whose EXPLICIT conf disagrees with it refuses at its next
-    * liveness decision ([[claimTtlMsFor]]). */
-  private def ensureLivenessPersisted(fs: FileSystem, root: Path): Unit = {
-    if (pinnedClaimTtlOn(fs, root).nonEmpty) return
-    val ttl = explicitSessionClaimTtl.getOrElse(DefaultClaimTtlMs)
-    try {
-      writeNextMetaGen(fs, root, ".liveness", s"claimTtlMs=$ttl\n")
-      pinnedTtlCache.put(root.toString, ttl)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        if (pinnedClaimTtlOn(fs, root).isEmpty) throw e
-    }
-  }
-
-  /** Deliberate TTL migration (`CALL graft.system.set_claim_ttl`):
-    * re-pin the table's claim TTL by writing the next `.liveness.gK`
-    * generation (conditional create — racing migrations collide on the
-    * generation name and the loser fails loudly). Refuses while any
-    * claim still SHOWS LIVENESS under the current TTL — lowering the
-    * TTL under a live committer whose heartbeat period derives from
-    * the old TTL is exactly the cross-process corruption the pin
-    * exists to prevent. Cold (crashed-committer) claims do NOT block:
-    * shortening the TTL is often the operator's tool to reap them
-    * sooner. Like remove_orphan_files, do not run concurrently with
-    * live writers in other processes (their cached pin refreshes at
-    * their next JVM, not mid-flight). */
-  def setClaimTtl(table: String, ttlMs: Long): Unit = {
-    require(ttlMs > 0, s"set_claim_ttl($table, $ttlMs): TTL must be " +
-      "positive millis")
-    val (fs, root) = fsFor(table)
-    probeConditionalCreate(fs, root, table)
-    withCommitLock(root) {
-      val curTtl = pinnedClaimTtlOn(fs, root)
-        .orElse(explicitSessionClaimTtl).getOrElse(DefaultClaimTtlMs)
-      val owned = liveClaims.getOrElse(root.toString, Set.empty)
-      val live = claimsOn(fs, root).filter(k =>
-        owned(k) || claimAgeMs(fs, root, k, curTtl) < curTtl)
-      require(live.isEmpty,
-        s"set_claim_ttl($table): claims $live still show liveness " +
-          "under the current TTL — wait for in-flight commits (crashed " +
-          "ones go cold and stop blocking), then retry")
-      if (pinnedClaimTtlOn(fs, root).contains(ttlMs)) return
-      writeNextMetaGen(fs, root, ".liveness", s"claimTtlMs=$ttlMs\n")
-      pinnedTtlCache.put(root.toString, ttlMs)
-    }
-  }
-
-  /** The pinned claim TTL, if the table has pinned one. */
-  def claimTtlOf(table: String): Option[Long] = {
-    val (fs, root) = fsFor(table)
-    pinnedClaimTtlOn(fs, root)
   }
 
   private def versionsOn(fs: FileSystem, root: Path): Seq[Long] =
     listVersionsDir(fs, root).versions
 
   /** ONE listing of `_versions`, parsed every way the commit paths
-    * need it (main versions, claim numbers, branch names) — the
-    * allocation picture without paying three LISTs per commit attempt
-    * (object-store LISTs are billable round-trips, and publishClaimed
-    * polls this every 100 ms while waiting on a lower claim). */
+    * need it — the allocation picture without paying several LISTs per
+    * commit attempt (object-store LISTs are billable round-trips):
+    * `numbers` holds every manifest number of every line (the one
+    * global counter), `versions` the main line's, `branchSlots` each
+    * branch's manifests in `_versions`. */
   private final case class VersionsListing(versions: Seq[Long],
-      claims: Seq[Long], branchNames: Seq[String])
+      numbers: Seq[Long], claims: Seq[Long], branchNames: Seq[String],
+      branchSlots: Map[String, Seq[Long]])
 
   private def listVersionsDir(fs: FileSystem,
       root: Path): VersionsListing = {
     val dir = manifestDir(root)
-    if (!fs.exists(dir)) VersionsListing(Nil, Nil, Nil)
+    if (!fs.exists(dir)) VersionsListing(Nil, Nil, Nil, Nil, Map.empty)
     else {
       val sts = fs.listStatus(dir).toSeq
       val names = sts.map(_.getPath.getName)
+      val manifests = sts.flatMap(st =>
+        st.getPath.getName.toLongOption.map(_ -> st))
+      val branchNames = sts.filter(st =>
+          st.isDirectory && st.getPath.getName.startsWith("branch-"))
+        .map(_.getPath.getName.stripPrefix("branch-")).sorted
+      // a branch manifest lands only after its branch dir exists
+      // (createBranch writes `.base` first; dropBranch deletes the
+      // manifests before the dir), so a table without branches reads
+      // no manifest here
+      val lines = if (branchNames.isEmpty) Map.empty[Long, Option[String]]
+        else manifestLinesOn(fs, root, manifests)
       VersionsListing(
-        names.flatMap(n => scala.util.Try(n.toLong).toOption).sorted,
+        manifests.map(_._1).filter(n =>
+          lines.get(n).forall(_.contains(""))).sorted,
+        manifests.map(_._1).sorted,
         names.filter(_.startsWith(".claim-"))
           .flatMap(_.stripPrefix(".claim-").toLongOption).sorted,
-        sts.filter(st =>
-            st.isDirectory && st.getPath.getName.startsWith("branch-"))
-          .map(_.getPath.getName.stripPrefix("branch-")).sorted)
+        branchNames,
+        lines.toSeq.collect { case (n, Some(b)) if b.nonEmpty => b -> n }
+          .groupMap(_._1)(_._2).map { case (b, ns) => b -> ns.sorted })
     }
   }
+
+  /** The line of each manifest in one listing: `Some("")` for main,
+    * `Some(b)` for a manifest of branch b (its `branch=b` line), None
+    * for one that vanished since the listing (an expiry in flight).
+    * Manifests are immutable, so each is read once per JVM: the cache
+    * keys on path, mtime and length and keeps only the current
+    * listing's entries. */
+  private val manifestLineCache = scala.collection.concurrent.TrieMap
+    .empty[String, Map[Long, (Long, Long, Option[String])]]
+  private def manifestLinesOn(fs: FileSystem, root: Path,
+      manifests: Seq[(Long, org.apache.hadoop.fs.FileStatus)])
+      : Map[Long, Option[String]] = {
+    val cached = manifestLineCache.getOrElse(root.toString, Map.empty)
+    val now = manifests.map { case (n, st) =>
+      val hit = cached.get(n).collect {
+        case (m, len, line) if m == st.getModificationTime &&
+            len == st.getLen => line
+      }
+      n -> (st.getModificationTime, st.getLen, hit.getOrElse(
+        try Some(parseBranchLine(
+          graft.util.Fs.readSmallFileFs(fs, st.getPath)).getOrElse(""))
+        catch { case _: java.io.FileNotFoundException => None }))
+    }.toMap
+    manifestLineCache.put(root.toString, now)
+    now.map { case (n, (_, _, line)) => n -> line }
+  }
+
+  private def parseBranchLine(content: String): Option[String] =
+    content.linesIterator.collectFirst {
+      case l if l.startsWith("branch=") => l.stripPrefix("branch=").trim
+    }
 
   // ---- BRANCHES (r14): write-audit-publish refs -------------------------
   //
@@ -292,16 +243,20 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   // write-audit-publish: stage commits on a branch, audit them by
   // reading the branch, then FAST-FORWARD main to the branch head (a
   // metadata-only main commit adopting the branch's resolved dir list
-  // by reference). Layout: branch manifests live under
-  // `_versions/branch-<name>/<v>`; version NUMBERS stay global (every
-  // commit — main or branch — allocates from one counter over main
-  // manifests, claims, and every branch's manifests), so `v=N` data
-  // dirs never collide across lines. `_versions/branch-<name>/.base`
-  // records the main version the branch forked from: fast-forward
-  // refuses when main moved past it (diverged — Iceberg's
-  // fast_forward ancestor check). Branch-referenced data dirs are LIVE
-  // for expiry and orphan cleanup; dropping a branch releases its
-  // exclusive dirs to `remove_orphan_files`.
+  // by reference). Layout: every line's manifests share ONE namespace,
+  // `_versions/<v>`; a branch manifest carries a `branch=<name>` line.
+  // Version numbers are global (every publish takes the newest manifest
+  // + 1), so a main and a branch commit contend on the same
+  // create-if-absent name and a line's manifest is always computed from
+  // a listing that shows every manifest below it. Manifests that older
+  // code wrote under `_versions/branch-<name>/<v>` are still read.
+  // Data-dir ids are reserved by `.claim-K` markers shared by every
+  // line, so `v=K` data dirs never collide across lines.
+  // `_versions/branch-<name>/.base` records the main version the branch
+  // forked from: fast-forward refuses when main moved past it (diverged
+  // — Iceberg's fast_forward ancestor check). Branch-referenced data
+  // dirs are LIVE for expiry and orphan cleanup; dropping a branch
+  // reclaims its exclusive dirs.
 
   private def branchManifestDir(root: Path, name: String): Path =
     new Path(manifestDir(root), s"branch-$name")
@@ -309,14 +264,26 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   private def branchNamesOn(fs: FileSystem, root: Path): Seq[String] =
     listVersionsDir(fs, root).branchNames
 
-  private def branchVersionsOn(fs: FileSystem, root: Path,
-      name: String): Seq[Long] = {
+  /** A branch's manifests, oldest first: (version, manifest path) —
+    * its `branch=<name>` manifests in `_versions` plus any that older
+    * code wrote under its own dir. */
+  private def branchManifestsOn(fs: FileSystem, root: Path,
+      name: String): Seq[(Long, Path)] = {
     val dir = branchManifestDir(root, name)
     if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .flatMap(n => scala.util.Try(n.toLong).toOption)
-      .sorted
+    else {
+      val legacy = fs.listStatus(dir).toSeq.map(_.getPath)
+        .flatMap(p => p.getName.toLongOption.map(_ -> p))
+      val slots = listVersionsDir(fs, root).branchSlots
+        .getOrElse(name, Nil)
+        .map(v => v -> new Path(manifestDir(root), v.toString))
+      (legacy ++ slots).sortBy(_._1)
+    }
   }
+
+  private def branchVersionsOn(fs: FileSystem, root: Path,
+      name: String): Seq[Long] =
+    branchManifestsOn(fs, root, name).map(_._1)
 
   /** (base main version, creation time) of a branch. */
   private def branchBaseOn(fs: FileSystem, root: Path,
@@ -328,15 +295,26 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       lines.lift(1).flatMap(_.trim.toLongOption).getOrElse(0L))
   }
 
-  /** The one global next-version source: main manifests, outstanding
-    * claims, and every branch's manifests — a branch commit and a main
-    * commit can never allocate the same `v=N` data dir. One `_versions`
-    * listing plus one per branch. */
-  private def maxAllocatedOn(fs: FileSystem, root: Path): Long = {
-    val l = listVersionsDir(fs, root)
-    (l.versions ++ l.claims ++
-      l.branchNames.flatMap(branchVersionsOn(fs, root, _)))
-      .maxOption.getOrElse(0L)
+  /** The newest manifest number in listing `l`, of any line — the one
+    * global version counter (a publish takes this + 1). Branch
+    * manifests that older code wrote under `branch-<name>/` count too;
+    * this code never creates one, so their maximum is listed once per
+    * root per JVM that sees branches (the verbs that delete branch
+    * manifests drop it). */
+  private val legacyBranchMax =
+    scala.collection.concurrent.TrieMap.empty[String, Long]
+  private def newestManifestIn(fs: FileSystem, root: Path,
+      l: VersionsListing): Long = {
+    val legacy =
+      if (l.branchNames.isEmpty) 0L
+      else legacyBranchMax.getOrElseUpdate(root.toString,
+        l.branchNames.flatMap { b =>
+          val dir = branchManifestDir(root, b)
+          if (!fs.exists(dir)) Nil
+          else fs.listStatus(dir).toSeq
+            .flatMap(_.getPath.getName.toLongOption)
+        }.maxOption.getOrElse(0L))
+    (legacy +: l.numbers).max
   }
 
   /** Every data-dir version ANY branch manifest references — live for
@@ -344,9 +322,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * reference from its fork point, and owns its exclusive dirs). */
   private def branchLiveDirsOn(fs: FileSystem, root: Path): Set[Long] =
     branchNamesOn(fs, root).flatMap { b =>
-      branchVersionsOn(fs, root, b).flatMap { v =>
-        parseDirVersions(graft.util.Fs.readSmallFileFs(fs,
-          new Path(branchManifestDir(root, b), v.toString)), v)
+      branchManifestsOn(fs, root, b).flatMap { case (v, p) =>
+        parseDirVersions(graft.util.Fs.readSmallFileFs(fs, p), v)
       }
     }.toSet
 
@@ -430,8 +407,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * [[append]]. */
   def write(df: DataFrame, table: String): Long = {
     val (fs, root) = fsFor(table)
-    commitData(fs, root, table, df)((_, next) =>
-      manifestContent(Seq(next), next, carryBatchLine(fs, root),
+    commitData(fs, root, table, df)((_, k, n) =>
+      manifestContent(Seq(k), n, carryBatchLine(fs, root),
         op = "overwrite"))
   }
 
@@ -444,16 +421,19 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   private def claimsOn(fs: FileSystem, root: Path): Seq[Long] =
     listVersionsDir(fs, root).claims
 
-  /** Claims owned by committers in THIS JVM — lets the publish wait
-    * distinguish a live sibling (wait for it) from a foreign or crashed
-    * claim (bounded wait, then a loud error naming the cleanup tool).
-    * Mutated only under the root's commit lock. */
+  /** Claims owned by committers in THIS JVM, each with the token its
+    * marker carries: the orphan walk never touches an owned claim, and
+    * the publisher and [[abandonClaim]] act only while the marker still
+    * carries that token. Mutated only under the root's commit lock. */
   private val liveClaims =
-    scala.collection.concurrent.TrieMap.empty[String, Set[Long]]
-  private def addLiveClaim(root: Path, v: Long): Unit =
-    liveClaims.updateWith(root.toString)(s => Some(s.getOrElse(Set.empty) + v))
-  private def dropLiveClaim(root: Path, v: Long): Unit =
-    liveClaims.updateWith(root.toString)(_.map(_ - v).filter(_.nonEmpty))
+    scala.collection.concurrent.TrieMap.empty[String, Map[Long, String]]
+  private def ownedClaims(root: Path): Set[Long] =
+    liveClaims.get(root.toString).map(_.keySet).getOrElse(Set.empty)
+  private def addLiveClaim(root: Path, k: Long, token: String): Unit =
+    liveClaims.updateWith(root.toString)(m =>
+      Some(m.getOrElse(Map.empty) + (k -> token)))
+  private def dropLiveClaim(root: Path, k: Long): Unit =
+    liveClaims.updateWith(root.toString)(_.map(_ - k).filter(_.nonEmpty))
 
   /** Parse a claim marker's token / timestamp, accepting BOTH line
     * orders (r16 writes token first; pre-r16 wrote the timestamp first)
@@ -467,129 +447,41 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     content.linesIterator.map(_.trim)
       .flatMap(_.toLongOption).nextOption()
 
-  // ---- claim liveness (r16) --------------------------------------------
-  //
-  // A fixed claim TTL alone cannot distinguish a CRASHED committer from
-  // a LIVE one whose data write outlives the TTL (routine at 100 TB) —
-  // and the r15 publish-path self-heal made that distinction
-  // destructive: reaping a live claim deletes in-flight data that the
-  // victim's own publish could then land a manifest over (its
-  // conditional manifest create still succeeds if nobody re-claimed the
-  // number) — silent corruption. So (r16) a claim is only COLD when
-  // EVERY liveness signal is past the TTL:
-  //   1. the claim timestamp line and the marker object's own mtime;
-  //   2. the heartbeat sidecar `.claim-N.hb`, re-touched every TTL/3 by
-  //      a daemon in the committer's JVM while the claim is held (an
-  //      unconditional single-object PUT — overwrite is fine, only
-  //      recency matters; a failed touch degrades to signal 3);
-  //   3. the newest mtime under the claimed `v=N` itself — a
-  //      committer's executors land task files there continuously, so
-  //      even a committer that cannot heartbeat (crash-paused driver
-  //      that later resumes, older library) stays protected while
-  //      bytes arrive. This signal also covers marker-less `v=N` dirs
-  //      (crash debris of the retired rename protocol).
-  // Signals are checked cheapest-first with early exit, so the 100 ms
-  // publish-wait poll answers from the marker/heartbeat stat and never
-  // pays the recursive dir listing for a live committer.
+  /** Whether marker `.claim-k` still carries the token this JVM wrote
+    * into it. A missing, foreign or unreadable marker reads as not ours
+    * (fail closed: the caller then neither publishes nor deletes). */
+  private def ownsClaim(fs: FileSystem, root: Path, k: Long): Boolean =
+    liveClaims.get(root.toString).flatMap(_.get(k)).exists(token =>
+      scala.util.Try(claimTokenOf(graft.util.Fs.readSmallFileFs(fs,
+        claimPath(root, k)))).toOption.flatten.contains(token))
 
-  private def heartbeatPath(root: Path, v: Long): Path =
-    new Path(manifestDir(root), s".claim-$v.hb")
-
-  /** Lifecycle (r17, executor-leak audit): a single daemon scheduler
-    * for every claim heartbeat in the JVM, never shut down — but with
-    * `removeOnCancelPolicy(true)`, so [[stopClaimHeartbeat]]'s
-    * `cancel(false)` removes the task from the work queue IMMEDIATELY.
-    * Without the policy a cancelled periodic task lingers queued until
-    * its next fire time (default-TTL period: 200 s), and a session
-    * committing thousands of times would hold thousands of dead
-    * futures between beats. With it, the queue drains at cancel —
-    * pinned by CreateProtocolSpec via [[heartbeatQueueSize]]. */
-  private lazy val heartbeatExec = {
-    val e = new java.util.concurrent.ScheduledThreadPoolExecutor(1,
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-claim-heartbeat")
-        t.setDaemon(true)
-        t
-      })
-    e.setRemoveOnCancelPolicy(true)
-    e
-  }
-  /** Test hook: live entries in the heartbeat scheduler's queue. */
-  private[pipeline] def heartbeatQueueSize: Int = heartbeatExec.getQueue.size
-  private val heartbeats = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), java.util.concurrent.ScheduledFuture[_]]
-
-  /** Begin re-touching the claim's heartbeat sidecar every TTL/3. The
-    * just-written claim marker's own mtime covers the first period, so
-    * the first beat is deferred — claiming stays a single PUT.
-    *
-    * Period floor (r17 ADVICE): floored at a small constant (100 ms —
-    * an unconditional single-object PUT per beat stays negligible),
-    * derived from the TTL, not a fixed 1 s: the pre-r17 1 s floor
-    * plus the deferred first beat meant any TTL under ~3 s silently
-    * produced a heartbeat that never fired inside the TTL window. A
-    * TTL so small the floored period still cannot beat inside it is
-    * warned about loudly — the marker/dir mtimes then carry the whole
-    * liveness guarantee. */
-  private def startClaimHeartbeat(fs: FileSystem, root: Path,
-      v: Long, ttl: Long): Unit = {
-    val period = math.max(100L, ttl / 3)
-    if (period * 2 > ttl)
-      logWarning(s"claim TTL ${ttl}ms on $root floors the heartbeat " +
-        s"period at ${period}ms — the deferred first beat may not land " +
-        "inside the TTL window, leaving marker/dir mtimes as the only " +
-        "liveness signals; raise the TTL above ~300ms for heartbeat " +
-        "protection")
-    val key = (root.toString, v)
-    val task: Runnable = () =>
-      try {
-        if (heartbeats.contains(key)) {
-          val out = fs.create(heartbeatPath(root, v), true)
-          try out.write(s"${System.currentTimeMillis()}\n"
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-          // the claim may have published/abandoned between the check
-          // and the write — never strand a beat file past the stop
-          if (!heartbeats.contains(key))
-            try fs.delete(heartbeatPath(root, v), false)
-            catch { case scala.util.control.NonFatal(_) => () }
-        }
-      } catch { case scala.util.control.NonFatal(_) => () }
-    heartbeats.put(key, heartbeatExec
-      .scheduleAtFixedRate(task, period, period,
-        java.util.concurrent.TimeUnit.MILLISECONDS))
-  }
-
-  private def stopClaimHeartbeat(fs: FileSystem, root: Path,
-      v: Long): Unit = {
-    heartbeats.remove((root.toString, v)).foreach(_.cancel(false))
-    try fs.delete(heartbeatPath(root, v), false)
-    catch { case scala.util.control.NonFatal(_) => () }
-  }
+  /** Age past which `remove_orphan_files` may treat a cross-process
+    * claim as crash debris: the marker's claim time and the newest entry
+    * under its `v=K` must BOTH be older. Also the age past which a
+    * [[graft.util.Fs.createNew]] temp sibling counts as debris. */
+  private val ClaimColdMs = 600000L
 
   /** Age of the newest entry under `v=k` (the dir's own mtime when it
-    * is empty) — the last-resort liveness signal, paid only when the
-    * cheap ones are already cold (the reap decision, never the
-    * publish-wait fast path). `listFiles(recursive)` sees `_temporary`
-    * task-attempt files too: in-flight work IS the evidence of life.
+    * is empty) — the orphan walk's evidence that a claim's writer is
+    * still landing files, paid only when the marker is already cold.
+    * `listFiles(recursive)` sees `_temporary` task-attempt files too:
+    * in-flight work IS the evidence of life.
     *
-    * Error discipline (r17 ADVICE — FAIL CLOSED): only the dir itself
-    * being ABSENT reads as infinitely old (there is nothing there to
-    * protect, and `fs.delete` on a missing path is already a no-op).
-    * Any OTHER failure — an S3 throttle mid-listing is likeliest
-    * exactly while a big write is landing files — reads as age 0
-    * (live): this signal authorizes DELETING a claimed dir, and a
-    * transient listing error must make the reap retry after a clean
-    * read, never destroy a live committer's in-flight data. For
-    * marker-less dirs (no marker, no heartbeat) this scan is the ONLY
-    * protecting signal.
+    * Error discipline (FAIL CLOSED): only the dir itself being ABSENT
+    * reads as infinitely old (there is nothing there to protect, and
+    * `fs.delete` on a missing path is already a no-op). Any OTHER
+    * failure — an S3 throttle mid-listing is likeliest exactly while a
+    * big write is landing files — reads as age 0 (live): this age
+    * authorizes DELETING a claimed dir, and a transient listing error
+    * must make the cleanup wait for a clean read, never destroy a live
+    * writer's in-flight data.
     *
-    * Early exit (r17): the walk returns the moment ANY entry's mtime
-    * is within `ttlMs` — one fresh task file proves liveness, and a
-    * claimed dir midway through a 100 TB write holds millions of
-    * entries the reap decision must not list end-to-end. */
+    * Early exit: the walk returns the moment ANY entry's mtime is within
+    * [[ClaimColdMs]] — one fresh task file proves liveness, and a claimed dir
+    * midway through a 100 TB write holds millions of entries the
+    * decision must not list end-to-end. */
   private def newestMtimeAgeUnder(fs: FileSystem, root: Path, k: Long,
-      now: Long, ttlMs: Long): Long = {
+      now: Long): Long = {
     val dir = new Path(root, s"v=$k")
     val dirMtime =
       try fs.getFileStatus(dir).getModificationTime
@@ -599,13 +491,13 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       }
     try {
       var newest = dirMtime
-      if (now - newest < ttlMs) return now - newest
+      if (now - newest < ClaimColdMs) return now - newest
       val it = fs.listFiles(dir, true)
       while (it.hasNext) {
         val st = it.next()
         if (st.getModificationTime > newest) {
           newest = st.getModificationTime
-          if (now - newest < ttlMs) return now - newest
+          if (now - newest < ClaimColdMs) return now - newest
         }
       }
       now - newest
@@ -616,17 +508,22 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** CLAIM the next version via conditional create of the marker file —
-    * the one primitive object stores provide atomically (If-None-Match
-    * PUT). The claimed `v=N` data dir is the committer's to write
-    * directly; nothing is visible until [[publishClaimed]] lands the
-    * manifest.
+  /** RESERVE a data-dir id K: conditional create of the marker
+    * `_versions/.claim-K` (K one past every manifest number and every
+    * outstanding marker), THEN check that `v=K` is absent. A present
+    * `v=K` — a published dir whose marker is long gone (dir ids and
+    * manifest numbers diverge under contention) or crash debris —
+    * releases the marker without touching the dir and tries K+1.
+    * Checking after the create closes the reuse window: a dir's marker
+    * lives for its whole write, so an id can only be won again once its
+    * dir is on disk, and a reservation is never granted on a dir that
+    * holds data (whose abandon would delete it). Nothing here waits: a
+    * foreign marker or dir is stepped past, K only moves up. The
+    * reserved `v=K` is the committer's to write directly; nothing is
+    * visible until [[publishClaimed]] lands a manifest.
     *
-    * Marker format (r16): the committer's unique TOKEN is the FIRST
-    * line, the claim timestamp the second. Readers parse both orders
-    * (pre-r16 markers carry the timestamp first): a line that parses as
-    * a Long is the timestamp, a line that does not is the token — UUIDs
-    * never parse as Long.
+    * Marker format: the committer's unique TOKEN is the first line, the
+    * claim timestamp the second.
     *
     * Soundness rests on [[graft.util.Fs.createNew]] being create-if-
     * absent — O_EXCL on `file:`, the namenode on HDFS, a CONDITIONAL
@@ -638,88 +535,43 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * happens — so on ANY IOException the claim is read back and
     * disambiguated by the unique token this committer wrote: our token =
     * the claim IS ours (won despite the error); a foreign or unreadable
-    * claim = lost race (retry); no claim = a real I/O failure that
-    * surfaces as itself.
-    *
-    * A `v=next` dir that already exists with no marker (a claimer whose
-    * marker was reaped but whose dir survived, or a crashed committer of
-    * the retired rename protocol) blocks the number: it is reaped once
-    * COLD, a fresh one keeps the bounded loud wait.
-    *
-    * Contention discipline (r15): the retry sleep runs OUTSIDE the
-    * per-root lock (a sleeping claimer must not stall sibling in-JVM
-    * committers), and collisions only count as suspicious while `next`
-    * DOES NOT MOVE — a moving next is live cross-process contention
-    * (keep retrying with backoff); a stuck next is real crash debris
-    * (bounded, loud error naming the cleanup tool). */
+    * claim = lost race (next id); no claim = a real I/O failure that
+    * surfaces as itself. */
   private[graft] def claimVersion(fs: FileSystem, root: Path,
       table: String): Long = {
     probeConditionalCreate(fs, root, table)
-    ensureLivenessPersisted(fs, root)
-    // resolve (and VALIDATE) the TTL before any marker is written: a
-    // session conf disagreeing with the pin must refuse HERE, not
-    // after a claim marker exists to strand (r17)
-    val claimTtl = claimTtlMsFor(fs, root)
-    var stuck = 0
-    var lastNext = -1L
+    var k = 0L
     var got = -1L
-    while (got < 0) {
+    while (got < 0) withCommitLock(root) {
+      val l = listVersionsDir(fs, root)
+      k = math.max(k, (newestManifestIn(fs, root, l) +: l.claims).max) + 1L
       val token = java.util.UUID.randomUUID().toString
-      val collided: Boolean = withCommitLock(root) {
-        val next = maxAllocatedOn(fs, root) + 1L
-        if (next != lastNext) { stuck = 0; lastNext = next }
-        val won = !fs.exists(new Path(root, s"v=$next")) && (try {
-          // token FIRST (r16): a partial flush still identifies the owner
-          graft.util.Fs.createNew(fs, claimPath(root, next),
-            s"$token\n${System.currentTimeMillis()}\n"
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          true
-        } catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-          case _: java.nio.file.FileAlreadyExistsException => false
-          case e: java.io.IOException =>
-            // a connector may surface the lost race only at close()
-            // (conditional-PUT 412); read the claim back and let the
-            // token decide — permissions/credentials/network failures
-            // leave NO claim and surface as themselves
-            scala.util.Try(claimTokenOf(graft.util.Fs
-              .readSmallFileFs(fs, claimPath(root, next)))) match {
-              case scala.util.Success(Some(t)) => t == token
-              case scala.util.Success(None) => false // no token: not ours
-              case scala.util.Failure(_) =>
-                if (fs.exists(claimPath(root, next))) false else throw e
-            }
-        })
-        if (won) {
-          addLiveClaim(root, next)
-          startClaimHeartbeat(fs, root, next, claimTtl)
-          got = next
-        }
-        !won
-      }
-      if (collided) {
-        stuck += 1
-        if (stuck >= 2) {
-          // `maxAllocatedOn + 1 == lastNext` ⟺ the number is beyond
-          // every MAIN manifest, BRANCH manifest, and claim — a pure
-          // orphan dir (a branch manifest landing for this number
-          // advances the allocator and skips the reap)
-          val reaped = withCommitLock(root) {
-            val ttl = claimTtlMsFor(fs, root)
-            maxAllocatedOn(fs, root) + 1L == lastNext &&
-              claimAgeMs(fs, root, lastNext, ttl) >= ttl &&
-              fs.delete(new Path(root, s"v=$lastNext"), true)
+      val won = try {
+        // token FIRST: a partial flush still identifies the owner
+        graft.util.Fs.createNew(fs, claimPath(root, k),
+          s"$token\n${System.currentTimeMillis()}\n"
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        true
+      } catch {
+        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+        case _: java.nio.file.FileAlreadyExistsException => false
+        case e: java.io.IOException =>
+          // a connector may surface the lost race only at close()
+          // (conditional-PUT 412); read the claim back and let the
+          // token decide — permissions/credentials/network failures
+          // leave NO claim and surface as themselves
+          scala.util.Try(claimTokenOf(graft.util.Fs
+            .readSmallFileFs(fs, claimPath(root, k)))) match {
+            case scala.util.Success(Some(t)) => t == token
+            case scala.util.Success(None) => false // no token: not ours
+            case scala.util.Failure(_) =>
+              if (fs.exists(claimPath(root, k))) false else throw e
           }
-          if (reaped) stuck = 0
-        }
-        require(stuck < 5,
-          s"cannot claim data dir v=$lastNext in $root after $stuck " +
-            "attempts with no concurrent commit advancing it — a " +
-            "live committer is mid-write (its debris self-reaps once " +
-            s"cold for $ClaimTtlConfKey) or a crashed committer left " +
-            "a stale claim or data dir " +
-            "(CALL graft.system.remove_orphan_files)")
-        Thread.sleep(50L * stuck) // outside the lock: siblings keep committing
+      }
+      if (won) {
+        if (fs.exists(new Path(root, s"v=$k")))
+          fs.delete(claimPath(root, k), false) // release; the dir stays
+        else { addLiveClaim(root, k, token); got = k }
       }
     }
     got
@@ -843,242 +695,187 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     probedRoots.put(root.toString, true)
   }
 
-  /** Un-claim: delete the claimed data dir (if any was written) and the
-    * claim marker. The failure/abort path of every commit — never
-    * called after the manifest published. */
+  /** Un-reserve: delete the reserved `v=K` (if any was written) and its
+    * marker — only while the marker still carries this writer's token.
+    * A marker that is gone or foreign means `remove_orphan_files` took
+    * the reservation as crash debris and `v=K` may since belong to
+    * another writer, so both are left alone. The failure/abort path of
+    * every data commit — never called after the manifest published. */
   private[graft] def abandonClaim(fs: FileSystem, root: Path,
-      v: Long): Unit = withCommitLock(root) {
-    stopClaimHeartbeat(fs, root, v)
-    try fs.delete(new Path(root, s"v=$v"), true)
-    catch { case scala.util.control.NonFatal(_) => () }
-    try fs.delete(claimPath(root, v), false)
-    catch { case scala.util.control.NonFatal(_) => () }
-    dropLiveClaim(root, v)
+      k: Long): Unit = withCommitLock(root) {
+    if (ownsClaim(fs, root, k)) {
+      try fs.delete(new Path(root, s"v=$k"), true)
+      catch { case scala.util.control.NonFatal(_) => () }
+      try fs.delete(claimPath(root, k), false)
+      catch { case scala.util.control.NonFatal(_) => () }
+    }
+    dropLiveClaim(root, k)
   }
 
-  /** Publish a claimed version: commit its manifest by conditional
-    * create, strictly in CLAIM ORDER — a manifest for `v` committed
-    * while a LOWER claim is still writing would let a later append
-    * resolve its `prev` dirs to a snapshot that does not yet include
-    * the lower committer's rows. Lower claims owned
-    * by this JVM are waited out indefinitely (they are live, holding
-    * real work); foreign claims get a bounded wait, then a loud error
-    * naming remove_orphan_files. A lower claim whose manifest already
-    * exists (marker-delete failed post-publish) does not block.
-    * On any failure before the manifest lands, the claim is abandoned
-    * (data dir + marker deleted) and the error rethrown. */
+  /** PUBLISH: conditional create of manifest `_versions/N`, N = the
+    * newest manifest of any line + 1, with `content(mainVersions, N)`
+    * computed from that same listing; a `branch` commit's manifest
+    * carries a `branch=<b>` line. Main and branch manifests share the
+    * name, so every publish contends with every other: a foreign
+    * manifest already at N means another writer published first —
+    * re-list and retry at the next number. The content function runs
+    * again on every retry, so its checks (the replace base check,
+    * [[DuplicateBatch]], the branch-head check) always judge the
+    * snapshot the manifest will follow, and a manifest that lands at N
+    * was computed from a listing that showed every manifest below N.
+    * With a reserved dir (`claim` = K), the marker must still carry
+    * this writer's token just before the create: a reservation that
+    * `remove_orphan_files` removed fails the commit loudly instead of
+    * landing a manifest over deleted data. On any failure before the
+    * manifest lands, the reservation is abandoned and the error
+    * rethrown. Returns N. */
   private[graft] def publishClaimed(fs: FileSystem, root: Path,
-      table: String, v: Long, branch: Option[String] = None)(
+      table: String, claim: Option[Long], branch: Option[String] = None)(
       content: (Seq[Long], Long) => String): Long = {
-    var manifested = false
+    var published = -1L
     try {
-      var foreignWaitMs = 0L
-      var ownedWaitMs = 0L
-      while (!manifested) {
-        val pending = withCommitLock(root) {
-          val l = listVersionsDir(fs, root) // ONE listing per poll
-          val lower = l.claims.filter(c => c < v && !l.versions.contains(c))
-          if (lower.isEmpty) {
-            val schemaLine = storedSchema(root.toString)
-              .map(sch => s"schema=${sch.json}\n").getOrElse("")
-            createManifest(fs, root, v,
-              content(l.versions, v) + schemaLine, branch)
-            manifested = true
-            stopClaimHeartbeat(fs, root, v)
-            try fs.delete(claimPath(root, v), false)
-            catch { case scala.util.control.NonFatal(_) => () }
-            dropLiveClaim(root, v)
-            Nil
-          } else lower
-        }
-        if (!manifested) {
-          val owned = liveClaims.getOrElse(root.toString, Set.empty)
-          val foreign = pending.filterNot(owned)
-          if (foreign.nonEmpty) {
-            // self-healing (r15): a TTL-expired foreign claim is a
-            // crashed committer — reap it HERE, under the same guards
-            // remove_orphan_files applies, instead of erroring and
-            // demanding a manual CALL (the pre-r15 wedge: one crashed
-            // claim blocked every later publish until an operator
-            // intervened). Young foreign claims still get the wait
-            // budget: they may be a live committer mid-write.
-            val reaped = withCommitLock(root) {
-              foreign.count(reapClaimIfStale(fs, root, _))
+      probeConditionalCreate(fs, root, table)
+      var lost = 0L
+      while (published < 0) withCommitLock(root) {
+        val l = listVersionsDir(fs, root)
+        val n = newestManifestIn(fs, root, l) + 1L
+        if (n <= lost) throw new IllegalStateException(
+          s"commit on $table: manifest $lost exists but the listing of " +
+            "_versions does not show it — refusing to publish against an " +
+            "inconsistent listing")
+        claim.foreach(k => if (!ownsClaim(fs, root, k))
+          throw new IllegalStateException(
+            s"commit on $table: the reservation of data dir v=$k no " +
+              "longer carries this writer's token (remove_orphan_files " +
+              "took it as crash debris, so its data may be gone) — " +
+              "nothing was published; re-run the write"))
+        val schemaLine = storedSchema(root.toString)
+          .map(sch => s"schema=${sch.json}\n").getOrElse("")
+        val branchLine = branch.map(b => s"branch=$b\n").getOrElse("")
+        if (createManifest(fs, root, n,
+            content(l.versions, n) + branchLine + schemaLine,
+            branch.isEmpty)) {
+          // a drop_branch that ran while this branch commit was in
+          // flight has swept the branch's manifests already: retract
+          // ours rather than leave one that a later branch of the same
+          // name would adopt
+          branch.foreach { b =>
+            if (!fs.exists(new Path(branchManifestDir(root, b), ".base"))) {
+              fs.delete(new Path(manifestDir(root), n.toString), false)
+              throw new IllegalStateException(s"commit on $table: " +
+                s"branch '$b' was dropped while this commit ran — " +
+                "nothing was published")
             }
-            if (reaped == 0) {
-              foreignWaitMs += 100
-              require(foreignWaitMs < foreignClaimWaitMs,
-                s"claims $foreign below $v on $table unpublished after " +
-                  s"${foreignWaitMs / 1000}s — if the committer is alive " +
-                  s"and mid-write, raise $ForeignWaitConfKey and retry; " +
-                  s"if it crashed, its claim self-reaps once older than " +
-                  s"$ClaimTtlConfKey (or CALL " +
-                  "graft.system.remove_orphan_files), then this " +
-                  "publish proceeds")
-            }
-          } else {
-            // owned claims are live in-JVM work — but one LEAKED by a
-            // query that died between planning (claim-at-write) and
-            // commit/abort would otherwise hang this table forever;
-            // bound generously and name the wedge
-            ownedWaitMs += 100
-            require(ownedWaitMs < ownedClaimWaitMs,
-              s"in-JVM claims ${pending.filter(owned)} below $v on " +
-                s"$table unpublished after ${ownedWaitMs / 1000}s — a " +
-                "long-running sibling commit (raise " +
-                s"$OwnedWaitConfKey) or a claim leaked by a query that " +
-                "died before its write started (restart the driver or " +
-                "CALL graft.system.remove_orphan_files after the TTL)")
           }
-          Thread.sleep(100)
-        }
+          published = n
+          claim.foreach { k =>
+            try fs.delete(claimPath(root, k), false)
+            catch { case scala.util.control.NonFatal(_) => () }
+            dropLiveClaim(root, k)
+          }
+        } else lost = n
       }
-      v
+      published
     } catch {
       case e: Throwable =>
-        if (!manifested) abandonClaim(fs, root, v)
+        if (published < 0) claim.foreach(abandonClaim(fs, root, _))
         throw e
     }
   }
 
-  /** Foreign (cross-process) lower-claim publish wait budget. */
-  val ForeignWaitConfKey = "spark.graft.commit.foreignClaimWaitMs"
-  /** In-JVM sibling lower-claim publish wait budget (a sibling holds
-    * its claim for the length of its data write). */
-  val OwnedWaitConfKey = "spark.graft.commit.ownedClaimWaitMs"
-  /** Age below which remove_orphan_files refuses to treat a claim as
-    * crashed-committer debris. */
-  val ClaimTtlConfKey = "spark.graft.commit.claimTtlMs"
-
-  private def confMs(key: String, default: Long): Long =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .flatMap(s => scala.util.Try(s.conf.get(key)).toOption)
-      .flatMap(_.toLongOption).getOrElse(default)
-
-  private def foreignClaimWaitMs: Long = confMs(ForeignWaitConfKey, 60000L)
-  private def ownedClaimWaitMs: Long = confMs(OwnedWaitConfKey, 1800000L)
-  /** Default claim TTL (10 min) — applies until a table pins its own
-    * ([[claimTtlMsFor]] is the per-table resolution every liveness
-    * decision must use; this constant only seeds unpinned tables). */
-  private[pipeline] val DefaultClaimTtlMs = 600000L
-
   /** Manifest commit by conditional create ([[graft.util.Fs.createNew]]):
     * a whole-object PUT on object stores, a hard-link publish on
-    * `file:` — readers never see a torn manifest — and the claim
-    * guarantees no competing writer of this version exists.
+    * `file:` — readers never see a torn manifest. True when this
+    * commit's manifest landed; false when a FOREIGN manifest already
+    * holds `v` (the publish retries at the next number).
     *
-    * Failure cleanup NEVER deletes a manifest it did not write (r15):
-    * a create/close failure can mean the target ALREADY EXISTS (a
-    * foreign manifest — a connector surfacing a collision late, or a
-    * claim protocol violated upstream), and deleting it would destroy
-    * someone else's published commit. The target is read back and the
+    * Failure handling NEVER deletes a manifest it did not write: an
+    * already-exists error is a lost race; any other create/close
+    * failure can also mean the target ALREADY EXISTS (a connector
+    * surfacing a collision late), so the target is read back and the
     * content decides: equal = this commit's object landed whole (the
     * commit stands — success); a strict PREFIX of ours = our own torn
-    * write (a connector whose stream is visible while open; deleted);
-    * anything else or unreadable = left untouched, error rethrown.
+    * write (a connector whose stream is visible while open; deleted,
+    * error rethrown); other content = a foreign manifest (lost race);
+    * unreadable = left untouched, error rethrown.
     *
     * The committed content is authoritative for the newest batch
     * marker: every commit path re-carries the newest `batch=` line, so
     * absence here means absence everywhere at-or-below v. */
   private def createManifest(fs: FileSystem, root: Path, v: Long,
-      content: String, branch: Option[String] = None): Unit = {
-    val dir = branch.map(branchManifestDir(root, _))
-      .getOrElse(manifestDir(root))
-    val target = new Path(dir, v.toString)
-    try graft.util.Fs.createNew(fs, target,
-      content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch {
-      case e: Throwable =>
-        scala.util.Try(graft.util.Fs.readSmallFileFs(fs, target))
-          .toOption match {
-          case Some(c) if c == content =>
-            () // landed whole despite the error: the commit stands
-          case Some(c) if content.startsWith(c) =>
-            // our own torn write (manifests start with a millis
-            // timestamp, so a foreign manifest diverges within the
-            // first line) — clean it and surface the failure
-            try fs.delete(target, false)
-            catch { case scala.util.control.NonFatal(_) => () }
-            throw e
-          case _ =>
-            // foreign or unreadable: never delete what we did not write
-            throw e
-        }
-    }
-    if (branch.isEmpty) batchMarkerCache.put(root.toString,
+      content: String, main: Boolean): Boolean = {
+    val target = new Path(manifestDir(root), v.toString)
+    val landed =
+      try {
+        graft.util.Fs.createNew(fs, target,
+          content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        true
+      } catch {
+        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+        case _: java.nio.file.FileAlreadyExistsException => false
+        case e: Throwable =>
+          scala.util.Try(graft.util.Fs.readSmallFileFs(fs, target))
+            .toOption match {
+            case Some(c) if c == content =>
+              true // landed whole despite the error: the commit stands
+            case Some(c) if content.startsWith(c) =>
+              // our own torn write (manifests start with a millis
+              // timestamp, so a foreign manifest diverges within the
+              // first line) — clean it and surface the failure
+              try fs.delete(target, false)
+              catch { case scala.util.control.NonFatal(_) => () }
+              throw e
+            case Some(_) => false // foreign: lost the race
+            case None => throw e // never delete what we did not write
+          }
+      }
+    if (landed && main) batchMarkerCache.put(root.toString,
       (v, content.linesIterator.collectFirst {
         case l if l.startsWith("batch=") =>
           l.stripPrefix("batch=").trim.toLong
       }))
+    landed
   }
 
-  /** The data commit: claim a version, write `df` DIRECTLY into the
-    * claimed `v=N` (no staging, no rename — the claim makes the final
-    * name exclusive; partition columns declared at [[create]] lay out
-    * inside it), publish in claim order. `branch` redirects the
-    * manifest into that branch's dir (r14). */
+  /** The data commit: reserve a dir id K, write `df` DIRECTLY into
+    * `v=K` (no staging, no rename — the reservation makes the name
+    * exclusive; partition columns declared at [[create]] lay out inside
+    * it), publish. `content(mainVersions, K, N)` builds the manifest of
+    * version N; `branch` makes it a manifest of that branch (r14). */
   private def commitData(fs: FileSystem, root: Path, table: String,
       df: DataFrame, branch: Option[String] = None)(
-      content: (Seq[Long], Long) => String): Long = {
-    val v = claimVersion(fs, root, table)
+      content: (Seq[Long], Long, Long) => String): Long = {
+    val k = claimVersion(fs, root, table)
     try {
-      val target = new Path(root, s"v=$v")
+      val target = new Path(root, s"v=$k")
       partitionColsOf(table) match {
         case cols if cols.nonEmpty =>
           df.write.partitionBy(cols: _*).parquet(target.toString)
         case _ => df.write.parquet(target.toString)
       }
-      publishClaimed(fs, root, table, v, branch)(content)
+      publishClaimed(fs, root, table, Some(k), branch)(content(_, k, _))
     } catch {
       case e: Throwable =>
         // idempotent: publishClaimed cleans on ITS failures, but a
-        // write-step failure still holds the claim
-        abandonClaim(fs, root, v)
+        // write-step failure still holds the reservation
+        abandonClaim(fs, root, k)
         throw e
     }
   }
 
-  /** A data-less (metadata-only) commit — rollback, fast_forward,
-    * rewrite_manifests: claims its number like a data commit, so a
-    * metadata commit can never publish over a number another committer
-    * owns, and publishes without writing a data dir (its manifest
-    * carries an explicit data directive). */
-  private def commitMeta(fs: FileSystem, root: Path,
-      table: String)(content: (Seq[Long], Long) => String): Long = {
-    val v = claimVersion(fs, root, table)
-    try publishClaimed(fs, root, table, v)(content)
-    catch { case e: Throwable => abandonClaim(fs, root, v); throw e }
-  }
-
-  /** Effective age of claim `k` in millis — the YOUNGEST of the
-    * liveness signals (claim timestamp line, marker mtime, heartbeat
-    * sidecar mtime, newest mtime under the claimed `v=k`), so a claim
-    * only reads as past the TTL when its committer has shown no sign
-    * of life for the whole TTL window (r16; pre-r16 this was the claim
-    * timestamp alone, which let the TTL reap destroy a LIVE slow
-    * committer's in-flight data). Checked cheapest-first with early
-    * exit; a claim with no signal at all (no marker, no dir — nothing
-    * to reap either) reads as infinitely old. */
-  private def claimAgeMs(fs: FileSystem, root: Path, k: Long,
-      ttl: Long): Long = {
+  /** Effective age of claim `k` in millis — the YOUNGER of its marker's
+    * claim time (the timestamp line, else the marker's own mtime) and
+    * the newest entry under `v=k`, so a claim only reads as cold when
+    * its writer has shown no sign of life for [[ClaimColdMs]]. The dir
+    * walk runs only when the marker is already cold. FAIL CLOSED: a
+    * probe that fails for any reason other than absence reads as LIVE
+    * (age 0) — this age authorizes deleting a dir. A claim with no
+    * marker and no dir reads as infinitely old. */
+  private def claimAgeMs(fs: FileSystem, root: Path, k: Long): Long = {
     val now = System.currentTimeMillis()
-    // Error discipline (r17 ADVICE — FAIL CLOSED, the newestMtimeAgeUnder
-    // twin): a signal whose probe FAILS for any reason other than
-    // absence must read as LIVE (age 0), because this age authorizes a
-    // destructive reap — a transient stat failure (S3 throttling) on a
-    // live committer's marker must delay the reap, never authorize it.
-    // Only a signal that is genuinely ABSENT (FileNotFound) reads as
-    // infinitely old and defers to the remaining signals.
-    //
-    // the timestamp LINE is the marker's claim-time record; the marker
-    // object's mtime (= its PUT time, never rewritten) stands in when
-    // the line is absent — a PARTIALLY-flushed token-only marker is
-    // then aged from its creation instead of reading as infinitely old
     val marker =
       try {
         val st = fs.getFileStatus(claimPath(root, k))
-        // content read failed but the marker EXISTS: its mtime is a
-        // real signal — use it rather than failing open or closed
         scala.util.Try(claimTimestampOf(
           graft.util.Fs.readSmallFileFs(fs, claimPath(root, k))))
           .toOption.flatten match {
@@ -1089,111 +886,51 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         case _: java.io.FileNotFoundException => Long.MaxValue
         case scala.util.control.NonFatal(_) => return 0L
       }
-    if (marker < ttl) return marker
-    val hb =
-      try now - fs.getFileStatus(heartbeatPath(root, k)).getModificationTime
-      catch {
-        case _: java.io.FileNotFoundException => Long.MaxValue
-        case scala.util.control.NonFatal(_) => return 0L
-      }
-    if (hb < ttl) return math.min(marker, hb)
-    math.min(math.min(marker, hb),
-      newestMtimeAgeUnder(fs, root, k, now, ttl))
-  }
-
-  /** Reap ONE crashed-committer claim: foreign (not live in this JVM)
-    * and older than the TTL — the claim marker goes, and its data dir
-    * with it when no manifest or retained reference owns that dir.
-    * TTL guard: a younger claim may belong to a LIVE cross-process
-    * committer mid-write; deleting it (and the dir it owns) would let
-    * that committer publish a manifest over destroyed data. Returns
-    * entries removed (0 = not stale / not ours to reap). Callers hold
-    * the commit lock. */
-  private def reapClaimEntries(fs: FileSystem, root: Path, k: Long,
-      manifested: Set[Long], live: Set[Long], owned: Set[Long],
-      ttl: Long): Int = {
-    if (owned(k) || claimAgeMs(fs, root, k, ttl) < ttl) 0
-    else {
-      var removed = 0
-      if (fs.delete(claimPath(root, k), false)) removed += 1
-      try fs.delete(heartbeatPath(root, k), false)
-      catch { case scala.util.control.NonFatal(_) => () }
-      if (!manifested(k) && !live(k) &&
-          fs.exists(new Path(root, s"v=$k"))) {
-        fs.delete(new Path(root, s"v=$k"), true); removed += 1
-      }
-      removed
-    }
-  }
-
-  /** [[reapClaimEntries]] with the liveness sets computed fresh — the
-    * publish-path self-heal form (r15), called for the handful of
-    * foreign claims blocking a publish. True iff the claim was
-    * reaped. */
-  private def reapClaimIfStale(fs: FileSystem, root: Path,
-      k: Long): Boolean = {
-    val owned = liveClaims.getOrElse(root.toString, Set.empty)
-    val ttl = claimTtlMsFor(fs, root)
-    if (owned(k) || claimAgeMs(fs, root, k, ttl) < ttl) return false
-    val vs = versionsOn(fs, root)
-    val manifested = vs.toSet ++
-      branchNamesOn(fs, root).flatMap(branchVersionsOn(fs, root, _))
-    val live = vs.flatMap(dataVersionsOn(fs, root, _)).toSet ++
-      branchLiveDirsOn(fs, root)
-    reapClaimEntries(fs, root, k, manifested, live, owned, ttl) > 0
+    if (marker < ClaimColdMs) marker
+    else math.min(marker, newestMtimeAgeUnder(fs, root, k, now))
   }
 
   /** Versions whose claim is still PROTECTED — owned by a live in-JVM
-    * committer, or younger than the claim TTL (possibly a live
-    * cross-process committer mid-write into its claimed `v=N`). The
-    * orphan walk must not touch ANYTHING under these dirs (r15): their
-    * `_temporary` / task-attempt debris is in-flight work, and deleting
-    * it would let the committer publish a manifest over lost data —
-    * the exact contradiction of publishClaimed's "a premature CALL
-    * cannot destroy in-flight data" promise (ADVICE r14). */
+    * committer, or showing life within [[ClaimColdMs]] (possibly a live
+    * cross-process committer mid-write into its reserved `v=K`). The
+    * orphan walk must not touch ANYTHING under these dirs: their
+    * `_temporary` / task-attempt debris is in-flight work. */
   private[pipeline] def protectedClaimVersions(fs: FileSystem,
       root: Path): Set[Long] = {
-    val owned = liveClaims.getOrElse(root.toString, Set.empty)
-    val ttl = claimTtlMsFor(fs, root)
+    val owned = ownedClaims(root)
     claimsOn(fs, root)
-      .filter(k => owned(k) || claimAgeMs(fs, root, k, ttl) < ttl)
+      .filter(k => owned(k) || claimAgeMs(fs, root, k) < ClaimColdMs)
       .toSet
   }
 
   /** Remove commit crash debris (called by `remove_orphan_files`; like
     * Iceberg's, NOT safe concurrently with live writers in other
-    * processes — in-JVM committers are protected by [[liveClaims]] and
-    * the commit lock):
-    *   - stale claim markers whose committer died — these BLOCK later
-    *     publishes by design, so cleaning them is what un-wedges the
-    *     table;
-    *   - temp siblings of a crashed [[graft.util.Fs.createNew]] in
-    *     `_versions` and branch dirs, once older than the claim TTL;
-    *   - data dirs `v=K` with no manifest and no retained reference — a
-    *     claimer that died mid-write, or a committer of the retired
-    *     rename protocol that crashed between its claim rename and its
-    *     manifest (the failure the commit error message points here for).
+    * processes that show no life — in-JVM committers are protected by
+    * [[liveClaims]] and the commit lock):
+    *   - cold claim markers whose writer died, with their `v=K` when no
+    *     retained manifest references it;
+    *   - `.claim-N.hb` heartbeat sidecars left by older code, and temp
+    *     siblings of a crashed [[graft.util.Fs.createNew]], in
+    *     `_versions` and branch dirs;
+    *   - data dirs `v=K` no retained manifest references and no claim
+    *     marker reserves — a writer that died after losing its marker,
+    *     or a committer of the retired rename protocol that crashed
+    *     between its claim rename and its manifest.
     * Returns the number of entries removed. */
   private[pipeline] def removeCommitDebris(fs: FileSystem,
       root: Path): Int = withCommitLock(root) {
     probeConditionalCreate(fs, root, root.toString)
     var removed = 0
-    val vs = versionsOn(fs, root)
-    // branch manifests count as manifested (a claim whose publish went
-    // to a branch is not debris) and their referenced dirs as live
-    val manifested = vs.toSet ++
-      branchNamesOn(fs, root).flatMap(branchVersionsOn(fs, root, _))
-    val live = vs.flatMap(dataVersionsOn(fs, root, _)).toSet ++
-      branchLiveDirsOn(fs, root)
-    val owned = liveClaims.getOrElse(root.toString, Set.empty)
-    val ttl = claimTtlMsFor(fs, root)
-    claimsOn(fs, root).foreach { k =>
-      removed += reapClaimEntries(fs, root, k, manifested, live, owned, ttl)
+    // every dir a retained main or branch manifest references is live;
+    // a manifest NUMBER says nothing about the dir of the same number
+    val live = versionsOn(fs, root).flatMap(dataVersionsOn(fs, root, _))
+      .toSet ++ branchLiveDirsOn(fs, root)
+    val keep = protectedClaimVersions(fs, root)
+    claimsOn(fs, root).filterNot(keep).foreach { k =>
+      if (fs.delete(claimPath(root, k), false)) removed += 1
+      val dir = new Path(root, s"v=$k")
+      if (!live(k) && fs.exists(dir)) { fs.delete(dir, true); removed += 1 }
     }
-    // heartbeat sidecars whose claim marker is GONE (a racing final
-    // beat after a publish's cleanup) are inert debris — sweep them
-    // and so are the temp siblings of an `Fs.createNew` that crashed
-    // between its temp write and its link, once older than the TTL
     val claimsLeft = claimsOn(fs, root).toSet
     val now = System.currentTimeMillis()
     val metaDirs = manifestDir(root) +:
@@ -1205,26 +942,22 @@ object VersionedTable extends org.apache.spark.internal.Logging {
           !n.stripPrefix(".claim-").stripSuffix(".hb").toLongOption
             .exists(claimsLeft)
         val staleTmp = n.startsWith(graft.util.Fs.CreateNewTmpPrefix) &&
-          now - st.getModificationTime >= ttl
+          now - st.getModificationTime >= ClaimColdMs
         if (staleHb || staleTmp) {
           fs.delete(st.getPath, false); removed += 1
         }
       })
-    // claims that survived the TTL guard still OWN their data dir —
-    // the orphan-dir sweep must not pull it out from under them
-    val surviving = claimsOn(fs, root).toSet
     if (fs.exists(root)) fs.listStatus(root).foreach { st =>
       val n = st.getPath.getName
       if (st.isDirectory && n.startsWith("v=")) {
         n.stripPrefix("v=").toLongOption.foreach { k =>
-          // deliberately NOT liveness-gated (unlike the automatic
-          // publish/claim self-heals): a fresh mtime cannot distinguish
-          // a live committer's in-flight dir from a just-dropped
-          // branch's released dir, and this MANUAL verb exists to
-          // reclaim the latter — its documented contract (do not run
-          // concurrently with live writers) covers the former; claimed
-          // dirs are protected via their markers (`surviving`) above
-          if (!manifested(k) && !live(k) && !owned(k) && !surviving(k)) {
+          // deliberately NOT liveness-gated: a fresh mtime cannot
+          // distinguish a live writer's in-flight dir from a
+          // just-dropped branch's released dir, and this MANUAL verb
+          // exists to reclaim the latter — its documented contract (do
+          // not run concurrently with live writers) covers the former;
+          // reserved dirs are protected via their markers (`claimsLeft`)
+          if (!live(k) && !claimsLeft(k)) {
             fs.delete(st.getPath, true); removed += 1
           }
         }
@@ -1257,14 +990,14 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * Iceberg's rewrite_manifests discipline. */
   def append(df: DataFrame, table: String): Long = {
     val (fs, root) = fsFor(table)
-    // dirs resolve from the FRESH version list at publish time (in
-    // claim order), so a concurrent append that landed while this one
-    // wrote is carried into this snapshot (no lost update)
-    val content = (vs: Seq[Long], next: Long) => {
+    // dirs resolve from the FRESH version list at publish time, so a
+    // concurrent append that landed while this one wrote is carried
+    // into this snapshot (no lost update)
+    val content = (vs: Seq[Long], k: Long, n: Long) => {
       val dirs = vs.lastOption
-        .map(prev => dataVersionsOn(fs, root, prev) :+ next)
-        .getOrElse(Seq(next))
-      manifestContent(dirs, next, carryBatchLine(fs, root),
+        .map(prev => dataVersionsOn(fs, root, prev) :+ k)
+        .getOrElse(Seq(k))
+      manifestContent(dirs, n, carryBatchLine(fs, root),
         op = "append")
     }
     commitData(fs, root, table, df)(content)
@@ -1297,23 +1030,23 @@ object VersionedTable extends org.apache.spark.internal.Logging {
           s"of the current snapshot $current")
     }
     validate(versionsOn(fs, root)) // cheap pre-check before writing
-    val content = (vs: Seq[Long], next: Long) => {
+    val content = (vs: Seq[Long], k: Long, n: Long) => {
       validate(vs) // re-validated at publish time
-      manifestContent(keepDataVersions :+ next, next,
+      manifestContent(keepDataVersions :+ k, n,
         carryBatchLine(fs, root), op = "replace")
     }
     commitData(fs, root, table, df)(content)
   }
 
-  /** Manifest content of a row-level rewrite published as the next
-    * snapshot, keeping `keepDataVersions`' dirs by reference.
-    * `baseVersion` is the snapshot the rewrite's scan read: the publish
-    * refuses if the table moved since (an explicit, clean error; the
-    * loser abandons only its own claim). */
+  /** Manifest content of a row-level rewrite into reserved dir `k`,
+    * published as the next snapshot, keeping `keepDataVersions`' dirs
+    * by reference. `baseVersion` is the snapshot the rewrite's scan
+    * read: the publish refuses if the table moved since (an explicit,
+    * clean error; the loser abandons only its own claim). */
   private def replaceContent(fs: FileSystem, root: Path, table: String,
-      what: String, baseVersion: Option[Long],
-      keepDataVersions: Seq[Long]): (Seq[Long], Long) => String =
-    (vs, next) => {
+      what: String, baseVersion: Option[Long], keepDataVersions: Seq[Long],
+      k: Long): (Seq[Long], Long) => String =
+    (vs, n) => {
       require(vs.lastOption == baseVersion,
         s"$what($table): table is at snapshot " +
           s"${vs.lastOption.getOrElse("none")} but this rewrite read " +
@@ -1325,25 +1058,25 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       require(unknown.isEmpty,
         s"$what($table): kept data versions $unknown are " +
           s"not part of the current snapshot $current")
-      manifestContent(keepDataVersions :+ next, next,
+      manifestContent(keepDataVersions :+ k, n,
         carryBatchLine(fs, root), op = "replace")
     }
 
-  /** The row-level write claims its target version up front so
-    * executors write DIRECTLY into `v=N` (no staging dir, no rename
-    * anywhere). Publish = [[publishClaimedReplace]] /
+  /** The row-level write reserves its data dir up front so executors
+    * write DIRECTLY into `v=K` (no staging dir, no rename anywhere).
+    * Publish = [[publishClaimedReplace]] /
     * [[publishClaimedReplaceBranch]]; abort = [[abandonClaimOn]]. */
   private[graft] def claimReplaceVersion(table: String): Long = {
     val (fs, root) = fsFor(table)
     claimVersion(fs, root, table)
   }
 
-  private[graft] def publishClaimedReplace(table: String, v: Long,
+  private[graft] def publishClaimedReplace(table: String, k: Long,
       baseVersion: Option[Long], keepDataVersions: Seq[Long]): Long = {
     val (fs, root) = fsFor(table)
-    publishClaimed(fs, root, table, v)(
+    publishClaimed(fs, root, table, Some(k))(
       replaceContent(fs, root, table, "publishClaimedReplace",
-        baseVersion, keepDataVersions))
+        baseVersion, keepDataVersions, k))
   }
 
   private[graft] def abandonClaimOn(table: String, v: Long): Unit = {
@@ -1374,8 +1107,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   private def replaceBranchContent(fs: FileSystem, root: Path,
       table: String, what: String, branchName: String,
       baseHead: Option[Long],
-      keepDataVersions: Seq[Long]): (Seq[Long], Long) => String =
-    (_, next) => {
+      keepDataVersions: Seq[Long], k: Long): (Seq[Long], Long) => String =
+    (_, n) => {
       val head = branchVersionsOn(fs, root, branchName).lastOption
       require(head == baseHead,
         s"$what($table): branch '$branchName' is at " +
@@ -1387,16 +1120,16 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       require(unknown.isEmpty,
         s"$what($table): kept data versions $unknown are not part of " +
           s"branch '$branchName''s head $current")
-      manifestContent(keepDataVersions :+ next, next, op = "replace")
+      manifestContent(keepDataVersions :+ k, n, op = "replace")
     }
 
-  private[graft] def publishClaimedReplaceBranch(table: String, v: Long,
+  private[graft] def publishClaimedReplaceBranch(table: String, k: Long,
       branchName: String, baseHead: Option[Long],
       keepDataVersions: Seq[Long]): Long = {
     val (fs, root) = fsFor(table)
-    publishClaimed(fs, root, table, v, Some(branchName))(
+    publishClaimed(fs, root, table, Some(k), Some(branchName))(
       replaceBranchContent(fs, root, table, "publishClaimedReplaceBranch",
-        branchName, baseHead, keepDataVersions))
+        branchName, baseHead, keepDataVersions, k))
   }
 
   /** `op` records WHAT KIND of commit this is (Iceberg's snapshot
@@ -1445,17 +1178,17 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     val (fs, root) = fsFor(table)
     if (lastStreamBatchOn(fs, root).exists(_ >= batchId)) None
     else {
-      // RE-CHECKED at publish time (claim order): the pre-write check
+      // RE-CHECKED at every publish attempt: the pre-write check
       // above is only an optimization — two racing
       // deliveries of one batch id (zombie pre-restart thread + the
       // restarted query) could both pass it, and exactly one may commit
-      val content = (vs: Seq[Long], next: Long) => {
+      val content = (vs: Seq[Long], k: Long, n: Long) => {
         if (lastStreamBatchOn(fs, root).exists(_ >= batchId))
           throw new DuplicateBatch
         val dirs = vs.lastOption
-          .map(prev => dataVersionsOn(fs, root, prev) :+ next)
-          .getOrElse(Seq(next))
-        manifestContent(dirs, next, Seq(s"batch=$batchId"),
+          .map(prev => dataVersionsOn(fs, root, prev) :+ k)
+          .getOrElse(Seq(k))
+        manifestContent(dirs, n, Seq(s"batch=$batchId"),
           op = "append")
       }
       try Some(commitData(fs, root, table, df)(content))
@@ -1479,12 +1212,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
           case Some((v, marker)) if v == newest => marker
           case _ =>
             val walked = vs.reverseIterator.flatMap { v =>
-              val in = fs.open(new Path(manifestDir(root), v.toString))
-              val content =
-                try new String(in.readAllBytes(),
-                  java.nio.charset.StandardCharsets.UTF_8)
-                finally in.close()
-              content.linesIterator.collectFirst {
+              manifestContentOf(fs, root, v).linesIterator.collectFirst {
                 case l if l.startsWith("batch=") =>
                   l.stripPrefix("batch=").trim.toLong
               }
@@ -1502,12 +1230,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * `parse*` forms (pre-r14, [[read]] re-opened the same manifest
     * three times — 3× metadata latency on remote filesystems). */
   private def manifestContentOf(fs: FileSystem, root: Path,
-      v: Long): String = {
-    val in = fs.open(new Path(manifestDir(root), v.toString))
-    try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-  }
+      v: Long): String =
+    graft.util.Fs.readSmallFileFs(fs, new Path(manifestDir(root), v.toString))
 
   /** The DATA VERSION LIST a manifested version resolves to, in commit
     * order. Three manifest shapes, all pre-resolved (reads never chase
@@ -1529,13 +1253,6 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   private def dataVersionsOn(fs: FileSystem, root: Path,
       v: Long): Seq[Long] =
     parseDirVersions(manifestContentOf(fs, root, v), v)
-
-  /** The newest data version of a snapshot — the single-dir view
-    * [[history]]'s `data_version` column reports (for a full write:
-    * itself; for a redirect: the restore target; for an append: itself,
-    * its own delta dir being the newest). */
-  private def dataVersionOn(fs: FileSystem, root: Path, v: Long): Long =
-    dataVersionsOn(fs, root, v).last
 
   /** The schema AS OF a retained snapshot (r14): the `schema=` line
     * its manifest embedded at commit time, so `VERSION AS OF` a
@@ -1726,8 +1443,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
           .mkString("", "\n", "\n")
       }
     }
-    // gather OUTSIDE the lock (the claim-order publish wait must not
-    // run under it); contentFor revalidates the base at publish, so a
+    // gather OUTSIDE the lock (a file listing must not stall sibling
+    // committers); contentFor revalidates the base at publish, so a
     // concurrent commit is a loud refusal, never a manifest for a moved
     // snapshot
     val vs = versionsOn(fs, root)
@@ -1735,7 +1452,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     val dirVersions = dataVersionsOn(fs, root, vs.last)
     if (dirVersions.size <= 1 ||
         manifestFilesOn(fs, root, vs.last).isDefined) None
-    else Some(commitMeta(fs, root, table)(contentFor(vs.last, dirVersions)))
+    else Some(publishClaimed(fs, root, table, None)(
+      contentFor(vs.last, dirVersions)))
   }
 
   private def parseFiles(content: String): Option[Seq[String]] =
@@ -1971,11 +1689,9 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * still be retained on main). */
   private def branchHeadDirsOn(fs: FileSystem, root: Path,
       name: String): Seq[Long] = {
-    val bvs = branchVersionsOn(fs, root, name)
-    bvs.lastOption match {
-      case Some(h) =>
-        parseDirVersions(graft.util.Fs.readSmallFileFs(fs,
-          new Path(branchManifestDir(root, name), h.toString)), h)
+    branchManifestsOn(fs, root, name).lastOption match {
+      case Some((h, p)) =>
+        parseDirVersions(graft.util.Fs.readSmallFileFs(fs, p), h)
       case None =>
         val (base, _) = branchBaseOn(fs, root, name)
         require(versionsOn(fs, root).contains(base),
@@ -1991,8 +1707,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   def appendToBranch(df: DataFrame, table: String, name: String): Long = {
     val (fs, root) = fsFor(table)
     branchBaseOn(fs, root, name) // loud existence check before writing
-    commitData(fs, root, table, df, Some(name))((_, next) =>
-      manifestContent(branchHeadDirsOn(fs, root, name) :+ next, next,
+    commitData(fs, root, table, df, Some(name))((_, k, n) =>
+      manifestContent(branchHeadDirsOn(fs, root, name) :+ k, n,
         op = "append"))
   }
 
@@ -2001,8 +1717,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   def writeToBranch(df: DataFrame, table: String, name: String): Long = {
     val (fs, root) = fsFor(table)
     branchBaseOn(fs, root, name)
-    commitData(fs, root, table, df, Some(name))((_, next) =>
-      manifestContent(Seq(next), next, op = "overwrite"))
+    commitData(fs, root, table, df, Some(name))((_, k, n) =>
+      manifestContent(Seq(k), n, op = "overwrite"))
   }
 
   /** Read a BRANCH head (the audit half of write-audit-publish):
@@ -2011,11 +1727,9 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   def readBranch(spark: SparkSession, table: String,
       name: String): DataFrame = {
     val (fs, root) = fsFor(table)
-    val bvs = branchVersionsOn(fs, root, name)
-    bvs.lastOption match {
-      case Some(h) =>
-        val content = graft.util.Fs.readSmallFileFs(fs,
-          new Path(branchManifestDir(root, name), h.toString))
+    branchManifestsOn(fs, root, name).lastOption match {
+      case Some((h, p)) =>
+        val content = graft.util.Fs.readSmallFileFs(fs, p)
         readDirs(spark, table,
           parseDirVersions(content, h)
             .map(k => new Path(root, s"v=$k").toString),
@@ -2036,8 +1750,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     requireValidTagName(name)
     require(fs.exists(branchManifestDir(root, name)),
       s"no branch '$name' on $table")
-    branchVersionsOn(fs, root, name).map { v =>
-      val p = new Path(branchManifestDir(root, name), v.toString)
+    branchManifestsOn(fs, root, name).map { case (v, p) =>
       val ts = graft.util.Fs.readSmallFileFs(fs, p).linesIterator
         .nextOption().flatMap(_.trim.toLongOption).getOrElse(sys.error(
           s"branch manifest $p carries no parseable commit timestamp " +
@@ -2066,12 +1779,12 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       version: Long)
       : (Seq[String], Option[org.apache.spark.sql.types.StructType]) = {
     val (fs, root) = fsFor(table)
-    val bvs = branchVersionsOn(fs, root, name)
-    require(bvs.contains(version),
-      s"branch '$name' on $table has no retained snapshot $version " +
-        s"(retained: ${bvs.mkString(", ")})")
+    val bms = branchManifestsOn(fs, root, name)
     val content = graft.util.Fs.readSmallFileFs(fs,
-      new Path(branchManifestDir(root, name), version.toString))
+      bms.collectFirst { case (`version`, p) => p }.getOrElse(
+        throw new IllegalArgumentException(
+          s"branch '$name' on $table has no retained snapshot $version " +
+            s"(retained: ${bms.map(_._1).mkString(", ")})")))
     (parseDirVersions(content, version)
       .map(k => new Path(root, s"v=$k").toString),
       parseSchema(content))
@@ -2089,9 +1802,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   private[graft] def branchSchema(table: String, name: String)
       : Option[org.apache.spark.sql.types.StructType] = {
     val (fs, root) = fsFor(table)
-    branchVersionsOn(fs, root, name).lastOption.flatMap { h =>
-      parseSchema(graft.util.Fs.readSmallFileFs(fs,
-        new Path(branchManifestDir(root, name), h.toString)))
+    branchManifestsOn(fs, root, name).lastOption.flatMap { case (_, p) =>
+      parseSchema(graft.util.Fs.readSmallFileFs(fs, p))
     }.orElse(storedSchema(table))
   }
 
@@ -2102,7 +1814,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * The branch stays; drop it when the audit cycle is done. */
   def fastForward(table: String, name: String): Long = {
     val (fs, root) = fsFor(table)
-    commitMeta(fs, root, table) { (vs, next) =>
+    publishClaimed(fs, root, table, None) { (vs, n) =>
       val (base, _) = branchBaseOn(fs, root, name)
       require(vs.lastOption.contains(base),
         s"fast_forward('$name') on $table: main is at snapshot " +
@@ -2112,7 +1824,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       require(branchVersionsOn(fs, root, name).nonEmpty,
         s"fast_forward('$name') on $table: branch has no commits — " +
           "nothing to publish")
-      manifestContent(branchHeadDirsOn(fs, root, name), next,
+      manifestContent(branchHeadDirsOn(fs, root, name), n,
         carryBatchLine(fs, root), op = "fast-forward")
     }
   }
@@ -2121,10 +1833,9 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * adopted by a fast-forward or referenced by another branch are
     * live and stay). Inline — not deferred to `remove_orphan_files` —
     * because a branch can hold the globally-HIGHEST version numbers
-    * (r16, randomized-model catch): dropping its manifests while its
-    * dirs linger would let the allocator re-issue those numbers, and
-    * the next commit would collide with a fresh-mtime orphan it can
-    * neither wait out nor cold-reap. */
+    * (r16, randomized-model catch): dirs left behind would make the
+    * next reservations step past them, so uncontended dir ids would
+    * stop matching version numbers. */
   def dropBranch(table: String, name: String): Unit = {
     val (fs, root) = fsFor(table)
     requireValidTagName(name)
@@ -2132,20 +1843,32 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       require(fs.exists(branchManifestDir(root, name)),
         s"no branch '$name' on $table")
       probeConditionalCreate(fs, root, table)
-      val mine = branchVersionsOn(fs, root, name).flatMap { v =>
-        parseDirVersions(graft.util.Fs.readSmallFileFs(fs,
-          new Path(branchManifestDir(root, name), v.toString)), v)
-      }.toSet
+      def dirsOf(ms: Seq[(Long, Path)]): Seq[Long] = ms.flatMap {
+        case (v, p) =>
+          parseDirVersions(graft.util.Fs.readSmallFileFs(fs, p), v)
+      }
+      val manifests = branchManifestsOn(fs, root, name)
+      val mine = dirsOf(manifests).toSet
       val live = versionsOn(fs, root)
         .flatMap(dataVersionsOn(fs, root, _)).toSet ++
         branchNamesOn(fs, root).filter(_ != name)
-          .flatMap { b =>
-            branchVersionsOn(fs, root, b).flatMap { v =>
-              parseDirVersions(graft.util.Fs.readSmallFileFs(fs,
-                new Path(branchManifestDir(root, b), v.toString)), v)
-            }
-          }
+          .flatMap(b => dirsOf(branchManifestsOn(fs, root, b)))
+      // the manifests go before the branch dir: while the dir exists
+      // the branch does, so a crash in between leaves no manifest that
+      // a listing could take for a main one
+      manifests.foreach { case (_, p) => fs.delete(p, false) }
       fs.delete(branchManifestDir(root, name), true)
+      legacyBranchMax.remove(root.toString)
+      // a branch commit that listed before the drop can land after the
+      // deletes above; it retracts its own manifest when it then finds
+      // the branch gone, and this sweep removes one that landed before
+      // that check
+      val dir = manifestDir(root)
+      manifestLinesOn(fs, root, fs.listStatus(dir).toSeq.flatMap(st =>
+          st.getPath.getName.toLongOption.map(_ -> st)))
+        .foreach { case (v, line) =>
+          if (line.contains(name)) fs.delete(new Path(dir, v.toString), false)
+        }
       (mine -- live).toSeq.sorted.foreach(k =>
         fs.delete(new Path(root, s"v=$k"), true))
     }
@@ -2170,7 +1893,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       require(fs.exists(branchManifestDir(root, name)),
         s"no branch '$name' on $table")
       probeConditionalCreate(fs, root, table)
-      val bvs = branchVersionsOn(fs, root, name)
+      val bms = branchManifestsOn(fs, root, name).toMap
+      val bvs = bms.keys.toSeq.sorted
       // `older_than` (Iceberg's max-ref-age sibling): additionally keep
       // everything committed at-or-after the timestamp — the newest
       // keepLast (floored at 1: the head can never expire) survive
@@ -2180,7 +1904,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       // defaulting it to epoch-0 would silently classify a recent
       // snapshot as expirable
       def commitTsOf(v: Long): Long = {
-        val p = new Path(branchManifestDir(root, name), v.toString)
+        val p = bms(v)
         graft.util.Fs.readSmallFileFs(fs, p).linesIterator.nextOption()
           .flatMap(_.trim.toLongOption).getOrElse(sys.error(
             s"expire_branch_snapshots('$name') on $table: branch " +
@@ -2193,20 +1917,19 @@ object VersionedTable extends org.apache.spark.internal.Logging {
           bvs.filter(commitTsOf(_) >= ts).toSet).getOrElse(Set.empty)
       val drop = bvs.filterNot(keep)
       if (drop.nonEmpty) {
-        def dirsOf(b: String, v: Long): Seq[Long] =
-          parseDirVersions(graft.util.Fs.readSmallFileFs(fs,
-            new Path(branchManifestDir(root, b), v.toString)), v)
+        def dirsOf(v: Long, p: Path): Seq[Long] =
+          parseDirVersions(graft.util.Fs.readSmallFileFs(fs, p), v)
         // resolve liveness BEFORE dropping manifests, like expireDrop
         val live = versionsOn(fs, root)
           .flatMap(dataVersionsOn(fs, root, _)).toSet ++
           branchNamesOn(fs, root).flatMap { b =>
-            branchVersionsOn(fs, root, b)
-              .filter(v => b != name || keep(v))
-              .flatMap(dirsOf(b, _))
+            branchManifestsOn(fs, root, b)
+              .filter { case (v, _) => b != name || keep(v) }
+              .flatMap { case (v, p) => dirsOf(v, p) }
           }
-        val droppedDirs = drop.flatMap(dirsOf(name, _)).toSet
-        drop.foreach(v => fs.delete(
-          new Path(branchManifestDir(root, name), v.toString), false))
+        val droppedDirs = drop.flatMap(v => dirsOf(v, bms(v))).toSet
+        drop.foreach(v => fs.delete(bms(v), false))
+        legacyBranchMax.remove(root.toString)
         (droppedDirs -- live).toSeq.sorted.foreach(k =>
           fs.delete(new Path(root, s"v=$k"), true))
       }
@@ -2313,7 +2036,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     // The redirect serves old DATA under the CURRENT declared schema
     // (evolved columns null-fill) — rollback restores content, not
     // schema, matching Iceberg's rollback_to_snapshot.
-    commitMeta(fs, root, table) { (vs, _) =>
+    publishClaimed(fs, root, table, None) { (vs, _) =>
       require(vs.contains(toVersion),
         s"version $toVersion not retained in $table")
       val target = dataVersionsOn(fs, root, toVersion)
@@ -2493,18 +2216,12 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * read as infinitely OLD — i.e. first in line for expiry. Every
     * manifest this code ever wrote starts with the epoch-millis line, so
     * an unparseable one is corruption, not a legacy format. */
-  private def commitTimeOn(fs: FileSystem, root: Path, v: Long): Long = {
-    val in = fs.open(new Path(manifestDir(root), v.toString))
-    val content =
-      try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    content.linesIterator.nextOption()
+  private def commitTimeOn(fs: FileSystem, root: Path, v: Long): Long =
+    manifestContentOf(fs, root, v).linesIterator.nextOption()
       .flatMap(_.trim.toLongOption)
       .getOrElse(throw new IllegalStateException(
         s"manifest $v of $root has no parseable commit timestamp; " +
           "refusing to time-resolve or expire against a corrupt manifest"))
-  }
 
   /** Snapshot history — the `table$snapshots` metadata surface
     * (Iceberg's snapshot listing, the reference's audit view of
@@ -2541,11 +2258,14 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     val live = vs.filterNot(dropSet)
       .flatMap(dataVersionsOn(fs, root, _)).toSet ++
       branchLiveDirsOn(fs, root)
+    // a dropped manifest's own dirs are the ones it references (its
+    // number names no dir: a metadata commit has none, and under
+    // contention a data commit's dir id differs from its version)
     drop.foreach { v =>
+      val dirs = dataVersionsOn(fs, root, v)
       fs.delete(new Path(manifestDir(root), v.toString), false)
-      if (!live.contains(v)) {
-        fs.delete(new Path(root, s"v=$v"), true)
-      }
+      dirs.filterNot(live).foreach(k =>
+        fs.delete(new Path(root, s"v=$k"), true))
     }
     drop
   }
@@ -2703,14 +2423,14 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     probeConditionalCreate(fs, root, table)
     // conditional create: two racing declarations — one wins, the other
     // fails loudly (the storedMeta pre-check above is only a fast path)
-    writeNextMetaGen(fs, root, ".table",
+    writeNextMetaGen(fs, root,
       s"partition=${partitionCols.mkString(",")}\n${schema.json}\n")
   }
 
   private def storedMeta(table: String)
       : Option[(Seq[String], org.apache.spark.sql.types.StructType)] = {
     val (fs, root) = fsFor(table)
-    currentMetaOn(fs, root, ".table").map { case (p, _) =>
+    currentMetaOn(fs, root).map { case (p, _) =>
       val lines = graft.util.Fs.readSmallFileFs(fs, p).linesIterator.toSeq
       val cols = lines.head.stripPrefix("partition=").split(",")
         .toSeq.map(_.trim).filter(_.nonEmpty)
@@ -2771,7 +2491,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     val evolved =
       org.apache.spark.sql.types.StructType(base.fields ++ newFields)
     probeConditionalCreate(fs, root, table)
-    writeNextMetaGen(fs, root, ".table",
+    writeNextMetaGen(fs, root,
       s"partition=${pcols.mkString(",")}\n${evolved.json}\n")
   }
 

@@ -1058,10 +1058,10 @@ object CdcQueries {
 
   /** Object-store-native commits (r14): the snapshot lifecycle — a full
     * write, two by-reference appends, a metadata-only manifest collapse
-    * — committed through the one commit protocol: versions are claimed
-    * by CONDITIONAL CREATE of a marker (`S3 If-None-Match PUT`), data
-    * writes directly into the claimed `v=N`, manifests publish by
-    * conditional create — ZERO renames on the commit path (the
+    * — committed through the one commit protocol: data-dir ids are
+    * reserved by CONDITIONAL CREATE of a marker (`S3 If-None-Match
+    * PUT`), data writes directly into the reserved `v=K`, manifests
+    * publish by conditional create — ZERO renames on the commit path (the
     * rename-refusing-filesystem proof lives in CreateProtocolSpec; this
     * entry gates the protocol's CORRECTNESS under the oracle). The
     * three slices partition raw lineitem, so the final aggregate equals

@@ -638,17 +638,6 @@ object GraftProcedureCatalog {
         if (input.isNullAt(3)) None else Some(input.getLong(3) / 1000L)))
   }
 
-  private object SetClaimTtl extends MaintProc("set_claim_ttl",
-    "deliberately migrate a table's pinned claim-liveness TTL " +
-      "(millis) — pinned at first commit so committer heartbeats and " +
-      "reaper coldness tests always share one window; a disagreeing " +
-      "session conf is refused (r17)",
-    Array(p("table", StringType), p("ttl_ms", LongType))) {
-    override protected def run(spark: SparkSession,
-        input: InternalRow): Seq[Maintenance.Report] =
-      Seq(Maintenance.setClaimTtl(str(input, 0), input.getLong(1)))
-  }
-
   private val procedures: Map[String, UnboundProcedure] = Map(
     "rewrite_data_files" -> RewriteDataFiles,
     "expire_snapshots" -> ExpireSnapshots,
@@ -660,6 +649,5 @@ object GraftProcedureCatalog {
     "create_branch" -> CreateBranch,
     "fast_forward" -> FastForward,
     "drop_branch" -> DropBranch,
-    "expire_branch_snapshots" -> ExpireBranchSnapshots,
-    "set_claim_ttl" -> SetClaimTtl)
+    "expire_branch_snapshots" -> ExpireBranchSnapshots)
 }

@@ -616,21 +616,22 @@ private final class GraftCowScan(
 }
 
 /** The write half of a group-based row-level operation (ReplaceData):
-  * the rewritten content lands as a NEW snapshot. [[toBatch]] CLAIMS
-  * the target version up front ([[VersionedTable.claimReplaceVersion]])
-  * and executors write DIRECTLY into the claimed `v=N` — no staging dir,
-  * no rename anywhere on the commit path; the claim makes the name
-  * exclusive, so no concurrent commit can own it and an abort
-  * ([[VersionedTable.abandonClaimOn]]) deletes only the claimed dir and
-  * its marker, never a published snapshot's data. Unpartitioned tables
-  * ride Spark's own parquet BatchWrite; partitioned tables write their
-  * Hive layout in the same single pass
+  * the rewritten content lands as a NEW snapshot. [[toBatch]] RESERVES
+  * a data-dir id K up front ([[VersionedTable.claimReplaceVersion]]) and
+  * executors write DIRECTLY into `v=K` — no staging dir, no rename
+  * anywhere on the commit path; the reservation makes the name
+  * exclusive, and an abort ([[VersionedTable.abandonClaimOn]]) deletes
+  * only the reserved dir and its marker, never a published snapshot's
+  * data. Unpartitioned tables ride Spark's own parquet BatchWrite;
+  * partitioned tables write their Hive layout in the same single pass
   * ([[org.apache.spark.sql.graft.PartitionedStagingWrite]]). The
   * driver-side commit() publishes through
-  * [[VersionedTable.publishClaimedReplace]] (or its branch twin): the
-  * manifest carries the untouched dirs by reference and the publish
-  * re-validates the base version — a lost race is a clean error with
-  * the claim the only thing cleaned up. */
+  * [[VersionedTable.publishClaimedReplace]] (or its branch twin) as the
+  * next manifest number, re-listing and retrying if another writer
+  * published that number first: the manifest carries the untouched dirs
+  * by reference and every attempt re-validates the base version — a
+  * concurrent commit is a clean error with the reservation the only
+  * thing cleaned up. No TTL, heartbeat or wait is involved. */
 private final class GraftReplaceWrite(
     root: String,
     spark: SparkSession,

@@ -187,8 +187,9 @@ object Fs {
     * racing callers on one path succeeds, every other one throws a
     * `FileAlreadyExistsException` (java.nio's on `file:`, whatever the
     * connector raises elsewhere). The one primitive every versioned-table
-    * commit rests on: claim markers, manifests, table metas, the
-    * liveness pin and tags.
+    * commit rests on: data-dir reservation markers, manifests (a lost
+    * race there re-reads the log and retries at the next number), table
+    * metas and tags.
     *
     * On `file:` Hadoop cannot be trusted with this: in Hadoop 3.4
     * `RawLocalFileSystem.create(p, overwrite = false)` is `exists()`

@@ -82,117 +82,259 @@ class CreateProtocolSpec extends SparkSpec {
     assert(VersionedTable.dataDirs(table).size == 3)
   }
 
-  test("a TTL-expired stale foreign claim SELF-REAPS on the publish " +
-      "path (r15) — no manual CALL; a young claim still blocks and " +
-      "survives cleanup") {
-    spark.conf.set(VersionedTable.ForeignWaitConfKey, "1500")
-    try {
-      val table = Files.createTempDirectory("graft_cp3_").toString + "/t"
-      VersionedTable.write(Seq(1).toDF("x"), table)
-      // a committer in another process claimed v2 and died long ago
-      // (epoch-0 creation time — well past the TTL), leaving a
-      // half-written data dir behind. Liveness (r16) is the YOUNGEST
-      // signal, and the TTL is PINNED at first commit (r17) — so the
-      // fixture fabricates genuinely OLD mtimes (real crash debris
-      // has old mtimes everywhere) instead of shrinking the TTL,
-      // which a pinned table now refuses.
-      val (fs, root) = graft.util.Fs.fsFor(table)
-      val claim = new org.apache.hadoop.fs.Path(root, "_versions/.claim-2")
-      val out = fs.create(claim, false)
-      out.write("0\n".getBytes); out.close()
-      val dead = new org.apache.hadoop.fs.Path(root, "v=2")
-      fs.mkdirs(dead)
-      fs.setTimes(dead, 1000L, -1L)
+  test("a dead foreign claim with a half-written dir does not delay an " +
+      "append — it lands past it at once — and remove_orphan_files " +
+      "removes it once cold") {
+    val table = Files.createTempDirectory("graft_cp3_").toString + "/t"
+    VersionedTable.write(Seq(1).toDF("x"), table)
+    // a committer in another process reserved v=2 and died long ago: an
+    // epoch-0 claim line and a half-written dir whose mtimes are all
+    // old (real crash debris has old mtimes everywhere)
+    val (fs, root) = graft.util.Fs.fsFor(table)
+    val claim = new org.apache.hadoop.fs.Path(root, "_versions/.claim-2")
+    val out = fs.create(claim, false)
+    out.write("dead-token\n0\n".getBytes); out.close()
+    val dead = new org.apache.hadoop.fs.Path(root, "v=2")
+    val part = new org.apache.hadoop.fs.Path(dead, "part-0-dead.parquet")
+    val o2 = fs.create(part, false); o2.write(1); o2.close()
+    fs.setTimes(part, 1000L, -1L)
+    fs.setTimes(dead, 1000L, -1L)
 
-      // pre-r15 this append ERRORED pointing at remove_orphan_files;
-      // the publish wait now reaps the TTL-expired claim itself — the
-      // append lands with zero operator intervention, and the crashed
-      // committer's claim marker AND orphaned data dir are gone
-      val v = VersionedTable.append(Seq(2).toDF("x"), table)
-      assert(v == 3L, s"append must allocate past the dead claim: $v")
-      assert(VersionedTable.read(spark, table).collect()
-        .map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
-      assert(!fs.exists(claim))
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(root, "v=2")))
-      assert(fs.listStatus(new org.apache.hadoop.fs.Path(root, "_versions"))
-        .map(_.getPath.getName).count(_.startsWith(".claim-")) == 0)
+    // nothing waits on the dead claim: the append reserves the next dir
+    // id and publishes the next manifest number, naming its dirs
+    val v = VersionedTable.append(Seq(2).toDF("x"), table)
+    assert(v == 2L, s"append must publish the next number: $v")
+    assert(dirNames(table) == Seq("v=1", "v=3"))
+    assert(VersionedTable.read(spark, table).collect()
+      .map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
+    assert(fs.exists(claim) && fs.exists(part),
+      "the commit path leaves foreign debris to remove_orphan_files")
 
-      // a YOUNG foreign claim (live committer mid-write elsewhere) is
-      // NOT debris: the publish path must wait (bounded, loud, still
-      // naming the self-reap TTL) and cleanup must leave the claim
-      // AND its data dir — including any _temporary in-flight work
-      // under it (r15: the orphan walk skips TTL-protected dirs)
-      val young = new org.apache.hadoop.fs.Path(root, "_versions/.claim-9")
-      val o2 = fs.create(young, false)
-      o2.write(s"${System.currentTimeMillis()}\n".getBytes); o2.close()
-      fs.mkdirs(new org.apache.hadoop.fs.Path(root, "v=9/_temporary/0"))
-      val e = intercept[IllegalArgumentException] {
-        VersionedTable.append(Seq(3).toDF("x"), table)
-      }
-      assert(e.getMessage.contains(VersionedTable.ClaimTtlConfKey))
-      assert(Maintenance.removeOrphans(spark, table).ok)
-      assert(fs.exists(young))
-      assert(fs.exists(
-        new org.apache.hadoop.fs.Path(root, "v=9/_temporary/0")),
-        "orphan cleanup must not touch in-flight work under a " +
-          "TTL-protected claim")
-      fs.delete(young, false)
-      fs.delete(new org.apache.hadoop.fs.Path(root, "v=9"), true)
-    } finally spark.conf.unset(VersionedTable.ForeignWaitConfKey)
+    // cold marker + cold dir: crash debris, removed with its dir
+    assert(Maintenance.removeOrphans(spark, table).ok)
+    assert(!fs.exists(claim))
+    assert(!fs.exists(dead))
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(root, "_versions"))
+      .map(_.getPath.getName).count(_.startsWith(".claim-")) == 0)
+    assert(VersionedTable.read(spark, table).collect()
+      .map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
   }
 
-  test("claim liveness (r16): a timestamp-old claim with a FRESH " +
-      "liveness signal (heartbeat sidecar, in-flight file mtimes) " +
-      "survives a concurrent publish AND remove_orphan_files; a truly " +
-      "cold claim still reaps") {
-    spark.conf.set(VersionedTable.ForeignWaitConfKey, "800")
-    try {
-      val table = Files.createTempDirectory("graft_cp7_").toString + "/t"
-      VersionedTable.write(Seq(1).toDF("x"), table)
-      val (fs, root) = graft.util.Fs.fsFor(table)
-      // a LIVE cross-process committer mid-long-write: its claim line
-      // says epoch 0 (far past any TTL — the r15 fixed-TTL reaper
-      // would destroy it), but its heartbeat sidecar is fresh and its
-      // executors are still landing task files under v=2
-      val claim = new org.apache.hadoop.fs.Path(root, "_versions/.claim-2")
+  test("a young foreign claim with in-flight _temporary files does not " +
+      "delay an append either, and survives remove_orphan_files") {
+    val table = Files.createTempDirectory("graft_cp7_").toString + "/t"
+    VersionedTable.write(Seq(1).toDF("x"), table)
+    val (fs, root) = graft.util.Fs.fsFor(table)
+    // a LIVE cross-process committer mid-write: a fresh claim line and
+    // executors still landing task files under v=2
+    val claim = new org.apache.hadoop.fs.Path(root, "_versions/.claim-2")
+    def writeClaim(ts: Long): Unit = {
+      fs.delete(claim, false)
       val out = fs.create(claim, false)
-      out.write("some-foreign-token\n0\n".getBytes); out.close()
-      val hb = new org.apache.hadoop.fs.Path(root, "_versions/.claim-2.hb")
-      val o2 = fs.create(hb, false); o2.write("0\n".getBytes); o2.close()
-      val inflight = new org.apache.hadoop.fs.Path(root,
-        "v=2/_temporary/0/part-inflight")
-      fs.mkdirs(inflight.getParent)
-      val f = fs.create(inflight, false); f.write(1); f.close()
-
-      // a concurrent publish must WAIT (bounded, loud) — never reap a
-      // claim that shows life, whatever its timestamp says
-      val e = intercept[IllegalArgumentException] {
-        VersionedTable.append(Seq(2).toDF("x"), table)
-      }
-      assert(e.getMessage.contains(VersionedTable.ClaimTtlConfKey))
-      assert(fs.exists(claim) && fs.exists(inflight),
-        "a live claim's marker and in-flight data must survive a " +
-          "blocked publish")
-      assert(Maintenance.removeOrphans(spark, table).ok)
-      assert(fs.exists(claim) && fs.exists(inflight),
-        "...and the orphan walk")
-
-      // heartbeat gone + file mtimes cold: NOW it is crash debris —
-      // the next publish self-reaps it with zero operator
-      // intervention. Age is fabricated via setTimes (r17: the TTL
-      // is pinned at first commit; a shrunk session conf refuses)
-      fs.delete(hb, false)
-      fs.setTimes(inflight, 1000L, -1L)
-      fs.setTimes(new org.apache.hadoop.fs.Path(root, "v=2"), 1000L, -1L)
-      val v = VersionedTable.append(Seq(3).toDF("x"), table)
-      assert(v == 3L)
-      assert(!fs.exists(claim))
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(root, "v=2")))
-      assert(VersionedTable.read(spark, table).collect()
-        .map(_.getInt(0)).sorted.toSeq == Seq(1, 3))
-    } finally {
-      spark.conf.unset(VersionedTable.ForeignWaitConfKey)
+      out.write(s"live-token\n$ts\n".getBytes); out.close()
     }
+    writeClaim(System.currentTimeMillis())
+    val inflight = new org.apache.hadoop.fs.Path(root,
+      "v=2/_temporary/0/part-inflight")
+    fs.mkdirs(inflight.getParent)
+    val f = fs.create(inflight, false); f.write(1); f.close()
+
+    val v = VersionedTable.append(Seq(2).toDF("x"), table)
+    assert(v == 2L)
+    assert(dirNames(table) == Seq("v=1", "v=3"))
+    assert(VersionedTable.read(spark, table).collect()
+      .map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
+
+    assert(Maintenance.removeOrphans(spark, table).ok)
+    assert(fs.exists(claim) && fs.exists(inflight),
+      "a young claim's marker and in-flight data must survive the " +
+        "orphan walk")
+    // a timestamp-old claim line is not enough to remove it either:
+    // the fresh task files under v=2 still show life
+    writeClaim(0L)
+    assert(Maintenance.removeOrphans(spark, table).ok)
+    assert(fs.exists(claim) && fs.exists(inflight),
+      "fresh files under the reserved dir must keep the claim alive")
+    assert(VersionedTable.read(spark, table).collect()
+      .map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
+  }
+
+  /** A graftrace:// root over a fresh local temp dir. */
+  private def raceRoot(prefix: String): String = {
+    spark.sparkContext.hadoopConfiguration.set("fs.graftrace.impl",
+      classOf[graft.util.ForeignManifestFileSystem].getName)
+    "graftrace://" + Files.createTempDirectory(prefix).toString
+  }
+
+  private def dirNames(table: String): Seq[String] =
+    VersionedTable.dataDirs(table)
+      .map(new org.apache.hadoop.fs.Path(_).getName)
+
+  private def claimsLeft(table: String): Seq[String] = {
+    val (fs, root) = graft.util.Fs.fsFor(s"$table/_versions")
+    fs.listStatus(root).map(_.getPath.getName)
+      .filter(_.startsWith(".claim-")).toSeq
+  }
+
+  test("lost publish race: a foreign manifest lands at N first — an " +
+      "append re-lists and publishes at N+1 carrying both commits; a " +
+      "replace based on N-1 refuses and cleans only its own claim") {
+    import graft.util.ForeignManifestFileSystem
+    val table = raceRoot("graft_race_") + "/t"
+    VersionedTable.write(Seq(1).toDF("x"), table)
+    // another process reserved dir 3, wrote it, and publishes manifest 2
+    // (dirs 1 and 3) the instant this append creates manifest 2
+    Seq(30).toDF("x").write.parquet(s"$table/v=3")
+    ForeignManifestFileSystem.foreign.set(
+      s"${System.currentTimeMillis()}\ndirs=1,3\nop=append\n")
+    val v = VersionedTable.append(Seq(2).toDF("x"), table)
+    assert(ForeignManifestFileSystem.foreign.get == null,
+      "the foreign commit never landed")
+    assert(v == 3L)
+    assert(VersionedTable.versions(table) == Seq(1L, 2L, 3L))
+    assert(dirNames(table) == Seq("v=1", "v=3", "v=2"))
+    assert(VersionedTable.read(spark, table).collect()
+      .map(_.getInt(0)).sorted.toSeq == Seq(1, 2, 30))
+    assert(claimsLeft(table).isEmpty)
+
+    val t2 = raceRoot("graft_race2_") + "/t"
+    VersionedTable.write(Seq(1).toDF("x"), t2)
+    Seq(30).toDF("x").write.parquet(s"$t2/v=3")
+    ForeignManifestFileSystem.foreign.set(
+      s"${System.currentTimeMillis()}\ndirs=1,3\nop=append\n")
+    val e = intercept[IllegalArgumentException] {
+      VersionedTable.replace(Seq(9).toDF("x"), t2,
+        keepDataVersions = Seq(1L), baseVersion = Some(1L))
+    }
+    assert(e.getMessage.contains("table moved to snapshot 2"), e.getMessage)
+    val (fs, root) = graft.util.Fs.fsFor(t2)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(root, "v=2")),
+      "the loser's own reserved dir is removed")
+    assert(fs.exists(new org.apache.hadoop.fs.Path(root, "v=3")),
+      "the winner's dir stands")
+    assert(claimsLeft(t2).isEmpty)
+    assert(VersionedTable.versions(t2) == Seq(1L, 2L))
+    assert(VersionedTable.read(spark, t2).collect()
+      .map(_.getInt(0)).sorted.toSeq == Seq(1, 30))
+  }
+
+  test("lost publish race across lines: main and branch manifests " +
+      "share one name per number — a branch manifest landing at N " +
+      "pushes a main append to N+1, a main append landing at N pushes " +
+      "a branch commit to N+1, and no commit's rows are lost") {
+    import graft.util.ForeignManifestFileSystem
+    val table = raceRoot("graft_race_br_") + "/t"
+    VersionedTable.write(Seq(1).toDF("x"), table)
+    VersionedTable.createBranch(table, "b")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+      df.collect().map(_.getInt(0)).sorted.toSeq
+
+    // another process's branch commit (dir 3) lands manifest 2 the
+    // instant this main append creates manifest 2
+    Seq(30).toDF("x").write.parquet(s"$table/v=3")
+    ForeignManifestFileSystem.foreign.set(
+      s"${System.currentTimeMillis()}\ndirs=1,3\nop=append\nbranch=b\n")
+    assert(VersionedTable.append(Seq(2).toDF("x"), table) == 3L)
+    assert(ForeignManifestFileSystem.foreign.get == null,
+      "the foreign commit never landed")
+    assert(VersionedTable.versions(table) == Seq(1L, 3L))
+    assert(VersionedTable.branches(table) == Map("b" -> 2L))
+    assert(rows(VersionedTable.read(spark, table)) == Seq(1, 2))
+    assert(rows(VersionedTable.readBranch(spark, table, "b")) == Seq(1, 30))
+    intercept[IllegalArgumentException] {
+      VersionedTable.read(spark, table, Some(2L))
+    }
+
+    // another process's main append (dir 5, based on main 3) lands
+    // manifest 4 the instant this branch commit creates manifest 4
+    Seq(50).toDF("x").write.parquet(s"$table/v=5")
+    ForeignManifestFileSystem.foreign.set(
+      s"${System.currentTimeMillis()}\ndirs=1,2,5\nop=append\n")
+    assert(VersionedTable.appendToBranch(Seq(4).toDF("x"), table, "b") == 5L)
+    assert(VersionedTable.branches(table) == Map("b" -> 5L))
+    assert(rows(VersionedTable.readBranch(spark, table, "b")) ==
+      Seq(1, 4, 30))
+    // the next main append builds on the foreign main manifest 4, not
+    // on the branch manifest 5 or on main 3
+    assert(VersionedTable.append(Seq(6).toDF("x"), table) == 6L)
+    assert(VersionedTable.versions(table) == Seq(1L, 3L, 4L, 6L))
+    assert(rows(VersionedTable.read(spark, table)) == Seq(1, 2, 6, 50))
+    assert(claimsLeft(table).isEmpty)
+    val (fs, root) = graft.util.Fs.fsFor(s"$table/_versions")
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(root, "branch-b"))
+      .map(_.getPath.getName).toSeq == Seq(".base"),
+      "branch manifests live in the shared namespace")
+
+    VersionedTable.dropBranch(table, "b")
+    assert(fs.listStatus(root).map(_.getPath.getName)
+      .filter(_.forall(_.isDigit)).sorted.toSeq == Seq("1", "3", "4", "6"))
+    assert(VersionedTable.versions(table) == Seq(1L, 3L, 4L, 6L))
+  }
+
+  test("branch manifests that older code wrote under " +
+      "_versions/branch-<b>/N are read, counted and dropped") {
+    val table = Files.createTempDirectory("graft_oldbr_").toString + "/t"
+    VersionedTable.write(Seq(1).toDF("x"), table)
+    val old = java.nio.file.Paths.get(table, "_versions", "branch-old")
+    Files.createDirectories(old)
+    Files.write(old.resolve(".base"),
+      s"1\n${System.currentTimeMillis()}\n".getBytes)
+    Seq(2).toDF("x").write.parquet(s"$table/v=2")
+    Files.write(old.resolve("2"),
+      s"${System.currentTimeMillis()}\ndirs=1,2\nop=append\n".getBytes)
+    assert(VersionedTable.branches(table) == Map("old" -> 2L))
+    assert(VersionedTable.versions(table) == Seq(1L))
+    // the next commit of any line takes the number past the old manifest
+    assert(VersionedTable.appendToBranch(Seq(3).toDF("x"), table, "old") ==
+      3L)
+    assert(VersionedTable.branchHistory(table, "old").map(_._1) ==
+      Seq(2L, 3L))
+    assert(VersionedTable.readBranch(spark, table, "old").collect()
+      .map(_.getInt(0)).sorted.toSeq == Seq(1, 2, 3))
+    assert(VersionedTable.readRef(spark, table, "old@2").count() == 2)
+    VersionedTable.dropBranch(table, "old")
+    assert(!Files.exists(old))
+    assert(!Files.exists(java.nio.file.Paths.get(table, "_versions", "3")))
+    assert(!Files.exists(java.nio.file.Paths.get(table, "v=2")))
+    assert(!Files.exists(java.nio.file.Paths.get(table, "v=3")))
+    assert(VersionedTable.append(Seq(4).toDF("x"), table) == 2L)
+    assert(VersionedTable.read(spark, table).collect()
+      .map(_.getInt(0)).sorted.toSeq == Seq(1, 4))
+  }
+
+  test("dir-id reuse: a manifest referencing v=K above its own number " +
+      "(no marker) makes the next reservation take K+1 — a failing " +
+      "write then removes only its own dir and leaves v=K intact") {
+    val table = Files.createTempDirectory("graft_reuse_").toString + "/t"
+    VersionedTable.write(Seq(1).toDF("x"), table)
+    Seq(30).toDF("x").write.parquet(s"$table/v=3")
+    Files.write(java.nio.file.Paths.get(table, "_versions", "2"),
+      s"${System.currentTimeMillis()}\ndirs=1,3\nop=append\n".getBytes)
+    val v3 = java.nio.file.Paths.get(table, "v=3")
+    def v3Files: Seq[String] = Files.list(v3).iterator().asScala
+      .map(_.getFileName.toString).toSeq.sorted
+    val before = v3Files
+
+    val e = intercept[Exception] {
+      VersionedTable.append(spark.range(3)
+        .selectExpr("CAST(id + CAST(raise_error('boom') AS BIGINT) AS INT) AS x"),
+        table)
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(c => String.valueOf(c.getMessage))
+    assert(causes.exists(_.contains("boom")), e.toString)
+    assert(v3Files == before, "the published dir v=3 must be untouched")
+    assert(!Files.exists(java.nio.file.Paths.get(table, "v=4")))
+    assert(claimsLeft(table).isEmpty)
+    assert(VersionedTable.read(spark, table).collect()
+      .map(_.getInt(0)).sorted.toSeq == Seq(1, 30))
+
+    val v = VersionedTable.append(Seq(2).toDF("x"), table)
+    assert(v == 3L)
+    assert(dirNames(table) == Seq("v=1", "v=3", "v=4"))
+    assert(VersionedTable.read(spark, table).collect()
+      .map(_.getInt(0)).sorted.toSeq == Seq(1, 2, 30))
+    assert(v3Files == before)
   }
 
   test("create protocol: appendBatch stays exactly-once under " +
@@ -257,8 +399,8 @@ class CreateProtocolSpec extends SparkSpec {
     assert(VersionedTable.appendBatch(Seq(9).toDF("x"), table, 7L).isEmpty)
     assert(VersionedTable.read(spark, table).count() == 1)
 
-    // row-level replace, tags, the branch (WAP) verbs, claim-TTL
-    // migration and orphan cleanup ride the same zero-rename path
+    // row-level replace, tags, the branch (WAP) verbs and orphan
+    // cleanup ride the same zero-rename path
     val cur = VersionedTable.versions(table).last
     VersionedTable.replace(Seq(8).toDF("x"), table, Nil, Some(cur))
     VersionedTable.createTag(table, "t1")
@@ -271,7 +413,6 @@ class CreateProtocolSpec extends SparkSpec {
       .sorted.toSeq == Seq(6, 7))
     VersionedTable.dropBranch(table, "wap")
     VersionedTable.dropTag(table, "t1")
-    assert(Maintenance.setClaimTtl(table, 300000L).ok)
     assert(Maintenance.removeOrphans(spark, table).ok)
     assert(VersionedTable.read(spark, table).count() == 2)
 
@@ -364,6 +505,13 @@ class CreateProtocolSpec extends SparkSpec {
     // the old per-table protocol pin, in both generations
     Files.write(vdir.resolve(".protocol"), "rename".getBytes)
     Files.write(vdir.resolve(".protocol.g0"), "create".getBytes)
+    // the old claim-TTL pin — a 1 ms TTL would make every fresh temp
+    // sibling cold at once — an orphaned heartbeat sidecar of the old
+    // claim liveness, and a session that still sets the old TTL conf
+    Files.write(vdir.resolve(".liveness.g0"), "claimTtlMs=1\n".getBytes)
+    Files.write(vdir.resolve(".claim-7.hb"), "0\n".getBytes)
+    val ttlConf = "spark.graft.commit.claimTtlMs"
+    spark.conf.set(ttlConf, "1")
     // the old addColumns rewrote `.table` IN PLACE (temp + rename)
     Files.write(vdir.resolve(".table"),
       s"partition=\n${StructType.fromDDL("x INT, note STRING").json}\n"
@@ -383,10 +531,11 @@ class CreateProtocolSpec extends SparkSpec {
 
     assert(VersionedTable.storedSchema(table).get.fieldNames.toSeq ==
       Seq("x", "note"))
-    // the marker-less cold dir is reaped and its number reused
-    assert(VersionedTable.append(Seq((3, "c")).toDF("x", "note"),
+    // the marker-less dir blocks nothing: the append steps past it to
+    // dir 4 and publishes manifest 3
+    try assert(VersionedTable.append(Seq((3, "c")).toDF("x", "note"),
       table) == 3L)
-    assert(!Files.exists(dead.resolve("part-dead.parquet")))
+    finally spark.conf.unset(ttlConf)
     val rows = VersionedTable.read(spark, table).orderBy("x").collect()
       .map(r => (r.getInt(0), Option(r.getString(1)))).toSeq
     assert(rows == Seq((1, None), (2, None), (3, Some("c"))))
@@ -404,7 +553,10 @@ class CreateProtocolSpec extends SparkSpec {
     val rep = Maintenance.removeOrphans(spark, table)
     assert(rep.ok, rep.detail)
     assert(!Files.exists(stage))
+    assert(!Files.exists(dead.resolve("part-dead.parquet")),
+      "the marker-less cold dir is orphan debris")
     assert(!Files.exists(coldTmp) && Files.exists(freshTmp))
+    assert(!Files.exists(vdir.resolve(".claim-7.hb")))
     assert(VersionedTable.read(spark, table).collect()
       .map(_.getInt(0)).toSeq == Seq(1))
     assert(VersionedTable.append(Seq((5, "e")).toDF("x", "note"),
@@ -414,90 +566,9 @@ class CreateProtocolSpec extends SparkSpec {
     assert(new String(Files.readAllBytes(vdir.resolve(".protocol"))) ==
       "rename")
     assert(Files.exists(vdir.resolve(".protocol.g0")))
+    assert(Files.exists(vdir.resolve(".liveness.g0")))
     assert(!Files.list(vdir).iterator().asScala
       .exists(_.getFileName.toString.startsWith(".claim-")))
-  }
-
-  test("claim-TTL PIN (r17): the first commit pins the TTL in table " +
-      "metadata; a session whose conf explicitly disagrees cannot " +
-      "even attempt a reap (the r16-verdict conf-drift corruption); " +
-      "set_claim_ttl refuses under a live claim and migrates once it " +
-      "is cold; heartbeat scheduler queue drains after commits") {
-    spark.conf.set(VersionedTable.ForeignWaitConfKey, "600")
-    try {
-      val table = Files.createTempDirectory("graft_cp8_").toString + "/t"
-      VersionedTable.write(Seq(1).toDF("x"), table)
-      // pinned at first commit from the session default (10 min)
-      assert(VersionedTable.claimTtlOf(table).contains(600000L))
-      val (fs, root) = graft.util.Fs.fsFor(table)
-      assert(fs.exists(new org.apache.hadoop.fs.Path(root,
-        "_versions/.liveness")))
-
-      // a LIVE foreign committer: epoch-0 claim line (slow write,
-      // way past any TTL) but a FRESH heartbeat
-      val claim = new org.apache.hadoop.fs.Path(root, "_versions/.claim-2")
-      val out = fs.create(claim, false)
-      out.write("foreign-token\n0\n".getBytes); out.close()
-      val hb = new org.apache.hadoop.fs.Path(root, "_versions/.claim-2.hb")
-      val o2 = fs.create(hb, false); o2.write("x".getBytes); o2.close()
-
-      // the r16-verdict hazard: a reaper session configured with a
-      // TTL far below the committer's (whose beat period derives
-      // from the PINNED one) would read the live claim as cold
-      // between beats. The pin refuses the disagreeing conf up
-      // front, naming the migration verb — before any claim marker
-      // of our own is written
-      spark.conf.set(VersionedTable.ClaimTtlConfKey, "100")
-      val e = intercept[IllegalArgumentException] {
-        VersionedTable.append(Seq(2).toDF("x"), table)
-      }
-      assert(e.getMessage.contains("set_claim_ttl"))
-      assert(fs.exists(claim) && fs.exists(hb),
-        "the live claim must be untouched by the refused session")
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(root,
-        "_versions/.claim-3")),
-        "the refusal must fire before our own claim is written")
-
-      // an AGREEING conf proceeds — and then waits out the live
-      // foreign claim (bounded, loud), never reaping it
-      spark.conf.set(VersionedTable.ClaimTtlConfKey, "600000")
-      val e2 = intercept[IllegalArgumentException] {
-        VersionedTable.append(Seq(2).toDF("x"), table)
-      }
-      assert(e2.getMessage.contains(VersionedTable.ClaimTtlConfKey))
-      assert(fs.exists(claim) && fs.exists(hb))
-      spark.conf.unset(VersionedTable.ClaimTtlConfKey)
-
-      // migration refuses while the claim still shows liveness —
-      // re-pinning a shorter TTL under a live old-TTL committer is
-      // exactly the corruption the pin exists to prevent
-      val r = Maintenance.setClaimTtl(table, 300L)
-      assert(!r.ok && r.detail.contains("liveness"), r.detail)
-
-      // heartbeat gone, no data dir, epoch-0 line: cold — the
-      // deliberate migration now pins a new generation
-      fs.delete(hb, false)
-      val r2 = Maintenance.setClaimTtl(table, 120000L)
-      assert(r2.ok, r2.detail)
-      assert(VersionedTable.claimTtlOf(table).contains(120000L))
-      assert(fs.exists(new org.apache.hadoop.fs.Path(root,
-        "_versions/.liveness.g0")))
-
-      // the cold claim self-reaps under the migrated TTL; the commit
-      // lands and the heartbeat scheduler's queue is DRAINED (r17:
-      // removeOnCancelPolicy — no dead futures linger between beats)
-      val v = VersionedTable.append(Seq(2).toDF("x"), table)
-      assert(v == 3L)
-      assert(!fs.exists(claim))
-      assert(VersionedTable.read(spark, table).collect()
-        .map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
-      assert(VersionedTable.heartbeatQueueSize == 0,
-        "stopClaimHeartbeat must remove the cancelled task from the " +
-          "scheduler queue immediately")
-    } finally {
-      spark.conf.unset(VersionedTable.ForeignWaitConfKey)
-      spark.conf.unset(VersionedTable.ClaimTtlConfKey)
-    }
   }
 
   test("liveness dir walk (r17): early-exits on the first fresh entry " +
@@ -512,8 +583,8 @@ class CreateProtocolSpec extends SparkSpec {
     VersionedTable.write(Seq(1).toDF("x"), table)
     val (fs, root) = graft.util.Fs.fsFor(table)
 
-    // foreign claim with an epoch-0 line and NO heartbeat: the dir
-    // walk is the deciding liveness signal
+    // foreign claim with an epoch-0 line: the dir walk is the deciding
+    // signal
     val claim = new org.apache.hadoop.fs.Path(root, "_versions/.claim-2")
     val out = fs.create(claim, false)
     out.write("foreign-token\n0\n".getBytes); out.close()
@@ -537,15 +608,15 @@ class CreateProtocolSpec extends SparkSpec {
 
     // everything genuinely old now — but the listing THROWS (an S3
     // throttle mid-decision): FAIL CLOSED, the claim reads live and
-    // the reap waits for a clean read
+    // the cleanup waits for a clean read
     files.foreach(fs.setTimes(_, 1000L, -1L))
     fs.setTimes(dir, 1000L, -1L)
     CountingLivenessFileSystem.failListFiles.set(true)
     try assert(VersionedTable.protectedClaimVersions(fs, root) == Set(2L),
-      "a transient listing failure must never authorize a reap")
+      "a transient listing failure must never authorize removal")
     finally CountingLivenessFileSystem.failListFiles.set(false)
 
-    // clean read, genuinely cold: the claim is reapable
+    // clean read, genuinely cold: remove_orphan_files may take it
     assert(VersionedTable.protectedClaimVersions(fs, root).isEmpty)
   }
 

@@ -43,6 +43,10 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.write(Seq(4).toDF("x"), table) == 1L)
     assert(VersionedTable.read(spark, table).collect().map(_.getInt(0))
       .toSeq == Seq(4))
+    // no per-JVM state outlives the root: the rewritten root carries no
+    // claim-TTL pin (no code writes one any more)
+    assert(!Files.list(java.nio.file.Paths.get(table, "_versions"))
+      .anyMatch(_.getFileName.toString.startsWith(".liveness")))
     rmRoot()
     VersionedTable.create(table, StructType.fromDDL("x INT"))
     assert(VersionedTable.append(Seq(5).toDF("x"), table) == 1L)
@@ -382,29 +386,36 @@ class VersionedTableSpec extends SparkSpec {
     assert(eu.getMessage.contains("neither a version, a tag, nor"))
   }
 
-  test("metadata commits CLAIM their version like data commits (r15): " +
-      "a foreign unmanifested v=N dir blocks the number instead of " +
-      "being silently overwritten, and the claim dir drops post-publish") {
+  test("metadata commits reserve nothing (r15 guarantee kept): a " +
+      "foreign unmanifested v=N dir is neither adopted nor overwritten " +
+      "by a rollback, and expiring that rollback leaves the dir alone") {
     val table = Files.createTempDirectory("graft_vt16_").toString + "/t"
     VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), table) // v1
     VersionedTable.write(Seq((2L, "b")).toDF("k", "v"), table) // v2
     val (fs, root) = graft.util.Fs.fsFor(table)
-    // a cross-process committer claimed v=3 and is mid-commit: a
-    // metadata commit must NOT publish manifest 3 over that claim
-    // (pre-r15 it renamed its manifest unclaimed — silent replacement)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(root, "v=3"))
-    val e = intercept[IllegalArgumentException] {
-      VersionedTable.rollback(table, 1L)
-    }
-    assert(e.getMessage.contains("remove_orphan_files"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(root, "_versions/3")),
-      "no manifest may land while the number is foreign-claimed")
-    fs.delete(new org.apache.hadoop.fs.Path(root, "v=3"), true)
+    // a cross-process committer reserved dir 3 and is mid-write
+    val inflight = new org.apache.hadoop.fs.Path(root, "v=3/part-inflight")
+    fs.mkdirs(inflight.getParent)
+    val o = fs.create(inflight, false); o.write(1); o.close()
+    // the rollback publishes manifest 3 without waiting; its content is
+    // the restored dir only — the foreign dir is never part of it
     assert(VersionedTable.rollback(table, 1L) == 3L)
-    // the metadata commit's empty claim dir is dropped once published
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(root, "v=3")))
+    assert(VersionedTable.dataDirs(table)
+      .map(new org.apache.hadoop.fs.Path(_).getName) == Seq("v=1"))
     assert(VersionedTable.read(spark, table).collect()
       .map(_.getLong(0)).toSeq == Seq(1L))
+    assert(fs.exists(inflight))
+    // a later data commit steps past the foreign dir id
+    assert(VersionedTable.write(Seq((4L, "d")).toDF("k", "v"), table) == 4L)
+    assert(VersionedTable.dataDirs(table)
+      .map(new org.apache.hadoop.fs.Path(_).getName) == Seq("v=4"))
+    // expiring manifest 3 drops the dirs IT references, never the dir
+    // that merely shares its number
+    VersionedTable.expire(table, keepLast = 1)
+    assert(VersionedTable.versions(table) == Seq(4L))
+    assert(fs.exists(inflight),
+      "a foreign in-flight dir must survive expiry of the same number")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(root, "v=1")))
   }
 
   test("rewriteManifests collapses the read side to a file list " +
@@ -500,39 +511,36 @@ class VersionedTableSpec extends SparkSpec {
       Files.createTempDirectory("graft_vt9d_").toString + "/t", vSchema)
   }
 
-  test("rename-protocol self-heal (r16, CreateProtocolSpec parity): a " +
-      "crashed committer's unmanifested v=N dir un-wedges later commits " +
-      "once COLD; a fresh dir still blocks loudly (a live committer's " +
-      "claim-to-manifest window)") {
+  test("a crashed committer's unmanifested v=N dir never blocks a " +
+      "commit: fresh or cold, the append steps past it untouched, and " +
+      "remove_orphan_files reclaims it") {
     val table = Files.createTempDirectory("graft_vt10_").toString + "/t"
     VersionedTable.write(Seq(1).toDF("x"), table) // v1
     val (fs, root) = graft.util.Fs.fsFor(table)
-    // crash debris: a committer renamed its stage to v=2 and died
-    // before its manifest landed — exactly the wedge the pre-r16
-    // contract documented as needing a manual remove_orphan_files
+    // crash debris of the retired rename protocol: a committer renamed
+    // its stage to v=2 and died before its manifest landed
     val orphan = new org.apache.hadoop.fs.Path(root, "v=2/part-dead")
     fs.mkdirs(orphan.getParent)
     val o = fs.create(orphan, false); o.write(1); o.close()
 
-    // FRESH dir: may be a live committer milliseconds from its
-    // manifest — the claim loop must refuse loudly, never reap
-    val e = intercept[IllegalArgumentException] {
-      VersionedTable.append(Seq(2).toDF("x"), table)
-    }
-    assert(e.getMessage.contains("cannot claim data dir"))
-    assert(fs.exists(orphan),
-      "a fresh unmanifested dir must survive the claim loop")
-
-    // COLD dir (every mtime past the TTL): the same commit self-heals,
-    // reuses the number, and the table is whole. Age is fabricated via
-    // setTimes (r17: the TTL is pinned at first commit; a shrunk
-    // session conf refuses)
+    // FRESH dir: the commit reserves the next dir id and never touches it
+    assert(VersionedTable.append(Seq(2).toDF("x"), table) == 2L)
+    assert(fs.exists(orphan))
+    // COLD dir: same — no reap on the commit path
     fs.setTimes(orphan, 1000L, -1L)
     fs.setTimes(orphan.getParent, 1000L, -1L)
-    val v = VersionedTable.append(Seq(2).toDF("x"), table)
-    assert(v == 2L, s"the reaped number must be reused: $v")
-    assert(!fs.exists(orphan))
+    assert(VersionedTable.append(Seq(3).toDF("x"), table) == 3L)
+    assert(fs.exists(orphan))
+    assert(VersionedTable.dataDirs(table)
+      .map(new org.apache.hadoop.fs.Path(_).getName) ==
+      Seq("v=1", "v=3", "v=4"))
     assert(VersionedTable.read(spark, table).collect()
-      .map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
+      .map(_.getInt(0)).sorted.toSeq == Seq(1, 2, 3))
+    // the orphan dir is unreferenced and unreserved: the manual verb
+    // reclaims it, and the table stays whole
+    assert(Maintenance.removeOrphans(spark, table).ok)
+    assert(!fs.exists(orphan.getParent))
+    assert(VersionedTable.read(spark, table).collect()
+      .map(_.getInt(0)).sorted.toSeq == Seq(1, 2, 3))
   }
 }

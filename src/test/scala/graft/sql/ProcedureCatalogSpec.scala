@@ -162,7 +162,7 @@ class ProcedureCatalogSpec extends SparkSpec {
       Seq("create_branch", "create_tag", "drop_branch", "drop_tag",
         "expire_branch_snapshots", "expire_snapshots", "fast_forward",
         "remove_orphan_files", "repartition_table", "rewrite_data_files",
-        "rewrite_manifests", "set_claim_ttl"))
+        "rewrite_manifests"))
     assert(cat.listProcedures(Array("other")).isEmpty)
   }
 }

@@ -10,10 +10,11 @@ import org.apache.hadoop.fs.permission.FsPermission
 /** Test-only local filesystem under the scheme `graftcnt` that COUNTS
   * the entries a recursive `listFiles` iteration actually consumes and
   * can simulate a TRANSIENT listing failure — the observability the
-  * r17 claim-liveness specs need: the reap-decision dir walk must
-  * short-circuit on the first fresh mtime (never listing a claimed
-  * dir end-to-end), and a listing error must read as LIVE (fail
-  * closed), never authorizing a reap of in-flight data. */
+  * orphan walk's claim-age specs need: the dir walk that decides
+  * whether a claim still shows life must short-circuit on the first
+  * fresh mtime (never listing a claimed dir end-to-end), and a listing
+  * error must read as LIVE (fail closed), never authorizing removal of
+  * in-flight data. */
 final class CountingLivenessFileSystem extends RawLocalFileSystem {
 
   override def getScheme: String = "graftcnt"
