@@ -76,8 +76,10 @@ object Bench {
     * q159) measure GC/memory pressure, not their own plan (observed
     * 2-2.6x inflation in full-catalog runs vs solo). Safe here because
     * every cross-query cache in the repo holds driver-side values
-    * (paths, models), never persisted DataFrames — any block alive
-    * between queries is garbage by construction. The System.gc() still
+    * (paths, models), never persisted DataFrames — the query catalog's
+    * per-input fixtures all go through `graft.queries.Fixtures`, whose
+    * contract states it — so any block alive between queries is garbage
+    * by construction. The System.gc() still
     * runs afterward so the ContextCleaner also releases dead SHUFFLE
     * files, which blocking unpersist does not cover. */
   def freeBlocks(spark: SparkSession): Unit = {

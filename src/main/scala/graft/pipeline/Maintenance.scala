@@ -25,37 +25,22 @@ import org.apache.spark.sql.SparkSession
   *   - object stores (`s3a:`, `gs:`, `abfs:`, …) — "rename" is
   *     copy+delete: non-atomic AND O(data). The swap's crash-safety
   *     argument does not hold, so rewrite actions REFUSE these schemes
-  *     ([[NonAtomicRenameSchemes]]) with a report pointing at the
-  *     correct tool — a manifest/table-format commit
+  *     ([[graft.util.Fs.NonAtomicRenameSchemes]]) with a report
+  *     pointing at the correct tool — a manifest/table-format commit
   *     ([[VersionedTable]] locally, Iceberg in production), which is
-  *     how the reference itself compacts on S3.
+  *     how the reference itself compacts on S3. [[compactVersioned]]
+  *     is that tool: it commits through [[VersionedTable.write]], which
+  *     renames nothing, so it runs on every scheme.
   */
 object Maintenance {
 
   final case class Report(table: String, action: String, ok: Boolean,
       detail: String)
 
-  /** Schemes whose Hadoop connector implements rename as copy+delete.
-    * The two-rename swap protocol is unsound there (a crash mid-"rename"
-    * leaves a partial copy AND the source; [[removeOrphans]]'s
-    * leaf-present/absent dichotomy stops being exhaustive), so rewrite
-    * actions refuse rather than corrupt. Deliberately a blocklist, not
-    * an allowlist: an unknown scheme is assumed rename-capable the way
-    * `hdfs`/`file`/NFS mounts are, and a deployment adding a new
-    * object-store connector extends the shared set — ONE set
-    * ([[graft.util.Fs.NonAtomicRenameSchemes]]) governs every
-    * rename-based commit in the engine (maintenance rewrites,
-    * VersionedTable manifests, stream-state swaps). */
-  private[pipeline] val NonAtomicRenameSchemes: Set[String] =
-    graft.util.Fs.NonAtomicRenameSchemes
-
-  private def schemeOf(fs: FileSystem): String =
-    Option(fs.getUri.getScheme).getOrElse("file")
-
   private def renameGuard(fs: FileSystem, table: String,
       action: String): Option[Report] = {
-    val s = schemeOf(fs)
-    if (NonAtomicRenameSchemes(s))
+    val s = graft.util.Fs.schemeOf(fs)
+    if (graft.util.Fs.NonAtomicRenameSchemes(s))
       Some(Report(table, action, ok = false,
         s"scheme '$s': rename is copy+delete (non-atomic, O(data)) — " +
           "the leaf-swap protocol is unsound here; compact through a " +
@@ -259,10 +244,6 @@ object Maintenance {
       require(VersionedTable.isVersioned(tableDir),
         s"$tableDir is not a versioned table root")
       val (fs, _) = fsFor(hadoopConf(spark), tableDir)
-      renameGuard(fs, tableDir, "compact_snapshots") match {
-        case Some(r) => return r
-        case None => ()
-      }
       val dirs = VersionedTable.dataDirs(tableDir)
       val bytes = dirs.map(d => dirSize(fs, new Path(d))).sum
       val nf = targetFileCount(bytes, targetFileBytes)

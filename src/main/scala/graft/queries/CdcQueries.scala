@@ -95,20 +95,6 @@ object CdcQueries {
     s.sql(mergeSql)
   }
 
-  private val rollbackTables =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Delete the per-dir rollback warehouses on JVM exit — the
-    * ExtQueries.indexCleanupHook discipline, so repeated bench/verify
-    * processes don't accumulate graft-rollback-* dirs in the temp dir. */
-  private lazy val rollbackCleanupHook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      (rollbackTables.values ++ maintTables.values ++ writeTables.values)
-        .foreach(t =>
-          graft.util.Fs.deleteRecursively(new java.io.File(t).getParentFile))
-    }, "graft-rollback-cleanup"))
-  }
-
   /** Snapshot rollback end-to-end (Iceberg `rollback_to_snapshot`,
     * reference: iceberg_maintenance.py surface): a good gold aggregate
     * is committed (v1), a corrupted recompute lands on top (v2), and
@@ -116,12 +102,16 @@ object CdcQueries {
     * (v3) — no data rewrite, history intact. The query reads the
     * CURRENT table; the oracle recomputes the good aggregate from raw —
     * so a rollback bug (reading v2, losing rows, breaking the redirect)
-    * hash-mismatches. Setup once per dir per JVM (q143 discipline). */
-  def q169Rollback(s: SparkSession, dir: String): DataFrame = {
-    val table = rollbackTables.getOrElseUpdate(dir, {
-      rollbackCleanupHook
-      val t0 = java.nio.file.Files
-        .createTempDirectory("graft-rollback-").toString + "/gold"
+    * hash-mismatches. */
+  def q169Rollback(s: SparkSession, dir: String): DataFrame =
+    VersionedTable.read(s, s"${rollbackWarehouse(s, dir)}/gold")
+      .orderBy(col("o_orderstatus"))
+
+  /** The warehouse of q169's `gold` table (v1 good, v2 zeroed, v3 =
+    * rollback redirect at v1's data), shared by q169, q186 and q190. */
+  private def rollbackWarehouse(s: SparkSession, dir: String): String =
+    Fixtures.once("rollback", dir) { w =>
+      val t0 = s"$w/gold"
       val good = t(s, dir, "orders")
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_orders"),
@@ -132,14 +122,8 @@ object CdcQueries {
         good.withColumn("n_orders", lit(0L))
           .withColumn("total_price", lit(0.0d)), t0)
       VersionedTable.rollback(t0, 1L)
-      t0
-    })
-    VersionedTable.read(s, table)
-      .orderBy(col("o_orderstatus"))
-  }
-
-  private val maintTables =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+      w
+    }
 
   /** M1–M3 driven from PURE SQL TEXT (Spark 4 CALL procedures,
     * [[graft.sql.GraftProcedureCatalog]]) with an ORACLE on the result:
@@ -152,10 +136,8 @@ object CdcQueries {
     * require()d ok in setup: a refused or failed rewrite errors the
     * query rather than silently passing on unchanged data. */
   def q183SqlMaintenance(s: SparkSession, dir: String): DataFrame = {
-    val table = maintTables.getOrElseUpdate(dir, {
-      rollbackCleanupHook
-      val t0 = java.nio.file.Files
-        .createTempDirectory("graft-rollback-").toString + "/li"
+    val table = Fixtures.once("sql-maintenance", dir) { w =>
+      val t0 = s"$w/li"
       t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"),
           col("l_returnflag"))
@@ -170,7 +152,7 @@ object CdcQueries {
         s"CALL graft.system.remove_orphan_files(table => '$t0')").collect()
       require(orp.head.getBoolean(2), orp.head.getString(3))
       t0
-    })
+    }
     s.read.parquet(table)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_rows"),
@@ -188,8 +170,7 @@ object CdcQueries {
     * redirect, a history that lists expired/phantom versions, or a
     * mis-ordered listing all hash-mismatch against the literal oracle. */
   def q186SnapshotHistory(s: SparkSession, dir: String): DataFrame = {
-    q169Rollback(s, dir).count() // ensure the versioned fixture exists
-    VersionedTable.history(s, rollbackTables(dir))
+    VersionedTable.history(s, s"${rollbackWarehouse(s, dir)}/gold")
       .select(col("version"), col("data_version"), col("is_current"))
       .orderBy(col("version"))
   }
@@ -225,15 +206,14 @@ object CdcQueries {
   }
 
   /** dirs whose q190 catalog≡TVF agreement check already ran (the check
-    * is fixture-shaped — once per dir per JVM, the q191 discipline — so
-    * bench reps time the time-travel reads, not six extra round trips). */
+    * is fixture-shaped — once per dir per JVM — so bench reps time the
+    * time-travel reads, not six extra round trips). */
   private val q190Checked =
     scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   def q190VersionAsOf(s: SparkSession, dir: String): DataFrame = {
-    q169Rollback(s, dir).count() // ensure the versioned fixture exists
-    val table = rollbackTables(dir)
-    val w = new java.io.File(table).getParent
+    val w = rollbackWarehouse(s, dir)
+    val table = s"$w/gold"
     val cat = catalogFor(s, w)
     graft.expressions.GraftFunctions.register(s)
     // the catalog and the TVF must serve identical bytes per snapshot
@@ -256,15 +236,6 @@ object CdcQueries {
       .orderBy(col("snap"), col("o_orderstatus"))
   }
 
-  /** table paths (values' PARENT dir is the warehouse the cleanup hook
-    * removes — keep only table paths here, never warehouse roots) */
-  private val writeTables =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** q197's captured between-commit instants (per dir). */
-  private val tsBetween =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
   /** The SQL WRITE path end-to-end ([[graft.sql.GraftVersionedTable]],
     * r13 — the Iceberg DML shape the reference manages through Glue/
     * Iceberg, reference: README.md:85-88): a table is built from PURE
@@ -279,10 +250,23 @@ object CdcQueries {
     * v2, and current; the oracle replays each slice from raw orders by
     * the same modulus — wrong rows in ANY snapshot hash-mismatch. */
   def q191SqlInsertSnapshots(s: SparkSession, dir: String): DataFrame = {
-    val table = writeTables.getOrElseUpdate(dir, {
-      rollbackCleanupHook
-      val w = java.nio.file.Files
-        .createTempDirectory("graft-rollback-").toString
+    val cat = catalogFor(s, insertWarehouse(s, dir))
+    def slice(snap: String, sql: String): DataFrame =
+      s.sql(sql).groupBy(col("o_orderstatus"))
+        .agg(count(lit(1)).as("n_orders"),
+          sum(col("price")).cast("double").as("total_price"))
+        .select(lit(snap).as("snap"), col("o_orderstatus"),
+          col("n_orders"), col("total_price"))
+    slice("v1", s"SELECT * FROM $cat.ord VERSION AS OF 1")
+      .unionByName(slice("v2", s"SELECT * FROM $cat.ord VERSION AS OF 2"))
+      .unionByName(slice("current", s"SELECT * FROM $cat.ord"))
+      .orderBy(col("snap"), col("o_orderstatus"))
+  }
+
+  /** The warehouse of q191's three-append `ord` table, shared by q191
+    * and q195. */
+  private def insertWarehouse(s: SparkSession, dir: String): String =
+    Fixtures.once("sql-insert", dir) { w =>
       val cat = catalogFor(s, w)
       Tables.registerAll(s, dir)
       s.sql(
@@ -305,20 +289,8 @@ object CdcQueries {
       val dirs = VersionedTable.dataDirs(t0)
       require(dirs.size == 3 && dirs.head.endsWith("v=1"),
         s"append snapshots must carry prior dirs by reference: $dirs")
-      t0
-    })
-    val cat = catalogFor(s, new java.io.File(table).getParent)
-    def slice(snap: String, sql: String): DataFrame =
-      s.sql(sql).groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("price")).cast("double").as("total_price"))
-        .select(lit(snap).as("snap"), col("o_orderstatus"),
-          col("n_orders"), col("total_price"))
-    slice("v1", s"SELECT * FROM $cat.ord VERSION AS OF 1")
-      .unionByName(slice("v2", s"SELECT * FROM $cat.ord VERSION AS OF 2"))
-      .unionByName(slice("current", s"SELECT * FROM $cat.ord"))
-      .orderBy(col("snap"), col("o_orderstatus"))
-  }
+      w
+    }
 
   /** SQL `DELETE FROM … WHERE` as dir-granular COPY-ON-WRITE
     * ([[graft.sql.GraftVersionedTable]].deleteWhere): the fixture
@@ -332,10 +304,7 @@ object CdcQueries {
     * time-travel proof that CoW deletes lose nothing. The oracle
     * replays both from raw orders with the same split literal. */
   def q192SqlDeleteCow(s: SparkSession, dir: String): DataFrame = {
-    val table = writeTables.getOrElseUpdate(dir + "#del", {
-      rollbackCleanupHook
-      val w = java.nio.file.Files
-        .createTempDirectory("graft-rollback-").toString
+    val wh = Fixtures.once("sql-delete", dir) { w =>
       val cat = catalogFor(s, w)
       Tables.registerAll(s, dir)
       // split at half the max key: deterministic at every SF, and the
@@ -364,9 +333,9 @@ object CdcQueries {
       require(dirs.map(_.split("/v=").last) == Seq("1", "3"),
         s"dir-granular CoW must keep v=1 by reference and rewrite v=2 " +
           s"into v=3; got $dirs")
-      t0
-    })
-    val cat = catalogFor(s, new java.io.File(table).getParent)
+      w
+    }
+    val cat = catalogFor(s, wh)
     def agg(snap: String, sql: String): DataFrame =
       s.sql(sql).groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_orders"),
@@ -390,10 +359,7 @@ object CdcQueries {
     * the commit shape is require()d: exactly one new snapshot, with the
     * pre-merge snapshot still serving the original row count. */
   def q193SqlMergeInto(s: SparkSession, dir: String): DataFrame = {
-    val table = writeTables.getOrElseUpdate(dir + "#mrg", {
-      rollbackCleanupHook
-      val w = java.nio.file.Files
-        .createTempDirectory("graft-rollback-").toString
+    val wh = Fixtures.once("sql-merge", dir) { w =>
       val cat = catalogFor(s, w)
       Tables.registerAll(s, dir)
       s.sql(
@@ -422,9 +388,9 @@ object CdcQueries {
       require(VersionedTable.read(s, t0, Some(1L)).count() ==
         t(s, dir, "customer").count(),
         "the pre-merge snapshot must still serve the original rows")
-      t0
-    })
-    val cat = catalogFor(s, new java.io.File(table).getParent)
+      w
+    }
+    val cat = catalogFor(s, wh)
     s.sql(s"SELECT c_custkey, c_name, c_nationkey, c_acctbal, " +
       s"c_mktsegment FROM $cat.cust")
   }
@@ -439,10 +405,19 @@ object CdcQueries {
     * old files, fails to null-fill, or misaligns the evolved schema
     * hash-mismatches. */
   def q194SqlAddColumn(s: SparkSession, dir: String): DataFrame = {
-    val table = writeTables.getOrElseUpdate(dir + "#alt", {
-      rollbackCleanupHook
-      val w = java.nio.file.Files
-        .createTempDirectory("graft-rollback-").toString
+    val cat = catalogFor(s, addColumnWarehouse(s, dir))
+    s.sql(s"SELECT * FROM $cat.orda")
+      .groupBy(coalesce(col("channel"), lit("legacy")).as("channel"),
+        col("o_orderstatus"))
+      .agg(count(lit(1)).as("n_orders"),
+        sum(col("price")).cast("double").as("total_price"))
+      .orderBy(col("channel"), col("o_orderstatus"))
+  }
+
+  /** The warehouse of q194's evolved `orda` table, shared by q194 and
+    * q200. */
+  private def addColumnWarehouse(s: SparkSession, dir: String): String =
+    Fixtures.once("sql-add-column", dir) { w =>
       val cat = catalogFor(s, w)
       Tables.registerAll(s, dir)
       s.sql(
@@ -456,16 +431,8 @@ object CdcQueries {
            |SELECT o_orderkey, o_orderstatus,
            |  CAST(o_totalprice AS DECIMAL(18,2)) AS price, 'web' AS channel
            |FROM orders WHERE o_orderkey % 2 = 1""".stripMargin)
-      s"$w/orda"
-    })
-    val cat = catalogFor(s, new java.io.File(table).getParent)
-    s.sql(s"SELECT * FROM $cat.orda")
-      .groupBy(coalesce(col("channel"), lit("legacy")).as("channel"),
-        col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(col("price")).cast("double").as("total_price"))
-      .orderBy(col("channel"), col("o_orderstatus"))
-  }
+      w
+    }
 
   /** INCREMENTAL read between snapshots (r13; Iceberg's incremental
     * append scan / `table$changes`): over q191's three-append fixture,
@@ -476,8 +443,7 @@ object CdcQueries {
     * with the API on a content digest, and the oracle replays the
     * added slice from raw orders by the INSERT moduli. */
   def q195IncrementalRead(s: SparkSession, dir: String): DataFrame = {
-    q191SqlInsertSnapshots(s, dir).count() // ensure the fixture exists
-    val table = writeTables(dir)
+    val table = s"${insertWarehouse(s, dir)}/ord"
     graft.expressions.GraftFunctions.register(s)
     val tvf = s.sql(s"SELECT * FROM graft_changes('$table', 1, 3)")
     val api = VersionedTable.readIncremental(s, table, 1L, 3L)
@@ -505,10 +471,7 @@ object CdcQueries {
     * redelivery, or an append that rewrote history would each move a
     * count or sum and hash-mismatch. */
   def q196StreamVersioned(s: SparkSession, dir: String): DataFrame = {
-    val table = writeTables.getOrElseUpdate(dir + "#stream", {
-      rollbackCleanupHook
-      val w = java.nio.file.Files
-        .createTempDirectory("graft-rollback-").toString
+    val table = Fixtures.once("stream-versioned", dir) { w =>
       val ev = t(s, dir, "events").select(col("event_type"), col("user_id"))
       val t0 = s"$w/ev"
       ev.filter(col("user_id") % 2 === 0)
@@ -526,7 +489,7 @@ object CdcQueries {
       require(VersionedTable.dataDirs(t0).size > 1,
         s"streamed commits must append by reference: ${VersionedTable.dataDirs(t0)}")
       t0
-    })
+    }
     VersionedTable.read(s, table)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("user_id")).as("sum_users"))
@@ -542,10 +505,7 @@ object CdcQueries {
     * the oracle from raw orders. Serving v2 (resolution off by one) or
     * failing the ≤-boundary zeroes every measure and hash-mismatches. */
   def q197TimestampAsOf(s: SparkSession, dir: String): DataFrame = {
-    val table = writeTables.getOrElseUpdate(dir + "#ts", {
-      rollbackCleanupHook
-      val w = java.nio.file.Files
-        .createTempDirectory("graft-rollback-").toString
+    val (wh, betweenMs) = Fixtures.once("timestamp-as-of", dir) { w =>
       val t0 = s"$w/gold"
       val good = t(s, dir, "orders")
         .groupBy(col("o_orderstatus"))
@@ -554,15 +514,14 @@ object CdcQueries {
             .as("total_price"))
       VersionedTable.write(good, t0)
       Thread.sleep(10)
-      tsBetween.put(dir, System.currentTimeMillis())
+      val between = System.currentTimeMillis()
       Thread.sleep(10)
       VersionedTable.write(
         good.withColumn("n_orders", lit(0L))
           .withColumn("total_price", lit(0.0d)), t0)
-      t0
-    })
-    val betweenMs = tsBetween(dir)
-    val cat = catalogFor(s, new java.io.File(table).getParent)
+      (w, between)
+    }
+    val cat = catalogFor(s, wh)
     val tsLit = java.time.Instant.ofEpochMilli(betweenMs).toString
       .replace("T", " ").stripSuffix("Z") // session is UTC
     s.sql(s"SELECT * FROM $cat.gold TIMESTAMP AS OF '$tsLit'")
@@ -592,10 +551,7 @@ object CdcQueries {
     * are exercised in the fixture: a second tag is created and dropped
     * via SQL CALL, and `.refs` must list exactly the surviving tag. */
   def q202SnapshotTags(s: SparkSession, dir: String): DataFrame = {
-    val table = writeTables.getOrElseUpdate(dir + "#tag", {
-      rollbackCleanupHook
-      val w = java.nio.file.Files
-        .createTempDirectory("graft-rollback-").toString
+    val wh = Fixtures.once("tags", dir) { w =>
       val t0 = s"$w/tagged"
       val good = t(s, dir, "orders")
         .groupBy(col("o_orderstatus"))
@@ -624,9 +580,9 @@ object CdcQueries {
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       require(refRows == Seq(("audited", 1L)),
         s".refs must list exactly the surviving tag; got $refRows")
-      t0
-    })
-    val cat = catalogFor(s, new java.io.File(table).getParent)
+      w
+    }
+    val cat = catalogFor(s, wh)
     s.sql(s"SELECT * FROM $cat.tagged VERSION AS OF 'audited'")
       .orderBy(col("o_orderstatus"))
   }
@@ -642,10 +598,8 @@ object CdcQueries {
     * aggregate — any staged row lost or duplicated across the
     * branch/publish machinery hash-mismatches. */
   def q203Wap(s: SparkSession, dir: String): DataFrame = {
-    val table = writeTables.getOrElseUpdate(dir + "#wap", {
-      rollbackCleanupHook
-      val t0 = java.nio.file.Files
-        .createTempDirectory("graft-rollback-").toString + "/wap"
+    val table = Fixtures.once("wap", dir) { w =>
+      val t0 = s"$w/wap"
       val ord = t(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       VersionedTable.write(ord.filter(col("o_orderkey") % 3 === 0), t0)
@@ -667,7 +621,7 @@ object CdcQueries {
         s"fast_forward must adopt branch dirs BY REFERENCE; got $dirs")
       VersionedTable.dropBranch(t0, "audit")
       t0
-    })
+    }
     VersionedTable.read(s, table)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
@@ -684,10 +638,7 @@ object CdcQueries {
     * main must not move; after publish (CALL fast_forward) + conf
     * unset, the table serves the full union the oracle replays. */
   def q204WapConf(s: SparkSession, dir: String): DataFrame = {
-    val table = writeTables.getOrElseUpdate(dir + "#wapc", {
-      rollbackCleanupHook
-      val w = java.nio.file.Files
-        .createTempDirectory("graft-rollback-").toString
+    val wh = Fixtures.once("wap-conf", dir) { w =>
       val cat = catalogFor(s, w)
       Tables.registerAll(s, dir)
       s.sql(
@@ -721,9 +672,9 @@ object CdcQueries {
         "publish must adopt the staged dirs by reference")
       s.sql(s"CALL $cat.system.drop_branch(table => '$t0', " +
         "branch => 'stage')").collect()
-      t0
-    })
-    val cat = catalogFor(s, new java.io.File(table).getParent)
+      w
+    }
+    val cat = catalogFor(s, wh)
     s.sql(s"SELECT * FROM $cat.wapc")
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
@@ -743,10 +694,7 @@ object CdcQueries {
     * bug that loses rows, hits main, or rewrites the wrong dirs
     * hash-mismatches. */
   def q205WapDml(s: SparkSession, dir: String): DataFrame = {
-    val table = writeTables.getOrElseUpdate(dir + "#wapdml", {
-      rollbackCleanupHook
-      val w = java.nio.file.Files
-        .createTempDirectory("graft-rollback-").toString
+    val wh = Fixtures.once("wap-dml", dir) { w =>
       val cat = catalogFor(s, w)
       Tables.registerAll(s, dir)
       s.sql(
@@ -793,9 +741,9 @@ object CdcQueries {
         "branch => 'stage')").collect()
       s.sql(s"CALL $cat.system.drop_branch(table => '$t0', " +
         "branch => 'stage')").collect()
-      t0
-    })
-    val cat = catalogFor(s, new java.io.File(table).getParent)
+      w
+    }
+    val cat = catalogFor(s, wh)
     s.sql(s"SELECT * FROM $cat.wapdml")
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
@@ -814,10 +762,7 @@ object CdcQueries {
     * whole-events aggregate the oracle computes — a duplicated or
     * dropped microbatch hash-mismatches. */
   def q207StreamRead(s: SparkSession, dir: String): DataFrame = {
-    val out = writeTables.getOrElseUpdate(dir + "#sread", {
-      rollbackCleanupHook
-      val w = java.nio.file.Files
-        .createTempDirectory("graft-rollback-").toString
+    val out = Fixtures.once("stream-read", dir) { w =>
       val ev = t(s, dir, "events").select(col("event_type"), col("user_id"))
       val t0 = s"$w/src"
       def drain(): Unit = {
@@ -843,7 +788,7 @@ object CdcQueries {
         s"the second drain must deliver exactly the appended rows; " +
           s"got +$delta of ${odd.count()}")
       s"$w/out"
-    })
+    }
     s.read.parquet(out)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -865,10 +810,7 @@ object CdcQueries {
     * off-by-one-snapshot start (inclusive where exclusive is promised,
     * or vice versa) hash-mismatches. */
   def q208StreamReadFrom(s: SparkSession, dir: String): DataFrame = {
-    val out = writeTables.getOrElseUpdate(dir + "#sreadfrom", {
-      rollbackCleanupHook
-      val w = java.nio.file.Files
-        .createTempDirectory("graft-rollback-").toString
+    val out = Fixtures.once("stream-read-from", dir) { w =>
       val ev = t(s, dir, "events").select(col("event_type"), col("user_id"))
       val t0 = s"$w/src"
       val v1 = VersionedTable.write(
@@ -894,7 +836,7 @@ object CdcQueries {
         s"startingVersion=$v1 must deliver exactly the rows appended " +
           s"after v$v1 (the odd users, $odd rows) — got $got")
       s"$w/out"
-    })
+    }
     s.read.parquet(out)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -913,10 +855,7 @@ object CdcQueries {
     * the oracle computes — a retention bug that reclaims a dir the
     * retained head still references loses rows and hash-mismatches. */
   def q209BranchRetention(s: SparkSession, dir: String): DataFrame = {
-    val table = writeTables.getOrElseUpdate(dir + "#bret", {
-      rollbackCleanupHook
-      val w = java.nio.file.Files
-        .createTempDirectory("graft-rollback-").toString
+    val table = Fixtures.once("branch-retention", dir) { w =>
       val od = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice").cast("decimal(18,2)").as("price"))
@@ -939,7 +878,7 @@ object CdcQueries {
           s"(retention was metadata-only); got $dirs")
       VersionedTable.dropBranch(t0, "ret")
       t0
-    })
+    }
     VersionedTable.read(s, table)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
@@ -987,10 +926,7 @@ object CdcQueries {
   }
 
   private def bageTable(s: SparkSession, dir: String): String =
-    writeTables.getOrElseUpdate(dir + "#bage", {
-      rollbackCleanupHook
-      val w = java.nio.file.Files
-        .createTempDirectory("graft-rollback-").toString
+    Fixtures.once("branch-retention-age", dir) { w =>
       val od = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice").cast("decimal(18,2)").as("price"))
@@ -1017,7 +953,7 @@ object CdcQueries {
         hist.tail.map(_._1),
         "the boundary and head snapshots must survive")
       t0
-    })
+    }
 
   /** The `.partitions` metadata table (r15; Iceberg's partitions
     * metadata surface): per-partition record/file/size stats computed
@@ -1031,10 +967,7 @@ object CdcQueries {
     * bug, a partition-identity mix-up, or a lost file
     * hash-mismatches. */
   def q206PartitionsMeta(s: SparkSession, dir: String): DataFrame = {
-    val table = writeTables.getOrElseUpdate(dir + "#pmeta", {
-      rollbackCleanupHook
-      val w = java.nio.file.Files
-        .createTempDirectory("graft-rollback-").toString
+    val wh = Fixtures.once("partitions-meta", dir) { w =>
       val cat = catalogFor(s, w)
       Tables.registerAll(s, dir)
       s.sql(s"CREATE TABLE $cat.pmeta (o_orderkey BIGINT, " +
@@ -1049,9 +982,9 @@ object CdcQueries {
       require(stats.nonEmpty && stats.forall(_._2 >= 2L),
         "every partition must span both appended snapshot dirs " +
           s"(file_count >= 2); got ${stats.mkString(", ")}")
-      t0
-    })
-    val cat = catalogFor(s, new java.io.File(table).getParent)
+      w
+    }
+    val cat = catalogFor(s, wh)
     s.sql(s"SELECT partition, record_count FROM $cat.pmeta.partitions")
       .orderBy(col("partition"))
   }
@@ -1071,10 +1004,8 @@ object CdcQueries {
     * commits a pre-resolved file list without touching data, and no
     * claim marker survives a commit. */
   def q201ConditionalCommit(s: SparkSession, dir: String): DataFrame = {
-    val table = writeTables.getOrElseUpdate(dir + "#cc", {
-      rollbackCleanupHook
-      val t0 = java.nio.file.Files
-        .createTempDirectory("graft-rollback-").toString + "/cc"
+    val table = Fixtures.once("conditional-commit", dir) { w =>
+      val t0 = s"$w/cc"
       val li = t(s, dir, "lineitem")
         .select("l_orderkey", "l_returnflag", "l_linestatus", "l_quantity")
       VersionedTable.write(li.filter(col("l_orderkey") % 3 === 0), t0)
@@ -1092,7 +1023,7 @@ object CdcQueries {
         _.getPath.getName.startsWith(".claim-")),
         "commits must clean their claim markers")
       t0
-    })
+    }
     VersionedTable.read(s, table)
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(count(lit(1)).as("n_items"),
@@ -1102,9 +1033,7 @@ object CdcQueries {
   }
 
   def q200SchemaHistory(s: SparkSession, dir: String): DataFrame = {
-    q194SqlAddColumn(s, dir).count() // build the evolution fixture
-    val table = writeTables(dir + "#alt")
-    val cat = catalogFor(s, new java.io.File(table).getParent)
+    val cat = catalogFor(s, addColumnWarehouse(s, dir))
     val v1 = s.sql(s"SELECT * FROM $cat.orda VERSION AS OF 1")
     require(v1.columns.toSeq == Seq("o_orderkey", "o_orderstatus", "price"),
       s"pre-evolution snapshot must serve its own schema (no evolved " +
@@ -1132,10 +1061,7 @@ object CdcQueries {
     * of the current and pre-update snapshots; the oracle replays both
     * from raw orders with the same max/2 split. */
   def q198SqlUpdateCow(s: SparkSession, dir: String): DataFrame = {
-    val table = writeTables.getOrElseUpdate(dir + "#upd", {
-      rollbackCleanupHook
-      val w = java.nio.file.Files
-        .createTempDirectory("graft-rollback-").toString
+    val wh = Fixtures.once("sql-update", dir) { w =>
       val cat = catalogFor(s, w)
       Tables.registerAll(s, dir)
       s.sql(
@@ -1163,9 +1089,9 @@ object CdcQueries {
       require(dirs.map(_.split("/v=").last) == Seq("1", "3"),
         s"dir-granular UPDATE must keep v=1 by reference and rewrite " +
           s"only v=2 into v=3 (runtime group filtering); got $dirs")
-      t0
-    })
-    val cat = catalogFor(s, new java.io.File(table).getParent)
+      w
+    }
+    val cat = catalogFor(s, wh)
     def agg(snap: String, sql: String): DataFrame =
       s.sql(sql).groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_orders"),

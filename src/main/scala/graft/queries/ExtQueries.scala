@@ -455,43 +455,16 @@ object ExtQueries {
   /** q32 against a MATERIALIZED bucket-partitioned LSH index: multi-probe
     * becomes partition pruning (the sign-LSH analog of q68's IVF index).
     * Index written once per corpus; same output and oracle as q32. */
-  private val lshIndexes = scala.collection.concurrent
-    .TrieMap.empty[String, (String, Long, Seq[Double])]
-
-  /** The cached q68/q71 index dirs hold full corpus copies — delete them
-    * on JVM exit so repeated bench/verify processes don't accumulate
-    * them in the temp dir (Bench applies the same discipline to its
-    * per-rep warehouses). */
-  private lazy val indexCleanupHook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      (lshIndexes.values.map(_._1) ++ qlshIndexes.values.map(_._1) ++
-        mlshIndexes.values.map(_._1) ++
-        ivfIndexes.values ++ qivfIndexes.values ++ ndIndexes.values ++
-        ivfpqIndexes.values ++ orcDirs.values ++ csvDirs.values ++
-        resIndexes.values ++ crawlDedupDirs.values ++
-        autoPruneTables.values.map(t => new java.io.File(t._1).getParent) ++
-        partPruneTables.values.map(t => new java.io.File(t._1).getParent) ++
-        zorderPruneTables.values.map(t => new java.io.File(t._1).getParent) ++
-        (kllStreamDirs.values ++ thetaStreamDirs.values ++
-          hllStreamDirs.values ++
-          cmsStreamDirs.values).map(new java.io.File(_).getParent))
-        .foreach(p => graft.util.Fs.deleteRecursively(new java.io.File(p)))
-    }, "graft-index-cleanup"))
-  }
-
   def q71LshIndexed(s: SparkSession, dir: String): DataFrame = {
-    val (path, qBucket, qVec) = lshIndexes.getOrElseUpdate(dir, {
-      indexCleanupHook
+    val (path, qBucket, qVec) = Fixtures.once("lsh-index", dir) { p =>
       val emb = t(s, dir, "embeddings")
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-lsh-index-").toString
       Similarity.writeLshIndex(emb, "embedding", p, numPlanes = 8, dim = 64)
       val row = emb.filter(col("vec_id") === 0L).select(
         col("embedding").cast("array<double>"),
         Similarity.lshBucket(col("embedding"),
           Similarity.hyperplanes(8, 64))).collect().head
       (p, row.getLong(1), row.getSeq[Double](0))
-    })
+    }
     Similarity.lshTopKIndexed(s, path, "vec_id", "embedding", qVec, qBucket,
         queryId = 0L, k = 10, numPlanes = 8)
       .select(col("vec_id"), round(col("cos"), 6).as("cos"), col("bucket"))
@@ -502,22 +475,16 @@ object ExtQueries {
     * 8-plane table on this corpus's diffuse neighborhoods — SCALING.md).
     * The oracle replays all four bucket computations and the OR of
     * per-table Hamming<=1 probes as plain SQL. */
-  private val mlshIndexes = scala.collection.concurrent
-    .TrieMap.empty[String, (String, Seq[Double])]
-
   def q125MultiLsh(s: SparkSession, dir: String): DataFrame = {
-    val (path, qVec) = mlshIndexes.getOrElseUpdate(dir, {
-      indexCleanupHook
+    val (path, qVec) = Fixtures.once("mlsh-index", dir) { p =>
       val emb = t(s, dir, "embeddings")
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-mlsh-index-").toString
       Similarity.writeMultiLshIndex(emb, "embedding", p,
         tables = 4, numPlanes = 4, dim = 64)
       val v = emb.filter(col("vec_id") === 0L)
         .select(col("embedding").cast("array<double>"))
         .collect().head.getSeq[Double](0)
       (p, v)
-    })
+    }
     Similarity.multiLshTopKIndexed(s, path, "vec_id", "embedding", qVec,
         queryId = 0L, k = 10, tables = 4, numPlanes = 4, dim = 64)
       .select(col("vec_id"), round(col("cos"), 6).as("cos"))
@@ -527,15 +494,9 @@ object ExtQueries {
     * vectors — the 100 TB ANN serving path (pruning AND 4× less IO per
     * touched file). Bucket choice is identical to q71; ranking runs on
     * the quantized arrays (exact-integer dots, oracle-stable). */
-  private val qlshIndexes = scala.collection.concurrent
-    .TrieMap.empty[String, (String, Long, Seq[Double])]
-
   def q92QuantizedLshIndexed(s: SparkSession, dir: String): DataFrame = {
-    val (path, qBucket, qVec) = qlshIndexes.getOrElseUpdate(dir, {
-      indexCleanupHook
+    val (path, qBucket, qVec) = Fixtures.once("qlsh-index", dir) { p =>
       val emb = t(s, dir, "embeddings")
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-qlsh-index-").toString
       Similarity.writeQuantizedLshIndex(emb, "vec_id", "embedding", p,
         numPlanes = 8, dim = 64)
       val row = emb.filter(col("vec_id") === 0L).select(
@@ -543,7 +504,7 @@ object ExtQueries {
         Similarity.lshBucket(col("embedding"),
           Similarity.hyperplanes(8, 64))).collect().head
       (p, row.getLong(1), row.getSeq[Double](0))
-    })
+    }
     Similarity.quantizedLshTopKIndexed(s, path, "vec_id", qVec, qBucket,
         queryId = 0L, k = 10, numPlanes = 8)
       .select(col("vec_id"), round(col("cos"), 6).as("cos"), col("bucket"))
@@ -581,8 +542,6 @@ object ExtQueries {
       queryVec: IndexedSeq[Double], probes: Seq[Int])
   private val ivfCtxs =
     scala.collection.concurrent.TrieMap.empty[String, IvfCtx]
-  private val ivfIndexes =
-    scala.collection.concurrent.TrieMap.empty[String, String]
 
   private def ivfCtx(s: SparkSession, dir: String): IvfCtx =
     ivfCtxs.getOrElseUpdate(dir, {
@@ -620,8 +579,6 @@ object ExtQueries {
     * the query vector with the pq family. */
   private val resCtxs =
     scala.collection.concurrent.TrieMap.empty[String, graft.operators.Pq.Model]
-  private val resIndexes =
-    scala.collection.concurrent.TrieMap.empty[String, String]
 
   private def resModel(s: SparkSession, dir: String): graft.operators.Pq.Model =
     resCtxs.getOrElseUpdate(dir,
@@ -637,14 +594,11 @@ object ExtQueries {
     val ictx = ivfCtx(s, dir)
     val pctx = pqCtx(s, dir)
     val rm = resModel(s, dir)
-    val path = resIndexes.getOrElseUpdate(dir, {
-      indexCleanupHook
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-respq-index-").toString
+    val path = Fixtures.once("respq-index", dir) { p =>
       graft.operators.Pq.writeResidualIndex(t(s, dir, "embeddings"),
         "vec_id", "embedding", ictx.model, rm, p)
       p
-    })
+    }
     graft.operators.Pq.adcTopKResidualIndexed(s, path, "vec_id", rm,
         ictx.model, pctx.queryVec, queryId = 0L, k = 10, nProbe = 2)
       .select(col("vec_id"), col("cluster"), col("pq_code"),
@@ -687,20 +641,14 @@ object ExtQueries {
     * whose rows are (id, packed 8-byte PQ code) — probe = partition
     * pruning, ranking = ADC over codes. The billion-scale serving
     * layout: index bytes ≈ 8·N, probed fraction ≈ nProbe/k. */
-  private val ivfpqIndexes =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def ivfpqIndex(s: SparkSession, dir: String): String = {
     val ictx = ivfCtx(s, dir)
     val pctx = pqCtx(s, dir)
-    ivfpqIndexes.getOrElseUpdate(dir, {
-      indexCleanupHook
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-ivfpq-index-").toString
+    Fixtures.once("ivfpq-index", dir) { p =>
       graft.operators.Pq.writeIvfPqIndex(t(s, dir, "embeddings"), "vec_id",
         "embedding", ictx.model, pctx.model, p)
       p
-    })
+    }
   }
 
   def q137IvfPqTopK(s: SparkSession, dir: String): DataFrame = {
@@ -739,13 +687,10 @@ object ExtQueries {
     * asserts the pruned scan). */
   def q68IvfIndexed(s: SparkSession, dir: String): DataFrame = {
     val ctx = ivfCtx(s, dir)
-    val path = ivfIndexes.getOrElseUpdate(dir, {
-      indexCleanupHook
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-ivf-index-").toString
+    val path = Fixtures.once("ivf-index", dir) { p =>
       Ivf.writeIndex(t(s, dir, "embeddings"), "embedding", ctx.model, p)
       p
-    })
+    }
     Ivf.topKIndexed(s, path, "vec_id", "embedding", ctx.queryVec, ctx.model,
         queryId = 0L, k = 10, nProbe = 2)
       .select(col("vec_id"), col("cluster"), round(col("cos"), 6).as("cos"))
@@ -754,19 +699,13 @@ object ExtQueries {
   /** Quantized IVF index probe: cluster partition pruning over int8
     * binary vectors — the probed files are a quarter the bytes of q68's
     * (the q92 treatment applied to the IVF family). */
-  private val qivfIndexes =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def q98QuantizedIvf(s: SparkSession, dir: String): DataFrame = {
     val ctx = ivfCtx(s, dir)
-    val path = qivfIndexes.getOrElseUpdate(dir, {
-      indexCleanupHook
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-qivf-index-").toString
+    val path = Fixtures.once("qivf-index", dir) { p =>
       Ivf.writeQuantizedIndex(t(s, dir, "embeddings"), "vec_id", "embedding",
         ctx.model, p)
       p
-    })
+    }
     Ivf.quantizedTopKIndexed(s, path, "vec_id", ctx.queryVec, ctx.model,
         queryId = 0L, k = 10, nProbe = 2)
       .select(col("vec_id"), col("cluster"), round(col("cos"), 6).as("cos"))
@@ -782,22 +721,16 @@ object ExtQueries {
     * docs pairwise-disjoint — so build + probe through the full banded
     * index must emit EXACTLY {(b, b+1, 1.0)}, hash-checkable by a plain
     * DuckDB join (r7 verdict item 4; was rows-only). */
-  private val ndIndexes =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def q86IncrementalNearDup(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
       .select(col("doc_id"), plantedText(
         when(col("doc_id") % 10 === 0, col("doc_id") + 1)
           .otherwise(col("doc_id"))).as("text"))
-    val path = ndIndexes.getOrElseUpdate(dir, {
-      indexCleanupHook
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-nd-index-").toString
+    val path = Fixtures.once("nd-index", dir) { p =>
       graft.operators.NearDupIndex.write(
         docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text", p)
       p
-    })
+    }
     graft.operators.NearDupIndex.probe(s, path,
       docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
       threshold = 0.5)
@@ -1056,16 +989,11 @@ object ExtQueries {
     * aggregate runs over the ORC READ — the oracle computes the same
     * aggregate from the original parquet, so any round-trip lossiness
     * (types, nulls, encoding) hash-mismatches. */
-  private val orcDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def q141OrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val p = orcDirs.getOrElseUpdate(dir, {
-      indexCleanupHook
-      val d = java.nio.file.Files.createTempDirectory("graft-orc-").toString
+    val p = Fixtures.once("orc", dir) { d =>
       t(s, dir, "documents").write.mode("overwrite").orc(d)
       d
-    })
+    }
     s.read.orc(p)
       .groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1178,14 +1106,8 @@ object ExtQueries {
     * conservative unknown-files-kept contract is what keeps the stats
     * advisory. k = min(o_custkey), deterministic at every SF in both
     * engines. */
-  private val autoPruneTables =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Long)]
-
   def q187AutoPrunedScan(s: SparkSession, dir: String): DataFrame = {
-    val (table, key) = autoPruneTables.getOrElseUpdate(dir, {
-      indexCleanupHook
-      val d = java.nio.file.Files
-        .createTempDirectory("graft-autoprune-").toString
+    val (table, key) = Fixtures.once("autoprune", dir) { d =>
       val tbl = s"$d/orders"
       val o = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
@@ -1203,7 +1125,7 @@ object ExtQueries {
         .write.parquet(statsDir)
       org.apache.spark.sql.graft.StatsPruning.register(s, tbl, statsDir)
       (tbl, o.agg(min(col("o_custkey"))).head().getLong(0))
-    })
+    }
     val q = s.read.parquet(table).where(col("o_custkey") === lit(key))
       .orderBy(col("o_orderkey"))
     q.collect() // force optimization so the plan below is the real one
@@ -1234,14 +1156,8 @@ object ExtQueries {
     * deterministic at every SF in both engines; the oracle filters RAW
     * events at the same keys, so over-pruning (a lost file OR a lost
     * partition) hash-mismatches. */
-  private val partPruneTables = scala.collection.concurrent.TrieMap
-    .empty[String, (String, java.sql.Date, Long)]
-
   def q188PartitionedAutoPrune(s: SparkSession, dir: String): DataFrame = {
-    val (table, day, user) = partPruneTables.getOrElseUpdate(dir, {
-      indexCleanupHook
-      val d = java.nio.file.Files
-        .createTempDirectory("graft-partprune-").toString
+    val (table, day, user) = Fixtures.once("partprune", dir) { d =>
       val tbl = s"$d/events"
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"),
@@ -1262,7 +1178,7 @@ object ExtQueries {
       val minUser = ev.filter(col("day") === lit(minDay))
         .agg(min(col("user_id"))).head().getLong(0)
       (tbl, minDay, minUser)
-    })
+    }
     // metric probe WITHOUT the order-by (no exchange -> no AQE wrapper;
     // and Dataset actions reset SQL metrics, so the probe reads them on
     // its own first execution)
@@ -1303,14 +1219,8 @@ object ExtQueries {
     * no manual refresh step. Keys are data-derived minima; the oracle
     * replays both slices from raw lineitem, so over-pruning on either
     * dimension hash-mismatches. */
-  private val zorderPruneTables = scala.collection.concurrent.TrieMap
-    .empty[String, (String, Long, Long)]
-
   def q189ZorderAutoPrune(s: SparkSession, dir: String): DataFrame = {
-    val (table, pk, sk) = zorderPruneTables.getOrElseUpdate(dir, {
-      indexCleanupHook
-      val d = java.nio.file.Files
-        .createTempDirectory("graft-zorderprune-").toString
+    val (table, pk, sk) = Fixtures.once("zorderprune", dir) { d =>
       val tbl = s"$d/li"
       val li = t(s, dir, "lineitem").select(col("l_orderkey"),
         col("l_partkey"), col("l_suppkey"), col("l_quantity"))
@@ -1331,7 +1241,7 @@ object ExtQueries {
         s"maintenance did not refresh the registered index: ${rep.detail}")
       val r = li.agg(min(col("l_partkey")), min(col("l_suppkey"))).head()
       (tbl, r.getLong(0), r.getLong(1))
-    })
+    }
     def requirePruned(c: String, v: Long): Unit = {
       val q = s.read.parquet(table).where(col(c) === lit(v))
       q.collect()
@@ -1372,14 +1282,8 @@ object ExtQueries {
     * planned and demands fewer than the table holds. The oracle
     * replays the slice from raw lineitem — over-pruning loses rows and
     * hash-mismatches. */
-  private val v2PruneTables =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Long)]
-
   def q199CatalogAutoPrune(s: SparkSession, dir: String): DataFrame = {
-    val (wh, key) = v2PruneTables.getOrElseUpdate(dir, {
-      indexCleanupHook
-      val d = java.nio.file.Files
-        .createTempDirectory("graft-v2prune-").toString
+    val (wh, key) = Fixtures.once("v2prune", dir) { d =>
       val tbl = s"$d/wh/li"
       val li = t(s, dir, "lineitem").select(col("l_orderkey"),
         col("l_partkey"), col("l_quantity"))
@@ -1397,7 +1301,7 @@ object ExtQueries {
         .write.parquet(statsDir)
       org.apache.spark.sql.graft.StatsPruning.register(s, tbl, statsDir)
       (s"$d/wh", li.agg(min(col("l_partkey"))).head().getLong(0))
-    })
+    }
     val cat = s"gv2p${math.abs(wh.hashCode)}"
     s.conf.set(s"spark.sql.catalog.$cat",
       classOf[graft.sql.GraftProcedureCatalog].getName)
@@ -1435,20 +1339,15 @@ object ExtQueries {
     * per dir, read back with an explicit schema (+ multiLine, so
     * embedded newlines would survive), aggregated — same oracle as q141:
     * the original parquet. Any quoting/typing lossiness hash-mismatches. */
-  private val csvDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def q143CsvRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val p = csvDirs.getOrElseUpdate(dir, {
-      indexCleanupHook
-      val d = java.nio.file.Files.createTempDirectory("graft-csv-").toString
+    val p = Fixtures.once("csv", dir) { d =>
       t(s, dir, "documents").write.mode("overwrite")
         .option("header", "true")
         .option("quoteAll", "true")
         .option("escape", "\"")
         .csv(d)
       d
-    })
+    }
     s.read
       .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, " +
         "n_chars BIGINT")
@@ -1636,9 +1535,6 @@ object ExtQueries {
       .orderBy(col("lang"), col("pct"))
   }
 
-  private val kllStreamDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Stream-maintained quantile profile, SAME oracle as q164: documents
     * drained in two batches (checkpoint = bookmark, exactly-once via
     * per-batch dynamic partition overwrite), per-batch KLL sketches
@@ -1646,13 +1542,10 @@ object ExtQueries {
     * Sketch union is associative and every sketch stays in the exact-
     * retention regime (k=8192), so the streamed profile must equal the
     * one-shot full recompute bit-for-bit — any duplicate or dropped
-    * batch breaks n_items and the hash. Ingest runs once per dir per
-    * JVM (TrieMap, q143 discipline); reruns only re-read the state. */
+    * batch breaks n_items and the hash. Ingest runs once per input
+    * ([[Fixtures.once]]); reruns only re-read the state. */
   def q165StreamKllProfile(s: SparkSession, dir: String): DataFrame = {
-    val state = kllStreamDirs.getOrElseUpdate(dir, {
-      indexCleanupHook
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-kll-stream-").toString
+    val state = Fixtures.once("kll-stream", dir) { root =>
       val half = t(s, dir, "documents")
         .filter(col("n_chars").isNotNull)
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -1668,7 +1561,7 @@ object ExtQueries {
       graft.operators.Kll.sketchIngestOnce(s, s"$root/src", schema,
         s"$root/state", s"$root/ckpt", Seq("lang"), "n_chars", k = 8192)
       s"$root/state"
-    })
+    }
     graft.operators.Kll.profile(s, state, Seq("lang"),
         percents = Seq(25, 50, 75, 95, 100))
       .select(col("lang"), col("pct"), col("q_value"), col("n_items"))
@@ -1763,9 +1656,6 @@ object ExtQueries {
       .orderBy(col("type_a"), col("type_b"))
   }
 
-  private val crawlDedupDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Streamed crawl dedup end-to-end: the [[plantedText]] corpus drained
     * in two arrivals (evens, then odds — doc 2k+1 is the twin of doc
     * 2k), each microbatch deduped within itself AND against everything
@@ -1780,10 +1670,7 @@ object ExtQueries {
     * through, a novel doc lost, or a double-landed batch all
     * hash-mismatch. */
   def q171StreamCrawlDedup(s: SparkSession, dir: String): DataFrame = {
-    val root = crawlDedupDirs.getOrElseUpdate(dir, {
-      indexCleanupHook
-      val r = java.nio.file.Files
-        .createTempDirectory("graft-crawl-dedup-").toString
+    val root = Fixtures.once("crawl-dedup", dir) { r =>
       val docs = t(s, dir, "documents")
         .select(col("doc_id"),
           plantedText(col("doc_id") - col("doc_id") % 2).as("text"))
@@ -1796,13 +1683,10 @@ object ExtQueries {
       graft.operators.NearDupIndex.streamIngest(s, s"$r/src", docs.schema,
         s"$r/index", s"$r/ckpt", "doc_id", "text")
       r
-    })
+    }
     graft.operators.NearDupIndex.accepted(s, s"$root/index", "doc_id")
       .orderBy(col("doc_id"))
   }
-
-  private val thetaStreamDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** Stream-maintained audience sketches, SAME oracle as q167: events
     * drained in two batches (even/odd user ids), per-batch theta
@@ -1813,13 +1697,9 @@ object ExtQueries {
     * Theta union is associative and every sketch stays in exact mode
     * (lgK=14 ≫ the user universe), so streamed == one-shot == the
     * DuckDB distinct-join replay bit-for-bit; a duplicated or dropped
-    * drain breaks users_a/users_b and the hash. Ingest runs once per
-    * dir per JVM (TrieMap, q143 discipline). */
+    * drain breaks users_a/users_b and the hash. */
   def q170StreamThetaOverlap(s: SparkSession, dir: String): DataFrame = {
-    val state = thetaStreamDirs.getOrElseUpdate(dir, {
-      indexCleanupHook
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-theta-stream-").toString
+    val state = Fixtures.once("theta-stream", dir) { root =>
       val ev = t(s, dir, "events").select(col("event_type"), col("user_id"))
       ev.filter(col("user_id") % 2 === 0)
         .write.mode("append").parquet(s"$root/src")
@@ -1832,7 +1712,7 @@ object ExtQueries {
         s"$root/state", s"$root/ckpt", Seq("event_type"), "user_id",
         lgK = 14)
       s"$root/state"
-    })
+    }
     val perType = graft.operators.Theta.rollup(
       s.read.parquet(state).drop("batch_id"), Seq("event_type"))
     graft.operators.Theta.pairwiseOverlap(perType, "event_type")
@@ -1840,9 +1720,6 @@ object ExtQueries {
       .withColumnRenamed("seg_b", "type_b")
       .orderBy(col("type_a"), col("type_b"))
   }
-
-  private val hllStreamDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** Stream-maintained distinct-user audience (HLL), completing the
     * sketch-family streaming symmetry (r8 verdict item 3): events
@@ -1856,10 +1733,7 @@ object ExtQueries {
     * (a double-landed drain is invisible to HLL by union idempotence;
     * the count-sensitive streamed detectors are q165/q170/q173). */
   def q172StreamHllUsers(s: SparkSession, dir: String): DataFrame = {
-    val state = hllStreamDirs.getOrElseUpdate(dir, {
-      indexCleanupHook
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-hll-stream-").toString
+    val state = Fixtures.once("hll-stream", dir) { root =>
       val ev = t(s, dir, "events").select(col("event_type"), col("user_id"))
       ev.filter(col("user_id") % 2 === 0)
         .write.mode("append").parquet(s"$root/src")
@@ -1870,7 +1744,7 @@ object ExtQueries {
       graft.operators.Sketches.sketchIngestOnce(s, s"$root/src", ev.schema,
         s"$root/state", s"$root/ckpt", Seq("event_type"), "user_id")
       s"$root/state"
-    })
+    }
     val est = graft.operators.Sketches.profile(s, state, Seq("event_type"))
     val exact = t(s, dir, "events")
       .groupBy(col("event_type"))
@@ -1885,9 +1759,6 @@ object ExtQueries {
       .orderBy(col("event_type"))
   }
 
-  private val cmsStreamDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Stream-maintained term-frequency sketches (CMS), q153's
     * heavy-hitters question answered from streamed state: document
     * tokens drained in two batches (even/odd doc ids), per-batch
@@ -1901,10 +1772,7 @@ object ExtQueries {
     * this vocabulary by construction (q153's argument). */
   def q173StreamCmsHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val state = cmsStreamDirs.getOrElseUpdate(dir, {
-      indexCleanupHook
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-cms-stream-").toString
+    val state = Fixtures.once("cms-stream", dir) { root =>
       val toks = t(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           explode(split(col("text"), "\\s+")).as("term"))
@@ -1920,7 +1788,7 @@ object ExtQueries {
         toks.drop("doc_id").schema, s"$root/state", s"$root/ckpt",
         Seq("source"), "term")
       s"$root/state"
-    })
+    }
     val merged = graft.operators.Cms.serveState(s, state, Nil)
       .collect().head.getAs[Array[Byte]](0)
     val vocab = t(s, dir, "documents")

@@ -26,28 +26,15 @@ object RetrievalQueries {
   def q147Bm25(s: SparkSession, dir: String): DataFrame =
     Bm25.topK(t(s, dir, "documents"), "doc_id", "text", probeTerms, k = 25)
 
-  /** The cached per-corpus BM25 index dirs (term-bucket-partitioned
-    * postings); deleted on JVM exit like the ANN index caches. */
-  private val bm25Indexes = scala.collection.concurrent
-    .TrieMap.empty[String, String]
-  private lazy val cleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      (bm25Indexes.values ++ streamIndexes.values)
-        .foreach(p => graft.util.Fs.deleteRecursively(new java.io.File(p)))
-    }, "graft-bm25-index-cleanup"))
-
   /** q148: q147 against a MATERIALIZED term-bucket-partitioned postings
     * index — the probe reads only the query terms' buckets (partition
     * pruning), so cost tracks posting-list length, not corpus size.
     * Identical output and oracle to q147 by construction. */
   def q148Bm25Indexed(s: SparkSession, dir: String): DataFrame = {
-    val path = bm25Indexes.getOrElseUpdate(dir, {
-      cleanupHook
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-bm25-index-").toString
+    val path = Fixtures.once("bm25-index", dir) { p =>
       Bm25.writeIndex(t(s, dir, "documents"), "doc_id", "text", p)
       p
-    })
+    }
     Bm25.topKIndexed(s, path, "doc_id", probeTerms, k = 25)
   }
 
@@ -57,21 +44,15 @@ object RetrievalQueries {
     * df computed from the same pruned posting scan that scoring reads.
     * Identical output and oracle to q147: the continuous-ingest index
     * must answer exactly like a batch rebuild. */
-  private val streamIndexes = scala.collection.concurrent
-    .TrieMap.empty[String, String]
-
   def q154Bm25Streamed(s: SparkSession, dir: String): DataFrame = {
-    val path = streamIndexes.getOrElseUpdate(dir, {
-      cleanupHook
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-bm25-stream-").toString
+    val path = Fixtures.once("bm25-stream", dir) { root =>
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       docs.write.mode("append").parquet(s"$root/src")
       Bm25.indexIngestOnce(s, s"$root/src", docs.schema, s"$root/idx",
-        s"$root/ckp", "doc_id", "text")
-      root
-    })
-    Bm25.topKStreamed(s, s"$path/idx", "doc_id", probeTerms, k = 25)
+        s"$root/ckpt", "doc_id", "text")
+      s"$root/idx"
+    }
+    Bm25.topKStreamed(s, path, "doc_id", probeTerms, k = 25)
   }
 
   /** The fixed 3-query batch for q149 (one row per distinct query term). */

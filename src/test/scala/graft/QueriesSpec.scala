@@ -40,14 +40,16 @@ class QueriesSpec extends SparkSpec {
     import spark.implicits._
     val d = java.nio.file.Files
       .createTempDirectory("graft-collide-sf-").toString
-    Seq((1L, 200001L), (2L, 3L))
-      .toDF("l_orderkey", "l_suppkey")
-      .write.parquet(s"$d/lineitem.parquet")
-    Seq((1L, 10L)).toDF("o_orderkey", "o_custkey")
-      .write.parquet(s"$d/orders.parquet")
-    val e = intercept[IllegalArgumentException] {
-      SparkEntry.queries("q142_pagerank")(spark, d).count()
-    }
-    assert(e.getMessage.contains("node spaces collide"), e.getMessage)
+    try {
+      Seq((1L, 200001L), (2L, 3L))
+        .toDF("l_orderkey", "l_suppkey")
+        .write.parquet(s"$d/lineitem.parquet")
+      Seq((1L, 10L)).toDF("o_orderkey", "o_custkey")
+        .write.parquet(s"$d/orders.parquet")
+      val e = intercept[IllegalArgumentException] {
+        SparkEntry.queries("q142_pagerank")(spark, d).count()
+      }
+      assert(e.getMessage.contains("node spaces collide"), e.getMessage)
+    } finally graft.util.Fs.deleteRecursively(new java.io.File(d))
   }
 }

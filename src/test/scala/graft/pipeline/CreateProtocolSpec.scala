@@ -386,6 +386,12 @@ class CreateProtocolSpec extends SparkSpec {
     VersionedTable.write(Seq(1, 2).toDF("x"), table)
     VersionedTable.append(Seq(3).toDF("x"), table)
     assert(VersionedTable.read(spark, table).count() == 3)
+    // snapshot compaction commits through the same path: no scheme guard
+    assert(VersionedTable.dataDirs(table).size == 2)
+    val compacted = Maintenance.compactVersioned(spark, table)
+    assert(compacted.ok, compacted.detail)
+    assert(VersionedTable.dataDirs(table).size == 1)
+    assert(VersionedTable.read(spark, table).count() == 3)
     assert(VersionedTable.read(spark, table, Some(1L)).count() == 2)
     VersionedTable.rollback(table, 1L)
     assert(VersionedTable.read(spark, table).count() == 2)
